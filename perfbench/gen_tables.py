@@ -3,11 +3,17 @@
 Writes the ten tables that `graft.SparkEntry.queries` read (a TPC-H-ish star
 schema, an `events` stream, a `documents` corpus and an `embeddings` table),
 one parquet file each, with the column names, types and value domains of the
-project's reference test data. The same (seed, scale) always gives the same
-bytes of table content.
+project's reference test data. The same seed always gives the same bytes of
+table content.
 
-Usage: python3 gen_tables.py <out_dir> <seed> <scale> [<reps>]
-  scale 1.0 = 10,000 events, 60,000 line items, 500 documents.
+The row counts are those of the reference tables at scale factor 0.1, which
+`graft.Bench` reads (measured with DuckDB): 100,000 events from 1,500 users
+over 5 event types, so the events graph has 1,505 vertices and 7,520 edges;
+600,000 line items, 150,000 orders, 15,000 customers, 20,000 parts, 1,000
+suppliers; 5,000 documents of 10-100 words from a 31-word vocabulary, one in
+twenty a near-duplicate; 2,000 64-dimensional embeddings in 10 clusters.
+
+Usage: python3 gen_tables.py <out_dir> <seed> [<reps>]
 The tables are written <reps> times (default 1); the median seconds of one
 writing is printed.
 """
@@ -33,6 +39,10 @@ PART_NOUN = ["widget", "bolt", "anvil", "gear", "spring", "valve", "nut", "pipe"
 PART_TYPES = ["ECONOMY", "PROMO", "STANDARD", "LARGE", "MEDIUM", "SMALL"]
 REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 EMBED_DIM = 64
+# rows of the reference tables at scale factor 0.1
+ROWS = {"customer": 15_000, "supplier": 1_000, "part": 20_000, "orders": 150_000,
+        "lineitem": 600_000, "users": 1_500, "events": 100_000, "documents": 5_000,
+        "embeddings": 2_000}
 EMBED_CLUSTERS = 10
 
 DAY_US = 86_400_000_000
@@ -79,13 +89,13 @@ def embeddings(rng, n):
     }
 
 
-def main(out_dir, seed, scale):
+def main(out_dir, seed):
     rng = np.random.default_rng(seed)
     os.makedirs(out_dir, exist_ok=True)
-    n_cust, n_supp, n_part = int(1500 * scale), max(10, int(100 * scale)), int(2000 * scale)
-    n_ord, n_line = int(15000 * scale), int(60000 * scale)
-    n_users, n_events = max(15, int(150 * scale)), int(10000 * scale)
-    n_docs, n_vecs = max(100, int(500 * scale)), max(100, int(500 * scale))
+    n_cust, n_supp, n_part = ROWS["customer"], ROWS["supplier"], ROWS["part"]
+    n_ord, n_line = ROWS["orders"], ROWS["lineitem"]
+    n_users, n_events = ROWS["users"], ROWS["events"]
+    n_docs, n_vecs = ROWS["documents"], ROWS["embeddings"]
 
     write(out_dir, "region", {
         "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
@@ -138,7 +148,7 @@ def main(out_dir, seed, scale):
         "ts": pa.array(np.datetime64("2024-01-01", "us") + ts.astype("timedelta64[us]")),
         "user_id": pa.array(rng.integers(0, n_users, n_events)),
         "event_type": pa.array(rng.choice(EVENT_TYPES, n_events)),
-        "value": pa.array(np.round(rng.exponential(50.0, n_events), 2) + 0.01),
+        "value": pa.array(np.round(rng.exponential(50.0, n_events), 2)),
         "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)])})
     write(out_dir, "documents", documents(rng, n_docs))
     write(out_dir, "embeddings", embeddings(rng, n_vecs))
@@ -146,8 +156,8 @@ def main(out_dir, seed, scale):
 
 if __name__ == "__main__":
     times = []
-    for _ in range(int(sys.argv[4]) if len(sys.argv) > 4 else 1):
+    for _ in range(int(sys.argv[3]) if len(sys.argv) > 3 else 1):
         t = time.monotonic()
-        main(sys.argv[1], int(sys.argv[2]), float(sys.argv[3]))
+        main(sys.argv[1], int(sys.argv[2]))
         times.append(time.monotonic() - t)
     print(statistics.median(times))

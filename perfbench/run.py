@@ -6,9 +6,16 @@ Usage (from the root of a checkout):
       --seconds S --trace 0|1
 
 The first run in a checkout compiles the engine together with perfbench/src
-through sbt (no build file is changed: the extra source directory is set on
-the sbt command line). Later runs start the JVM directly on the compiled
-classes. Everything a run writes stays under `.bench_build/` in the checkout.
+through sbt. No build file is changed: the sbt command line adds the extra
+source directory and points the project's `target` at
+`.bench_build/perfbench/sbt-target`, so no classes land in the engine's own
+`target/`. The build then packs the classes into a jar and records the classes
+a short converge run loads in a class-data-sharing archive. Later runs start
+the JVM directly on the jar with that archive, so a fresh JVM does not parse
+and verify the Spark classes again. Besides `.bench_build/`, a run writes only
+what every sbt invocation writes: the meta-build's `project/target` and
+`project/project`, and sbt's global logs and streams under `target/`
+(`global-logging`, `streams/_global`, `task-temp-directory`).
 
 The last line of standard output is the result:
   {"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}
@@ -23,14 +30,17 @@ import shutil
 import subprocess
 import sys
 import time
+import zipfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build", "perfbench")
+SBT_TARGET = os.path.join(BUILD, "sbt-target")
 STAMP = os.path.join(BUILD, "build.stamp")
 CLASSPATH = os.path.join(BUILD, "classpath.txt")
+JAR = os.path.join(BUILD, "classes.jar")
+ARCHIVE = os.path.join(BUILD, "classes.jsa")
 WORKLOADS = ("converge", "suite")
-SUITE_SCALE = 1.0  # 10,000 events; see gen_tables.py
 RUN_LIMIT_S = 170.0
 JVM_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke", "java.base/java.lang.reflect",
@@ -68,9 +78,7 @@ def build():
     if os.path.exists(STAMP) and os.path.exists(CLASSPATH):
         with open(STAMP) as f, open(CLASSPATH) as f2:
             stamp, classpath = f.read(), f2.read().strip()
-        # another sbt build in the checkout may have dropped the benchmark's classes
-        bench_class = os.path.join(classpath.split(os.pathsep)[0], "perfbench", "Bench.class")
-        if stamp == digest and os.path.exists(bench_class):
+        if stamp == digest:
             return classpath
     if shutil.which("sbt") is None:
         fail("sbt is not on PATH")
@@ -83,6 +91,7 @@ def build():
     env["SBT_OPTS"] = " ".join(sbt_opts)
     cmd = ["sbt", "--batch", "-Dsbt.log.noformat=true",
            'set Compile / unmanagedSourceDirectories += baseDirectory.value / "perfbench" / "src"',
+           f"set target := file({json.dumps(SBT_TARGET)})",
            "compile", "export Runtime / fullClasspath"]
     log = os.path.join(BUILD, "build.log")
     with open(log, "w") as out:
@@ -95,28 +104,51 @@ def build():
     if r.returncode != 0 or not cps:
         sys.stderr.write("\n".join(lines[-40:]) + "\n")
         fail(f"build failed (exit {r.returncode}); log in {log}")
+    classes, libs = cps[-1].split(os.pathsep, 1)
+    with zipfile.ZipFile(JAR, "w") as z:
+        for d, _, names in os.walk(classes):
+            for n in names:
+                z.write(os.path.join(d, n), os.path.relpath(os.path.join(d, n), classes))
+    classpath = os.pathsep.join([JAR, libs])
+    train_archive(classpath)
     with open(CLASSPATH, "w") as f:
-        f.write(cps[-1])
+        f.write(classpath)
     with open(STAMP, "w") as f:
         f.write(digest)
-    return cps[-1]
+    return classpath
+
+
+def train_archive(classpath):
+    """Writes the class-data-sharing archive from one short converge run."""
+    if os.path.exists(ARCHIVE):
+        os.remove(ARCHIVE)
+    work = os.path.join(BUILD, "train")
+    shutil.rmtree(work, ignore_errors=True)
+    os.makedirs(work)
+    try:
+        run_jvm(classpath, ["--workload", "converge", "--seed", "0", "--seconds", "0", "--trace", "0",
+                            "--conversations", "100", "--work", work,
+                            "--out", os.path.join(work, "result.json")],
+                work, time.monotonic() + RUN_LIMIT_S, [f"-XX:ArchiveClassesAtExit={ARCHIVE}"])
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def generate_tables(dest, seed):
     """Writes the suite tables three times; returns the median seconds."""
-    r = subprocess.run([sys.executable, os.path.join(HERE, "gen_tables.py"), dest, str(seed),
-                        str(SUITE_SCALE), "3"], stdin=subprocess.DEVNULL,
+    r = subprocess.run([sys.executable, os.path.join(HERE, "gen_tables.py"), dest, str(seed), "3"],
+                       stdin=subprocess.DEVNULL,
                        stdout=subprocess.PIPE, text=True)
     if r.returncode != 0:
         fail("table generation failed")
     return float(r.stdout.split()[-1])
 
 
-def run_jvm(classpath, args, work, deadline):
+def run_jvm(classpath, args, work, deadline, flags=()):
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
     cmd = ["java", "-Xmx3g", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
-           "-Dspark.sql.session.timeZone=UTC"]
+           "-Dspark.sql.session.timeZone=UTC", *flags]
     for p in JVM_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
     cmd += ["-cp", classpath, "perfbench.Bench"] + args
@@ -137,7 +169,6 @@ def run_jvm(classpath, args, work, deadline):
 
 
 def main():
-    start = time.monotonic()
     ap = argparse.ArgumentParser()
     ap.add_argument("--workload", required=True, choices=WORKLOADS)
     ap.add_argument("--seed", type=int, required=True)
@@ -150,6 +181,8 @@ def main():
         fail(f"no engine sources under {ROOT}; run from the root of a full checkout")
 
     classpath = build()
+    # the run's time limit starts after the build, which has its own timeout
+    deadline = time.monotonic() + RUN_LIMIT_S
     work = os.path.join(BUILD, f"work-{a.workload}-{a.seed}-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
     os.makedirs(work)
@@ -159,7 +192,8 @@ def main():
         tables = os.path.join(work, "tables")
         if a.workload == "suite":
             args += ["--tables", tables, "--gen-s", repr(generate_tables(tables, a.seed))]
-        run_jvm(classpath, args, work, start + RUN_LIMIT_S)
+        flags = [f"-XX:SharedArchiveFile={ARCHIVE}"] if os.path.exists(ARCHIVE) else []
+        run_jvm(classpath, args, work, deadline, flags)
         with open(os.path.join(work, "result.json")) as f:
             res = json.load(f)
         checks, failed = res["checks"], res["failed"]

@@ -14,13 +14,15 @@ import graft.Caches
   * {{{
   * perfbench.Bench --workload converge|suite --seed N --seconds S
   *   --trace 0|1 --work DIR --out FILE [--tables DIR --gen-s X]
+  *   [--conversations N]
   * }}}
   *
   * Untraced, it runs timed passes until `--seconds` would be exceeded and
   * reports the medians. Traced, it runs one pass under the span ledger,
   * reports its per-layer figures, and then one untraced pass whose outputs
   * the traced ones must equal. Either way the last pass's outputs are
-  * checked once. The result goes to `--out` as JSON.
+  * checked once. The result goes to `--out` as JSON. `--conversations`
+  * overrides the size of the `converge` input.
   */
 object Bench {
 
@@ -55,7 +57,8 @@ object Bench {
 
     val h = new Harness(spark, work, seed)
     val w: Workload = workload match {
-      case "converge" => new Converge(h, ConvergeConversations)
+      case "converge" =>
+        new Converge(h, opts.get("conversations").fold(ConvergeConversations)(_.toLong))
       case "suite"    => new Suite(h, opts("tables"), Layers.Queries.sorted)
       case other      => sys.error(s"unknown workload $other")
     }
@@ -114,7 +117,10 @@ object Bench {
     val e2e = Seq(
       ("setup_s", sessionS + genS, "s"),
       ("run_s", Harness.median(timed.map(_.wallS)), "s"),
-      ("spark_jobs", Harness.median(timed.map(_.jobs.toDouble)), "count"))
+      ("spark_jobs", Harness.median(timed.map(_.jobs.toDouble)), "count"),
+      ("pagerank_s", Harness.median(timed.map(phase(_, "pagerank"))), "s"),
+      ("pagerank_rounds_per_s", Harness.median(timed.map(p =>
+        p.rounds.getOrElse("pagerank", 0) / phase(p, "pagerank"))), "1/s"))
 
     val layers = tracer.toSeq.flatMap { t =>
       val ls = Layers.metrics(h, t, w, passes.head)
@@ -134,12 +140,9 @@ object Bench {
       ("session_s", sessionS, "s"), ("generate_s", genS, "s"),
       ("measured_s", measuredS, "s"), ("passes", passes.size.toDouble, "count"),
       ("steal_jiffies", steal.toDouble, "count"), ("check_s", checkS, "s"),
-      ("graph_s", Harness.median(timed.map(phase(_, "graph"))), "s"),
-      ("pagerank_s", Harness.median(timed.map(phase(_, "pagerank"))), "s"),
-      ("pagerank_rounds_per_s", Harness.median(timed.map(p =>
-        p.rounds.getOrElse("pagerank", 0) / phase(p, "pagerank"))), "1/s")) ++
+      ("graph_s", Harness.median(timed.map(phase(_, "graph"))), "s")) ++
       (if (ok) w.detail(timed) else Nil)
-    val json = Json.obj(
+    val json = Harness.json(Map(
       "workload" -> workload, "seed" -> seed, "cores" -> cores, "traced" -> traced,
       "attempted" -> h.attempted, "failed" -> h.failed, "errors" -> h.errors.toSeq,
       "checks" -> h.checks.toSeq.map { case (n, ok, note) => Map("name" -> n, "ok" -> ok, "note" -> note) },
@@ -147,7 +150,7 @@ object Bench {
       "shape" -> shape.toMap,
       "queries" -> (w match { case s: Suite => s.queries; case _ => Nil }),
       "passes" -> passes.toSeq.map(p => Map("wall_s" -> p.wallS, "phases" -> p.phaseS.toMap,
-        "rounds" -> p.rounds.toMap, "digests" -> p.digests.toMap)))
+        "rounds" -> p.rounds.toMap, "digests" -> p.digests.toMap))))
     Files.write(Paths.get(opts("out")), json.getBytes("UTF-8"))
     spark.stop()
   }

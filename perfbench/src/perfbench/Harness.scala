@@ -5,6 +5,8 @@ import java.nio.file.{Files, Path}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
 import graft.algo.Materializer
@@ -72,6 +74,11 @@ final class Harness(val spark: SparkSession, val work: Path, val seed: Long) {
 }
 
 object Harness {
+  private val mapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  /** Scala maps, sequences and scalars as one line of JSON. */
+  def json(value: Any): String = mapper.writeValueAsString(value)
+
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.isEmpty) 0.0

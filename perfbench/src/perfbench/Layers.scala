@@ -8,7 +8,7 @@ object Layers {
   /** The queries the `suite` workload runs, each with its own figures. */
   val Queries = Seq(
     "d_dedup_clusters", "d_ngram_jaccard", "d_tfidf", "e_ann_lsh", "g_adamic_adar",
-    "g_effdiam", "g_ktruss", "g_pagerank", "g_ppr", "g_scc")
+    "g_effdiam", "g_pagerank", "g_ppr", "g_scc")
 
   private val GraphSpans = Seq("graph.build", "graph.edges", "graph.symmetrized")
 

@@ -19,7 +19,7 @@ final class Counters {
     cpuNs += o.cpuNs; gcMs += o.gcMs; outBytes += o.outBytes
   }
 
-  def json: String = Json.obj(
+  def fields: Map[String, Any] = Map(
     "jobs" -> jobs, "tasks" -> tasks, "shuffle_read_bytes" -> shuffleRead,
     "shuffle_write_bytes" -> shuffleWrite, "spill_bytes" -> spill,
     "executor_run_s" -> runMs / 1e3, "executor_cpu_s" -> cpuNs / 1e9,
@@ -112,9 +112,9 @@ final class Tracer(sc: SparkContext) {
 
   def jsonLines: Seq[String] = {
     ListenerDrain(sc)
-    recs.toSeq.map(r => Json.obj("id" -> r.id, "parent" -> r.parent, "span" -> r.name,
+    recs.toSeq.map(r => Harness.json(Map("id" -> r.id, "parent" -> r.parent, "span" -> r.name,
       "layer" -> Tracer.layer(r.name), "start_s" -> r.startS, "wall_s" -> r.wallS,
-      "spark" -> Json.Raw(ledger.of(r.id).json)))
+      "spark" -> ledger.of(r.id).fields)))
   }
 }
 

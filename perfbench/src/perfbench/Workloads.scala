@@ -263,7 +263,7 @@ final class Suite(h: Harness, tables: String, val queries: Seq[String]) extends 
     }
     val sql = SparkEntry.oracleSql
     Files.writeString(Paths.get(out, "oracle_sql.json"),
-      Json.obj(queries.filter(sql.contains).map(q => q -> sql(q)): _*))
+      Harness.json(queries.filter(sql.contains).map(q => q -> sql(q)).toMap))
   }
 
   def shape(p: Pass): Seq[(String, Any)] =
