@@ -1,6 +1,7 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.FlatCheckpoint
 
 import graft.io.TableIO
 
@@ -35,7 +36,7 @@ trait Materializer {
     *
     * `fingerprint` (round-3 ADVICE): an identity string for the
     * PARAMETERS this invariant was derived with (layout knobs like
-    * packedSegment/salts; the run-level input token comes from the
+    * packedSegment; the run-level input token comes from the
     * materializer's constructor). A durable backend records it in the
     * commit manifest and RECOMPUTES instead of reading back when the
     * committed value differs — without it, a resumed run whose layout
@@ -62,30 +63,21 @@ trait Materializer {
 
 /** Ephemeral: eager flat localCheckpoint (partitioning-preserving, no
   * origin-stats chaining — see FlatCheckpoint), previous iteration's RDD
-  * blocks unpersisted as the loop advances. Not resumable. */
+  * blocks unpersisted as the loop advances (a one-slot [[FlatLoop]]). Not
+  * resumable. */
 final class LocalMaterializer extends Materializer {
   private val buf = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
-  private var prevIterRddIds: Set[Int] = Set.empty
-
-  // Tracks exactly the checkpoint shim's RDD id — never a persistent-RDD
-  // diff, which would claim unrelated caches persisted during the frame's
-  // computation and unpersist them a round later (round-4 ADVICE).
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val (out, rddId) = org.apache.spark.sql.graft.FlatCheckpoint.localCheckpointTracked(df)
-    (out, Set(rddId))
-  }
+  private lazy val loop = new FlatLoop(SparkSession.active)
 
   override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
     buf += (meta + ("iter" -> iter))
-    val sc = df.sparkSession.sparkContext
-    val (out, created) = checkpointTracked(df)
-    prevIterRddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    prevIterRddIds = created
+    val out = loop.ckpt("state", df)
+    loop.sweep("state")
     out
   }
   override def shared(name: String, df: DataFrame, repartitionKeys: Seq[String],
                       fingerprint: Option[String]): DataFrame =
-    checkpointTracked(df)._1 // nothing durable to read back; keys/fp moot
+    FlatCheckpoint.localCheckpoint(df) // nothing durable to read back; keys/fp moot
   override def resume(): Option[(Int, DataFrame)] = None
   override def note(iter: Int, meta: Map[String, Any]): Unit =
     buf += (meta + ("iter" -> iter))
@@ -109,27 +101,20 @@ final class LocalMaterializer extends Materializer {
 final class CheckpointMaterializer(io: TableIO, val stateTable: String,
                                    bucket: Option[(String, Int)] = None,
                                    runFingerprint: Option[String] = None) extends Materializer {
-  private var prevIterRddIds: Set[Int] = Set.empty
-
-  // Exact-id tracking, same rationale as LocalMaterializer (round-4 ADVICE).
-  private def checkpointTracked(df: DataFrame): (DataFrame, Set[Int]) = {
-    val (out, rddId) = org.apache.spark.sql.graft.FlatCheckpoint.localCheckpointTracked(df)
-    (out, Set(rddId))
-  }
+  private lazy val loop = new FlatLoop(SparkSession.active)
 
   override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
-    val sc = df.sparkSession.sparkContext
     // One compute: flat checkpoint; the durable parquet write + manifest
     // then stream from the checkpointed blocks, not a recompute.
-    val (flat, created) = checkpointTracked(df)
+    val flat = loop.ckpt("state", df)
     // Stamp the run identity on every state commit: resume() verifies it,
     // so mid-run state is as staleness-guarded as the shared invariants
     // (round-4 ADVICE: a ppr --resume with a changed seed spec must not
     // silently continue from the old seed set's iteration state).
     val stamped = runFingerprint.map(f => meta + ("run_fingerprint" -> (f: Any))).getOrElse(meta)
     io.commit(stateTable, iter, flat, stamped, bucket)
-    prevIterRddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
-    prevIterRddIds = created
+    // the previous round's blocks go only after the new commit
+    loop.sweep("state")
     flat
   }
   /** A committed copy is READ BACK instead of recomputed — a restarted
@@ -153,7 +138,7 @@ final class CheckpointMaterializer(io: TableIO, val stateTable: String,
       case s  => Some(s)
     }
     def commitFresh(iter: Int): DataFrame = {
-      val flat = checkpointTracked(df)._1
+      val flat = FlatCheckpoint.localCheckpoint(df)
       io.commit(table, iter, flat, fp.map(f => "fingerprint" -> (f: Any)).toMap)
       flat
     }
@@ -176,7 +161,7 @@ final class CheckpointMaterializer(io: TableIO, val stateTable: String,
           val placed =
             if (repartitionKeys.isEmpty) back
             else back.repartition(repartitionKeys.map(org.apache.spark.sql.functions.col): _*)
-          checkpointTracked(placed)._1
+          FlatCheckpoint.localCheckpoint(placed)
         }
       case None => commitFresh(0)
     }

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
-import graft.scale.{Csr, Salting}
+import graft.scale.Csr
 
 /** PageRank — SURVEY.md §2.10. Classic normalized power iteration:
   *
@@ -19,15 +19,14 @@ import graft.scale.{Csr, Salting}
   * hash-partitioned by `vid` across iterations (the materializer preserves
   * physical partitioning), so the state⋈edges join and both vertex-side
   * joins need NO exchange — the only shuffle per round is the sum-by-dst
-  * message aggregation (A1). Three edge layouts, identical results:
+  * message aggregation (A1). Two edge layouts, identical results:
   *
   *  - plain rows (default): edge-level shuffled-hash join
   *  - `packedAdjacency`: vertex-major CSR arrays (Csr.packAdjacency) — the
   *    join touches one row per vertex SEGMENT (hubs split at packedSegment
   *    neighbors/row, so no task owns a whole mega-hub); expansion is the
-  *    CsrExpand custom operator
-  *  - `salts > 1`: explicit hot-key salting (Salting) — hub srcs' edges
-  *    spread over S buckets, only hot state rows replicated
+  *    CsrExpand custom operator. Hub splitting is the engine's one skew
+  *    mechanism.
   */
 final case class PageRankConfig(
     damping: Double = 0.85,
@@ -36,18 +35,7 @@ final case class PageRankConfig(
     fixedIters: Option[Int] = None,
     weighted: Boolean = true,
     packedAdjacency: Boolean = false,
-    packedSegment: Int = graft.scale.Csr.DefaultSegment,
-    salts: Int = 1,
-    hotQuantile: Double = 0.999,
-    hotMinDegree: Double = 64.0) {
-  // One skew mechanism per layout: the packed path bounds per-row (and
-  // per-task) work by HUB-SPLITTING — a degree-d vertex packs into
-  // ⌈d/packedSegment⌉ bounded segment rows (Csr.packAdjacency) — so salting,
-  // which replicates state rows to spread a hot key's EDGE ROWS, has nothing
-  // left to fix there and would only double-replicate.
-  require(salts == 1 || !packedAdjacency,
-    "salting applies to the row-level edge layout; the packed layout tames hubs via packedSegment splitting")
-}
+    packedSegment: Int = graft.scale.Csr.DefaultSegment)
 
 final case class PageRankResult(
     ranks: DataFrame, // (vid: long, rank: double)
@@ -72,8 +60,8 @@ object PageRank {
     *
     * with tele(v) = 1/|S| for seeds, 0 otherwise — dangling mass D_t flows
     * back to the seeds, which is what keeps Σp = 1 under personalization.
-    * The message kernel (and hence all three edge layouts — plain rows,
-    * salted, packed CSR + CsrExpand) is untouched: personalization only
+    * The message kernel (and hence both edge layouts — plain rows and
+    * packed CSR + CsrExpand) is untouched: personalization only
     * changes the per-vertex base term. `teleport = None` keeps the global
     * formula on its original expression tree, so uniform-PageRank results
     * stay bit-identical to prior rounds. */
@@ -137,19 +125,10 @@ object PageRank {
             repartitionKeys = Seq("vid"))
       }
 
-      // Parameter fingerprint for the durable invariants (round-3 ADVICE):
-      // a resumed run whose layout knobs changed under the same ckpt dir
-      // must recompute, not silently read the stale snapshot.
-      val layoutFp = Some(s"weighted=${cfg.weighted};segment=${cfg.packedSegment};" +
-        s"salts=${cfg.salts};hotQ=${cfg.hotQuantile};hotMin=${cfg.hotMinDegree}")
-
-      // Hot-key set for salting (tiny by construction; broadcast).
-      val hot =
-        if (cfg.salts > 1)
-          mat.shared("hot", Salting.hotKeys(
-            wdeg.select(F.col("src").as("vid"), F.col("wdeg")),
-            cfg.hotQuantile, cfg.hotMinDegree), fingerprint = layoutFp)
-        else null
+      // Parameter fingerprint for the durable invariants: a resumed run
+      // whose layout knobs changed under the same ckpt dir must recompute,
+      // not silently read the stale snapshot.
+      val layoutFp = Some(s"weighted=${cfg.weighted};segment=${cfg.packedSegment}")
 
       // Edge layout materialization, partitioned on the join key.
       val em =
@@ -157,11 +136,6 @@ object PageRank {
           mat.shared("em_packed",
             Csr.packAdjacency(emRows, cfg.packedSegment).repartition(F.col("src")),
             repartitionKeys = Seq("src"), fingerprint = layoutFp)
-        else if (cfg.salts > 1)
-          mat.shared("em_salted",
-            Salting.saltEdges(emRows, hot, cfg.salts)
-              .repartition(F.col("src"), F.col("salt")),
-            repartitionKeys = Seq("src", "salt"), fingerprint = layoutFp)
         else
           mat.shared("em", emRows.repartition(F.col("src")),
             repartitionKeys = Seq("src"), fingerprint = layoutFp)
@@ -223,10 +197,6 @@ object PageRank {
             // over the packed arrays, no CodegenFallback zip_with, no
             // intermediate struct array; still narrow — no exchange
             graft.plans.GraftPlans.expandMessages(em.join(st, "src"))
-          else if (cfg.salts > 1)
-            em.join(Salting.saltState(st, hot, cfg.salts, "src"),
-                Seq("src", "salt"))                           // state exchange only
-              .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))
           else
             em.join(st, "src")                                // no exchange
               .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))

@@ -37,15 +37,3 @@ final case class IterMetrics(
     partLineage: Seq[String],
     ts: Timestamp
 )
-
-/** Per-partition CSR block (SURVEY.md §2.3 E8): vertices of one range
-  * partition with their packed out-neighbor lists.
-  * nbrs[offsets(i) until offsets(i+1)] are the successors of vids(i).
-  */
-final case class CsrBlock(
-    partId: Int,
-    vids: Array[Long],
-    offsets: Array[Int],
-    nbrs: Array[Long],
-    weights: Array[Double]
-)

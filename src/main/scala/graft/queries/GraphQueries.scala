@@ -2,6 +2,9 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
 
+import org.apache.spark.sql.graft.FlatCheckpoint
+
+import graft.Caches
 import graft.algo._
 import graft.graph.{GraphBuilder, LinkGraph}
 
@@ -38,168 +41,99 @@ object GraphQueries {
   val KTrussK = 4
   val KTrussRounds = 6
 
-  /** Packed hub-split CSR + CsrExpand codegen is the DEFAULT layout for the
-    * driver's iterative graph queries (round-3 verdict "Next round #5" —
-    * the 3.2×-at-60M-edges layout was bench-only; results are parity-pinned
-    * in CsrExpandSpec and the oracle gate runs against it). Opt out with
-    * `spark.graft.graph.packed=false` to A/B the row layout. */
-  private def packed(s: SparkSession): Boolean =
-    s.conf.getOption("spark.graft.graph.packed").forall(_.toBoolean)
-
   private def events(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/events.parquet")
 
-  // One graph build per (session, dir): all g_* queries in a Verify/Bench
-  // pass share the derived edge set (materialized, flat-leaf).
-  private val cache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), LinkGraph]
+  // Every memo below lives in graft.Caches, one entry per (session, dir,
+  // name). Result frames are checkpoint-backed flat leaves, so holding
+  // them for the session is safe.
 
+  // One graph build: all g_* queries in a Verify/Bench pass share the
+  // derived edge set.
   def graph(spark: SparkSession, dir: String): LinkGraph =
-    cache.getOrElseUpdate((spark, dir), {
+    Caches.memo(spark, dir, "graph") {
       val g = GraphBuilder.fromEvents(events(spark, dir))
-      LinkGraph(
-        org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(g.edges),
-        g.dict)
-    })
+      LinkGraph(FlatCheckpoint.localCheckpoint(g.edges), g.dict)
+    }
 
-  // One PageRank run per (session, dir): g_pagerank and g_top_pagerank share
-  // it (round 1 re-ran all 10 iterations for the top-k view — pure waste).
-  // The result frame is checkpoint-backed, so caching it is safe.
-  private val rankCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  // One triangle computation per (session, dir): g_triangles and
-  // g_tri_pervertex share it — round-3 verdict "What's wrong #1": without
-  // this, each query ran the full wedge join again. The result's frames are
-  // checkpoint-backed (Triangles stages go through the materializer), so
-  // caching the result object is safe, mirroring rankCache.
-  private val triangleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), TriangleResult]
-
-  graft.Caches.register(() => cache.clear())
-  graft.Caches.register(() => rankCache.clear())
-  graft.Caches.register(() => triangleCache.clear())
-
+  // g_pagerank and g_top_pagerank share one run. The iterative graph
+  // queries (PageRank, PPR, CC, LPA) use the packed hub-split CSR layout
+  // with the CsrExpand operator; CsrExpandSpec pins its parity with the
+  // row layout.
   def pageRanks(spark: SparkSession, dir: String): DataFrame =
-    rankCache.getOrElseUpdate((spark, dir),
+    Caches.memo(spark, dir, "pagerank") {
       PageRank.run(graph(spark, dir),
         PageRankConfig(damping = PrDamping, fixedIters = Some(PrIters),
-          packedAdjacency = packed(spark))).ranks)
+          packedAdjacency = true)).ranks
+    }
 
   // Personalized PageRank, seeded on the user entities: the "which event
-  // types matter to users" view of the link graph. Same engine, same
-  // packed-CSR default layout — only the teleport vector differs.
-  private val pprCache = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  graft.Caches.register(() => pprCache.clear())
-
+  // types matter to users" view of the link graph. Same engine and layout;
+  // only the teleport vector differs.
   def pprRanks(spark: SparkSession, dir: String): DataFrame =
-    pprCache.getOrElseUpdate((spark, dir), {
+    Caches.memo(spark, dir, "ppr") {
       val g = graph(spark, dir)
       val seeds = g.dict.where(F.col("key").startsWith("user:")).select("vid")
       PageRank.run(g,
         PageRankConfig(damping = PrDamping, fixedIters = Some(PrIters),
-          packedAdjacency = packed(spark)),
+          packedAdjacency = true),
         teleport = Some(seeds)).ranks
-    })
+    }
 
+  // g_triangles and g_tri_pervertex share one wedge join.
   def triangles(spark: SparkSession, dir: String): TriangleResult =
-    triangleCache.getOrElseUpdate((spark, dir),
+    Caches.memo(spark, dir, "triangles") {
       // the shared symmetric frame + degree memo feed the canonical edge
       // set and the orientation degrees — no second distinct/degree pass
-      Triangles.run(graph(spark, dir), shared = Some(undirected(spark, dir))))
+      Triangles.run(graph(spark, dir), shared = Some(undirected(spark, dir)))
+    }
 
-  // One undirected-simple edge set + degree frame per (session, dir):
-  // g_clustering, g_degdist, g_assortativity and g_adamic_adar all start
-  // from the same distinct symmetric closure — without this memo each
-  // REFERENCE recomputes the union+distinct shuffle (g_adamic_adar alone
-  // names `und` four times in its plan). Checkpoint-backed flat leaves,
-  // same discipline as the graph/rank/triangle caches above.
-  private val undCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
-  graft.Caches.register(() => undCache.clear())
-
-  /** (undirected simple edges, per-vertex degrees), shared + materialized. */
+  /** (undirected simple edges, per-vertex degrees), shared + materialized:
+    * g_clustering, g_degdist, g_assortativity, g_adamic_adar and the
+    * k-core/k-truss/MIS queries all start from the same distinct symmetric
+    * closure instead of each re-running the union+distinct shuffle. */
   def undirected(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    undCache.getOrElseUpdate((spark, dir), {
+    Caches.memo(spark, dir, "undirected") {
       val g = graph(spark, dir)
-      val und = org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
+      val und = FlatCheckpoint.localCheckpoint(
         g.symmetrized.where(F.col("src") =!= F.col("dst")))
-      val deg = org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
+      val deg = FlatCheckpoint.localCheckpoint(
         und.groupBy(F.col("src").as("vid")).agg(F.count(F.lit(1)).as("deg")))
       (und, deg)
-    })
+    }
 
-  // One exact-BFS run per (session, dir): g_nhood and g_harmonic share the
-  // reach frame (checkpoint-backed final generation — FlatLoop keeps the
-  // latest slot generation alive, same safety argument as rankCache).
-  private val nhoodCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Neighborhood.NhoodResult]
-  graft.Caches.register(() => nhoodCache.clear())
-
+  // One exact-BFS run: g_nhood, g_harmonic, g_ecc, g_closeness and
+  // g_effdiam share the reach frame (FlatLoop keeps the latest slot
+  // generation alive).
   def nhood(spark: SparkSession, dir: String): Neighborhood.NhoodResult =
-    nhoodCache.getOrElseUpdate((spark, dir), {
+    Caches.memo(spark, dir, "nhood") {
       val r = Neighborhood.exact(graph(spark, dir), NhoodT)
       // one origin-clustered materialization of the level-slice union at
       // memo-build time: g_ecc/g_closeness group by o and would otherwise
-      // each re-shuffle the union (the per-ROUND o-repartitions this frame
-      // used to pay are gone since round 7; this single one is amortized
-      // over the five reach consumers)
+      // each re-shuffle the union; this single one is amortized over the
+      // five reach consumers
       r.copy(reach = r.reach.map(df =>
-        org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
-          df.repartition(F.col("o")))))
-    })
+        FlatCheckpoint.localCheckpoint(df.repartition(F.col("o")))))
+    }
 
-  // One label build per (session, dir): g_hub_labels and g_hub_distq share
-  // the two BFS runs (checkpoint-backed reach frames, same safety argument).
-  private val hubCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), HubLabels.HubResult]
-  graft.Caches.register(() => hubCache.clear())
-
+  // g_hub_labels and g_hub_distq share the two BFS runs.
   def hubLabels(spark: SparkSession, dir: String): HubLabels.HubResult =
-    hubCache.getOrElseUpdate((spark, dir),
-      HubLabels.build(graph(spark, dir), HubL, HubT))
+    Caches.memo(spark, dir, "hublabels")(HubLabels.build(graph(spark, dir), HubL, HubT))
 
-  // One run per (session, dir) for the three heavy iterative queries that
-  // had no memo (round-5 ADVICE: each Bench pass re-ran them AND left
-  // their loop checkpoints persisted — the loops now release non-final
-  // slots, and the memo makes pass 2 pay lookup cost like every other
-  // g_* query). Result frames are checkpoint-backed flat leaves.
-  private val bcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val katzCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val ssspCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  graft.Caches.register(() => bcCache.clear())
-  graft.Caches.register(() => katzCache.clear())
-  graft.Caches.register(() => ssspCache.clear())
-
-  // One CC run per (session, dir): g_cc and g_compsizes share the label
-  // frame (round 6 — the size histogram is a two-agg derivation, not a
-  // second HashMin fixpoint).
-  private val ccCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val hitsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val misCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val trussCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  graft.Caches.register(() => ccCache.clear())
-  graft.Caches.register(() => hitsCache.clear())
-  graft.Caches.register(() => misCache.clear())
-  graft.Caches.register(() => trussCache.clear())
-
+  // g_cc and g_compsizes share the label frame: the size histogram is a
+  // two-agg derivation, not a second HashMin fixpoint.
   def ccLabels(s: SparkSession, d: String): DataFrame =
-    ccCache.getOrElseUpdate((s, d),
-      org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
-        ConnectedComponents.run(graph(s, d), packedAdjacency = packed(s))
-          .labels.orderBy("vid")))
+    Caches.memo(s, d, "cc") {
+      FlatCheckpoint.localCheckpoint(
+        ConnectedComponents.run(graph(s, d), packedAdjacency = true)
+          .labels.orderBy("vid"))
+    }
 
   /** Fixed-COUNT deterministic anchor set for the link-prediction queries:
     * the first AaCount vids among the stride multiples. Bounded at any
-    * graph size (round-5 verdict "What's wrong #3": stride-only anchors
-    * scale ∝ n, making g_adamic_adar/g_jaccard the exact all-sources cost
-    * at 100×); ≤ AaCount rows, so the anchor side of the 2-hop expansion
-    * broadcasts. */
+    * graph size (stride-only anchors scale ∝ n, making
+    * g_adamic_adar/g_jaccard the exact all-sources cost at 100×); ≤ AaCount
+    * rows, so the anchor side of the 2-hop expansion broadcasts. */
   private def aaAnchors(g: LinkGraph): DataFrame =
     g.vertices.where(F.col("vid") % AaStride === 0)
       .orderBy("vid").limit(AaCount).select(F.col("vid").as("u"))
@@ -212,9 +146,9 @@ object GraphQueries {
     * cap² instead of the heaviest hub's degree. */
   private def hubDegCap(s: SparkSession): Int = {
     val cap = s.conf.getOption("spark.graft.aa.hubDegCap").map(_.toInt).getOrElse(0)
-    // Round-6 ADVICE: the cap reshapes g_adamic_adar/g_jaccard results but
-    // the DuckDB oracle SQL is uncapped — warn loudly so a capped session
-    // failing the hash gate is traceable to this knob, not to logic.
+    // The cap reshapes g_adamic_adar/g_jaccard results but the DuckDB
+    // oracle SQL is uncapped — warn loudly so a capped session failing the
+    // hash gate is traceable to this knob, not to logic.
     if (cap > 0) Console.err.println(
       s"[graft] spark.graft.aa.hubDegCap=$cap is set: g_adamic_adar/g_jaccard " +
         "results are the documented capped approximation and will NOT match " +
@@ -222,23 +156,20 @@ object GraphQueries {
     cap
   }
 
-  // ONE anchor 2-hop candidate expansion per (session, dir, cap), shared by
-  // g_adamic_adar and g_jaccard: both ran the IDENTICAL anchors ⋈ und ⋈ deg
-  // ⋈ und ⟕anti und join chain and differed only in the final aggregation
-  // (guide §1.2 — don't run the expensive expansion twice). The `dw > 1`
-  // prune is semantics-free for Jaccard too: a w with deg 1 has u as its
-  // only neighbor, so its second hop can only produce v = u, which the
-  // v ≠ u filter drops. Keyed by the hub-degree cap because the cap
-  // reshapes the expansion (RoundSixOpsSpec varies it within one session).
-  private val aaCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
-  graft.Caches.register(() => aaCandCache.clear())
-
   /** (u, v, dw): one row per (anchor u, candidate v, common neighbor w)
-    * wedge surviving the existing-edge anti-join; dw = deg(w). */
-  private def aaCandidates(s: SparkSession, d: String): DataFrame = {
+    * wedge surviving the existing-edge anti-join; dw = deg(w).
+    *
+    * ONE anchor 2-hop candidate expansion per cap, shared by g_adamic_adar
+    * and g_jaccard: both run the identical anchors ⋈ und ⋈ deg ⋈ und ⟕anti
+    * und join chain and differ only in the final aggregation. The `dw > 1`
+    * prune is semantics-free for Jaccard too: a w with deg 1 has u as its
+    * only neighbor, so its second hop can only produce v = u, which the
+    * v ≠ u filter drops. The memo name carries the hub-degree cap because
+    * the cap reshapes the expansion (RoundSixOpsSpec varies it within one
+    * session). */
+  private[graft] def aaCandidates(s: SparkSession, d: String): DataFrame = {
     val cap = hubDegCap(s)
-    aaCandCache.getOrElseUpdate((s, d, cap), {
+    Caches.memo(s, d, s"aacand:cap=$cap") {
       val g = graph(s, d)
       val (und, deg) = undirected(s, d)
       val anchors = aaAnchors(g)
@@ -253,8 +184,8 @@ object GraphQueries {
         .join(und.select(F.col("src").as("u"), F.col("dst").as("v")),
           Seq("u", "v"), "left_anti")
         .select("u", "v", "dw")
-      org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(cand)
-    })
+      FlatCheckpoint.localCheckpoint(cand)
+    }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -318,34 +249,33 @@ object GraphQueries {
 
     // Truncated HITS: integer alternating-walk counts (exact under any
     // summation order) normalized ONCE at the end — Hits scaladoc.
-    "g_hits" -> ((s, d) => hitsCache.getOrElseUpdate((s, d),
-      org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
-        Hits.run(graph(s, d), HitsRounds)))),
+    "g_hits" -> ((s, d) => Caches.memo(s, d, "hits")(
+      FlatCheckpoint.localCheckpoint(Hits.run(graph(s, d), HitsRounds)))),
 
     // k-truss decomposition over the shared undirected frame: surviving
     // canonical edges with fixpoint support (Truss scaladoc — monotone
     // edge peel, the cohesive-community analogue of k-core).
-    "g_ktruss" -> ((s, d) => trussCache.getOrElseUpdate((s, d), {
+    "g_ktruss" -> ((s, d) => Caches.memo(s, d, "ktruss") {
       val g = graph(s, d)
       val (und, _) = undirected(s, d)
-      org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
+      FlatCheckpoint.localCheckpoint(
         Truss.run(und, KTrussK, KTrussRounds,
           sizeHint = math.max(g.numVertices, g.numEdges)))
-    })),
+    }),
 
     // Deterministic local-min MIS over the shared undirected frame,
     // round-capped (Mis scaladoc — vid-priority Luby skeleton).
-    "g_mis" -> ((s, d) => misCache.getOrElseUpdate((s, d), {
+    "g_mis" -> ((s, d) => Caches.memo(s, d, "mis") {
       val g = graph(s, d)
       val (und, _) = undirected(s, d)
-      org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
+      FlatCheckpoint.localCheckpoint(
         Mis.run(g.vertices, und, MisRounds,
           sizeHint = math.max(g.numVertices, g.numEdges)))
-    })),
+    }),
 
     "g_lpa" -> ((s, d) =>
       LabelPropagation.run(graph(s, d), maxRounds = LpaRounds,
-        packedAdjacency = packed(s)).labels.orderBy("vid")),
+        packedAdjacency = true).labels.orderBy("vid")),
 
     "g_triangles" -> ((s, d) => {
       import s.implicits._
@@ -389,12 +319,12 @@ object GraphQueries {
     // Weighted SSSP (Bellman-Ford relaxation, per-kind integer costs) from
     // a deterministic vid-stride origin set — the weighted counterpart of
     // the BFS-backed queries above.
-    "g_sssp" -> ((s, d) => ssspCache.getOrElseUpdate((s, d), {
+    "g_sssp" -> ((s, d) => Caches.memo(s, d, "sssp") {
       val g = graph(s, d)
       val origins = g.vertices.where(F.col("vid") % SsspStride === 0)
-      org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(
+      FlatCheckpoint.localCheckpoint(
         ShortestPaths.run(g, origins, SsspRounds).dists.orderBy("o", "v"))
-    })),
+    }),
 
     // Truncated out-eccentricity + reachable-ball size per vertex, derived
     // from the SHARED exact-BFS reach frame (no extra BFS run).
@@ -467,15 +397,15 @@ object GraphQueries {
     // vid-stride source set, horizon BcT — both standard web-scale
     // approximations, both deterministic, so the unrolled DuckDB oracle
     // reproduces the estimator exactly.
-    "g_betweenness" -> ((s, d) => bcCache.getOrElseUpdate((s, d), {
+    "g_betweenness" -> ((s, d) => Caches.memo(s, d, "betweenness") {
       val g = graph(s, d)
       val sources = g.vertices.where(F.col("vid") % BcStride === 0)
       Betweenness.run(g, sources, BcT)
-    })),
+    }),
 
     // Truncated Katz centrality: Σ_{k≤R} α^k · (paths of length k into
     // v) — R-round recurrence c = α·Aᵀ(1+c), one shuffle per round.
-    "g_katz" -> ((s, d) => katzCache.getOrElseUpdate((s, d),
+    "g_katz" -> ((s, d) => Caches.memo(s, d, "katz")(
       Katz.run(graph(s, d), KatzAlpha, KatzRounds))),
 
     // Truncated out-closeness: C(o) = (reached−1)/Σ dist within the BFS

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.expressions.Window
 
+import graft.Caches
+
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * dedup (exact, n-gram Jaccard, MinHash+LSH, SimHash), text analysis
   * (lang-id, quality, tokens, fingerprints), similarity search (brute-force
@@ -46,14 +48,13 @@ object PipelineQueries {
   // ------------------------------------------------- shared materializations
   //
   // Cross-query intermediates (shingles, simhash frames, LSH index, norms)
-  // are computed once per (session, dir) — memoized in TrieMaps, registered
-  // with graft.Caches for explicit reset (round-2 ADVICE: no eviction
-  // otherwise; single-run contract documented there).
+  // are computed once per (session, dir) — memos in graft.Caches (no
+  // eviction; single-run contract documented there).
   //
-  // HOW they materialize is the round-2 verdict "What's missing #1": the
-  // default is an eager localCheckpoint — executor-memory-resident, lineage
-  // truncated, fast, but NOT fault-tolerant: on a real cluster one lost
-  // executor kills a 100-TB pipeline mid-run. With
+  // HOW they materialize: the default is an eager localCheckpoint —
+  // executor-memory-resident, lineage truncated, fast, but NOT
+  // fault-tolerant: on a real cluster one lost executor kills a 100-TB
+  // pipeline mid-run. With
   // `spark.graft.pipeline.ckpt=<dir>` (or env GRAFT_PIPELINE_CKPT) the same
   // intermediates become atomic TableIO commits: manifested parquet
   // snapshots that survive executor loss, are reusable across sessions
@@ -90,25 +91,25 @@ object PipelineQueries {
       case None => df.localCheckpoint(true)
     }
 
+  /** The memo `name` for (s, d), materialized as above under the same name. */
+  private def memoized(s: SparkSession, d: String, name: String)(df: => DataFrame): DataFrame =
+    Caches.memo(s, d, name)(materialize(s, d, name)(df))
+
   // Four dedup/fingerprint queries consume the same shingle set.
-  private val shingleCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def shinglesOf(s: SparkSession, d: String): DataFrame =
-    shingleCache.getOrElseUpdate((s, d), materialize(s, d, "shingles")(shingles(docs(s, d))))
+    memoized(s, d, "shingles")(shingles(docs(s, d)))
 
   // Rep-filtered shingles (one representative per distinct text): consumed
   // by the LSH candidate build, d_minhash_lsh and d_dedup_clusters — each
   // re-ran the semi-join (and d_dedup_clusters read it four times inside
   // one query: sizes, both sides of the verify join, shingledReps) before
   // round 7. One materialization, many block reads (guide §1.2/§5).
-  private val shingleRepsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def shinglesRepsOf(s: SparkSession, d: String): DataFrame =
-    shingleRepsCache.getOrElseUpdate((s, d), materialize(s, d, "shreps") {
+    memoized(s, d, "shreps") {
       val repsOnly = textGroupsOf(s, d)
         .where(F.col("doc_id") === F.col("rep")).select("doc_id")
       shinglesOf(s, d).join(repsOnly, Seq("doc_id"), "left_semi")
-    })
+    }
 
   // (doc_id, rep): EXACT-DUP GROUPS by text content — the round-4 bucket-
   // occupancy guard (round-3 verdict "What's missing #1"). Every near-dup
@@ -122,17 +123,15 @@ object PipelineQueries {
   // size is the OUTPUT contract, never an intermediate blow-up. Semantics
   // are identical because identical text ⇒ identical shingles/signatures
   // (DedupGuardSpec pins both the equivalence and the bound).
-  private val textGroupCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private[graft] def textGroupsOf(s: SparkSession, d: String): DataFrame =
-    textGroupCache.getOrElseUpdate((s, d), materialize(s, d, "textgroups") {
+    memoized(s, d, "textgroups") {
       // NULL-safe group key: md5(NULL) is NULL, and an equi-join on a NULL
       // key would silently drop null-text docs from their group.
       val k = docs(s, d).select(F.col("doc_id"),
         F.coalesce(F.md5(F.col("text")), F.lit("<null-text>")).as("gk"))
       val rep = k.groupBy("gk").agg(F.min("doc_id").as("rep"))
       k.join(rep, "gk").select("doc_id", "rep")
-    })
+    }
 
   /** Member-level expansion of rep-level pairs: (ra, rb, extra...) →
     * (da, db, extra...) over every cross-group member combination. Groups
@@ -160,10 +159,6 @@ object PipelineQueries {
       .select("da", "db")
   }
 
-  // d_simhash and d_simhash_pairs share the 16-bit signature frame.
-  private val simhashCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   // d_minhash_lsh and d_dedup_clusters run the IDENTICAL rep-level banded
   // LSH candidate join (minhash signatures over the rep-collapsed shingle
   // set → band buckets → bucket self-join). Computed once per (session,
@@ -171,12 +166,8 @@ object PipelineQueries {
   // this memo each pass paid the 16-way md5 minhash aggregation and the
   // bucket self-join twice (guide §1.2: don't compute things twice).
   // Columns: (da, db, n_bands), da < db, rep ids only.
-  private val lshCandCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def repLshCandidates(s: SparkSession, d: String): DataFrame =
-    lshCandCache.getOrElseUpdate((s, d), materialize(s, d, "lshcand") {
-      lshCandidates(shinglesRepsOf(s, d))
-    })
+    memoized(s, d, "lshcand")(lshCandidates(shinglesRepsOf(s, d)))
 
   // ONE (vec_id, v, nrm) norms frame per (session, dir), shared by the LSH
   // index, the IVF index, and the brute-force cosine baseline — one corpus
@@ -185,76 +176,52 @@ object PipelineQueries {
   // is 0/0 = NaN, which would silently disorder the bounded top-k buffer
   // (round-3 verdict #7). Every oracle's norms CTE applies the identical
   // `nrm > 0` filter, so both engines exclude them in lock-step.
-  private val normsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def normsOf(s: SparkSession, d: String): DataFrame =
-    normsCache.getOrElseUpdate((s, d), {
+    Caches.memo(s, d, "norms") {
       graft.functions.GraftFunctions.register(s)
       materialize(s, d, "norms")(
         embs(s, d).select(F.col("vec_id"), F.col("embedding").as("v"))
           .select(F.col("vec_id"), F.col("v"),
             F.sqrt(F.expr("vector_dot(v, v)")).as("nrm"))
           .where(F.col("nrm") > 0))
-    })
+    }
 
   // e_ann_lsh and e_embed_neardup share one LSH index (buckets + norms).
   // Planes are DERIVED from the corpus size (one metadata-cheap count),
   // memoized separately so the oracle generator reads the identical value.
-  private val annPlanesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private[graft] def annPlanes(s: SparkSession, d: String): Int =
-    annPlanesCache.getOrElseUpdate((s, d),
+    Caches.memo(s, d, "annplanes")(
       graft.pipeline.Similarity.derivePlanes(embs(s, d).count()))
 
-  private val annIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.pipeline.Similarity.AnnIndex]
   private def annIndex(s: SparkSession, d: String): graft.pipeline.Similarity.AnnIndex =
-    annIndexCache.getOrElseUpdate((s, d), graft.pipeline.Similarity.buildIndex(embs(s, d),
+    Caches.memo(s, d, "annindex")(graft.pipeline.Similarity.buildIndex(embs(s, d),
       planes = annPlanes(s, d),
       persist = (part, df) => materialize(s, d, s"ann_$part")(df),
       norms = Some(normsOf(s, d))))
 
   // e_ann_ivf: cells derived from corpus size (√n), index shared the same
   // way — and the oracle generator reads the identical derived value.
-  private val ivfCellsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Int]
   private[graft] def ivfCells(s: SparkSession, d: String): Int =
-    ivfCellsCache.getOrElseUpdate((s, d),
+    Caches.memo(s, d, "ivfcells")(
       graft.pipeline.IvfAnn.deriveCells(embs(s, d).count()))
 
-  private val ivfIndexCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), graft.pipeline.IvfAnn.IvfIndex]
   private def ivfIndex(s: SparkSession, d: String): graft.pipeline.IvfAnn.IvfIndex =
-    ivfIndexCache.getOrElseUpdate((s, d), graft.pipeline.IvfAnn.buildIndex(embs(s, d),
+    Caches.memo(s, d, "ivfindex")(graft.pipeline.IvfAnn.buildIndex(embs(s, d),
       cells = ivfCells(s, d),
       persist = (part, df) => materialize(s, d, s"ivf_$part")(df),
       norms = Some(normsOf(s, d))))
 
-  // Corpus word counts — the d_unigram_lp vocabulary source, MATERIALIZED
-  // (round-4 verdict "What's wrong #2"): the total and the top-V vocab both
+  // Corpus word counts — the d_unigram_lp vocabulary source, MATERIALIZED:
+  // the total and the top-V vocab both
   // derive from this memo, so the corpus-wide word aggregation runs ONCE
   // per pass instead of once per consumer (the previous shape re-ran it for
   // the driver-side total AND inside the probe plan — two full corpus scans
   // at 100 TB for one operator).
-  private val wordCountCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def wordCountsOf(s: SparkSession, d: String): DataFrame =
-    wordCountCache.getOrElseUpdate((s, d), materialize(s, d, "wordcounts")(
+    memoized(s, d, "wordcounts")(
       docs(s, d)
         .select(F.explode(F.expr("filter(split(text, ' '), w -> w <> '')")).as("w"))
-        .groupBy("w").agg(F.count(F.lit(1)).as("c"))))
-
-  graft.Caches.register(() => wordCountCache.clear())
-  graft.Caches.register(() => lshCandCache.clear())
-  graft.Caches.register(() => shingleRepsCache.clear())
-  graft.Caches.register(() => shingleCache.clear())
-  graft.Caches.register(() => textGroupCache.clear())
-  graft.Caches.register(() => simhashCache.clear())
-  graft.Caches.register(() => normsCache.clear())
-  graft.Caches.register(() => annPlanesCache.clear())
-  graft.Caches.register(() => annIndexCache.clear())
-  graft.Caches.register(() => ivfCellsCache.clear())
-  graft.Caches.register(() => ivfIndexCache.clear())
+        .groupBy("w").agg(F.count(F.lit(1)).as("c")))
 
   private val shinglesSql: String =
     """w AS (SELECT doc_id, string_split(text, ' ') AS words FROM documents),
@@ -489,9 +456,10 @@ object PipelineQueries {
        |SELECT vid AS doc_id, min(r) AS cluster_id, (vid = min(r)) AS is_canonical
        |FROM reach GROUP BY vid ORDER BY doc_id""".stripMargin
 
-  /** 16-bit SimHash over distinct words (md5 bit sampling). */
+  /** 16-bit SimHash over distinct words (md5 bit sampling); d_simhash and
+    * d_simhash_pairs share the memoized signature frame. */
   def dSimhash(s: SparkSession, d: String): DataFrame =
-    simhashCache.getOrElseUpdate((s, d), materialize(s, d, "simhash16")(dSimhashUncached(s, d)))
+    memoized(s, d, "simhash16")(dSimhashUncached(s, d))
 
   private def dSimhashUncached(s: SparkSession, d: String): DataFrame = {
     val words = docs(s, d)

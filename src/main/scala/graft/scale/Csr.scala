@@ -1,29 +1,21 @@
 package graft.scale
 
-import org.apache.spark.sql.{DataFrame, Dataset, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
-
-import graft.CsrBlock
 
 /** Compact adjacency — SURVEY.md §2.3 E8 / §4.3, the Spark rendition of the
   * reference's compact structure (BASELINE.json:6 "per-partition CSR-packed
-  * Datasets"). Two layers:
-  *
-  * 1. VERTEX-MAJOR PACKING (`packAdjacency` / `packAdjacencyKeys`) — rows of
-  *    (src, neighbor arrays) as Tungsten array columns, sorted by dst for
-  *    determinism, HUB-SPLIT: no row carries more than `maxSegment`
-  *    neighbors; a vertex of degree d packs into ⌈d/maxSegment⌉ segment
-  *    rows (same src, disjoint contiguous dst slices). This is the layer
-  *    the iteration loops consume: the state⋈edges join touches one row per
-  *    vertex-SEGMENT instead of one per edge, message expansion is the
-  *    CsrExpand custom operator, and — because segments are bounded — a
-  *    10⁸-degree hub becomes ~25k modest rows spread across tasks instead
-  *    of one giant array row pinned to one task (round-2 verdict item #2).
-  *
-  * 2. BLOCK CSR (`pack`/`unpack`) — classic offsets+packed-neighbors blocks,
-  *    one row per range partition, for at-rest storage density. Built with
-  *    repartitionByRange so block sizes track EDGE counts, not vertex
-  *    counts, even under power-law degrees.
+  * Datasets"): VERTEX-MAJOR PACKING (`packAdjacency` /
+  * `packAdjacencyKeys`) — rows of (src, neighbor arrays) as Tungsten array
+  * columns, sorted by dst for determinism, HUB-SPLIT: no row carries more
+  * than `maxSegment` neighbors; a vertex of degree d packs into
+  * ⌈d/maxSegment⌉ segment rows (same src, disjoint contiguous dst slices).
+  * The iteration loops consume this layer: the state⋈edges join touches
+  * one row per vertex-SEGMENT instead of one per edge, message expansion is
+  * the CsrExpand custom operator, and — because segments are bounded — a
+  * 10⁸-degree hub becomes ~25k modest rows spread across tasks instead of
+  * one giant array row pinned to one task. Hub splitting is the engine's
+  * one skew mechanism.
   */
 object Csr {
 
@@ -64,47 +56,4 @@ object Csr {
       .groupBy("src", "seg")
       .agg(F.sort_array(F.collect_list(F.col("dst"))).as("dsts"))
       .select(F.col("src"), F.col("dsts"))
-
-  /** edges (src, dst, weight) → Dataset[CsrBlock], one row per range
-    * partition of src. Deterministic within a fixed partition count. */
-  def pack(edges: DataFrame, numPartitions: Int): Dataset[CsrBlock] = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    edges
-      .select(F.col("src"), F.col("dst"), F.col("weight"))
-      .repartitionByRange(numPartitions, F.col("src"))
-      .sortWithinPartitions("src", "dst")
-      .as[(Long, Long, Double)]
-      .mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val vids = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val offsets = scala.collection.mutable.ArrayBuffer.empty[Int]
-          val nbrs = scala.collection.mutable.ArrayBuffer.empty[Long]
-          val ws = scala.collection.mutable.ArrayBuffer.empty[Double]
-          var cur = Long.MinValue
-          it.foreach { case (s, d, w) =>
-            if (s != cur) { vids += s; offsets += nbrs.length; cur = s }
-            nbrs += d; ws += w
-          }
-          offsets += nbrs.length
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          Iterator.single(CsrBlock(pid, vids.toArray, offsets.toArray,
-            nbrs.toArray, ws.toArray))
-        }
-      }
-  }
-
-  /** Inverse of pack: blocks → (src, dst, weight) rows. */
-  def unpack(blocks: Dataset[CsrBlock]): DataFrame = {
-    val spark = blocks.sparkSession
-    import spark.implicits._
-    blocks.flatMap { b =>
-      b.vids.indices.iterator.flatMap { i =>
-        (b.offsets(i) until b.offsets(i + 1)).iterator.map { j =>
-          (b.vids(i), b.nbrs(j), b.weights(j))
-        }
-      }
-    }.toDF("src", "dst", "weight")
-  }
 }

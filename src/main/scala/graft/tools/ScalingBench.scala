@@ -15,7 +15,7 @@ import graft.graph.{GraphBuilder, LinkGraph}
   * and local[32]) and reporting throughput at both plus efficiency.
   *
   * Modes (one JVM = one SparkContext, so one level per invocation;
-  * scripts/scaling_bench.sh orchestrates and writes BENCH/BASELINE.md):
+  * scripts/scaling.sh orchestrates the runs and logs them as JSON lines):
   *
   *   prep <nConvs> <dir> [cores]     -- generate transcripts (seed 42),
   *                                      build the graph once, write
@@ -23,7 +23,7 @@ import graft.graph.{GraphBuilder, LinkGraph}
   *   run <cores> <dir> <iters> <algo> -- read the prepped graph, run the
   *                                      algorithm, print one JSON line
   *
-  * algo: pagerank | pagerank_salted | pagerank_packed | cc | triangles
+  * algo: pagerank | pagerank_packed | cc | triangles | scan_derive
   */
 object ScalingBench {
 
@@ -66,11 +66,6 @@ object ScalingBench {
     val walls: Seq[Double] = algo match {
       case "pagerank" =>
         val r = PageRank.run(g, PageRankConfig(fixedIters = Some(iters)))
-        r.metricsLog.flatMap(_.get("wall_ms")).map(_.toString.toDouble / 1000.0)
-      case "pagerank_salted" =>
-        // salts scale with cores, as they would with executors on a cluster
-        val r = PageRank.run(g, PageRankConfig(fixedIters = Some(iters),
-          salts = cores, hotQuantile = 0.9999, hotMinDegree = 1000.0))
         r.metricsLog.flatMap(_.get("wall_ms")).map(_.toString.toDouble / 1000.0)
       case "pagerank_packed" =>
         val r = PageRank.run(g, PageRankConfig(fixedIters = Some(iters),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{functions => F}
 import graft.algo._
 import graft.gen.TranscriptGen
 import graft.graph.GraphBuilder
-import graft.scale.{Csr, Salting}
+import graft.scale.Csr
 
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
@@ -17,23 +17,6 @@ class ScaleSpec extends SparkSpec {
   lazy val plainRanks: Array[Double] =
     PageRank.run(graph, PageRankConfig(tol = 1e-8))
       .ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-
-  test("CSR block pack/unpack roundtrips the edge set exactly") {
-    val edges = graph.edges.groupBy("src", "dst")
-      .agg(F.sum("weight").as("weight"))
-    val packed = Csr.pack(edges, 4)
-    val back = Csr.unpack(packed)
-    val a = edges.orderBy("src", "dst").as[(Long, Long, Double)].collect().toSeq
-    val b = back.orderBy("src", "dst").as[(Long, Long, Double)].collect().toSeq
-    assert(a == b)
-    // block invariants
-    packed.collect().foreach { blk =>
-      assert(blk.offsets.length == blk.vids.length + 1)
-      assert(blk.offsets.last == blk.nbrs.length)
-      assert(blk.nbrs.length == blk.weights.length)
-      assert(blk.vids.toSeq == blk.vids.sorted.toSeq)
-    }
-  }
 
   test("packed-adjacency PageRank == plain PageRank (1e-9)") {
     val packed = PageRank.run(graph, PageRankConfig(tol = 1e-8, packedAdjacency = true))
@@ -79,31 +62,6 @@ class ScaleSpec extends SparkSpec {
     plain.zip(split).foreach { case (a, b) =>
       assert(math.abs(a - b) <= 1e-9, s"$a vs $b")
     }
-  }
-
-  test("salted PageRank == plain PageRank (1e-9), with real hot keys") {
-    // force salting to actually engage on this small graph
-    val salted = PageRank.run(graph, PageRankConfig(tol = 1e-8, salts = 4,
-      hotQuantile = 0.8, hotMinDegree = 2.0))
-      .ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-    plainRanks.zip(salted).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= 1e-9, s"$a vs $b")
-    }
-  }
-
-  test("salting preserves the joined message multiset size") {
-    val em = graph.edges.groupBy("src", "dst")
-      .agg(F.sum("weight").as("w"))
-    val deg = em.groupBy(F.col("src").as("vid"))
-      .agg(F.sum("w").as("wdeg"))
-    val hot = Salting.hotKeys(deg, 0.8, 2.0)
-    assert(hot.count() > 0, "test graph must have hot keys for this test to bite")
-    val state = graph.vertices.withColumnRenamed("vid", "src")
-      .withColumn("rank", F.lit(1.0))
-    val plainJoin = em.join(state, "src").count()
-    val saltedJoin = Salting.saltEdges(em, hot, 4)
-      .join(Salting.saltState(state, hot, 4, "src"), Seq("src", "salt")).count()
-    assert(plainJoin == saltedJoin)
   }
 
   test("adaptive loop width: tiny states loop narrow; one shuffle per round at the narrow width") {
