@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
+import graft.plans.{Fold, GraftPlans}
 
 /** Connected components, HashMin — SURVEY.md §2.10; semantics per
   * Rastogi et al., "Finding connected components in map-reduce in
@@ -16,8 +17,9 @@ import graft.graph.LinkGraph
   * (BASELINE.json:6). Rounds ≈ graph diameter; transcript graphs are
   * shallow stars/chains, so HashMin beats star-contraction constants here.
   *
-  * Per round: edges⋈labels (J1) + min-by-dst (A2) + least() merge, then a
-  * changed-count agg over the committed frame (J3/A4).
+  * Per round: edges⋈labels (J1) + min-by-dst (A2) + least() merge; the
+  * changed count is folded by the commit job itself (graft.plans.FoldStats),
+  * so a round is one Spark job.
   */
 final case class CcResult(
     labels: DataFrame, // (vid: long, label: long)
@@ -80,7 +82,7 @@ object ConnectedComponents {
         val t0 = System.nanoTime()
         val joined = sym.join(state.withColumnRenamed("vid", "src"), "src") // no exchange
         val flat =
-          if (packedAdjacency) graft.plans.GraftPlans.expandLabels(joined)
+          if (packedAdjacency) GraftPlans.expandLabels(joined)
           else joined.select(F.col("dst"), F.col("label"))
         val msgs = flat
           .groupBy("dst")                                     // THE shuffle
@@ -92,10 +94,11 @@ object ConnectedComponents {
           .select(F.col("vid"),
             F.least(F.col("prev"), F.coalesce(F.col("nbr_min"), F.col("prev"))).as("label"),
             F.col("prev"))
-        val committed = mat.iter(round, next, Map.empty)
-        changed = committed
-          .agg(F.coalesce(F.sum(F.when(F.col("label") < F.col("prev"), 1L).otherwise(0L)), F.lit(0L)))
-          .first().getLong(0)
+        // the change count is folded by the commit job (graft.plans.FoldStats)
+        val folded = GraftPlans.fold(next,
+          Fold.sum("changed", F.when(F.col("label") < F.col("prev"), 1L).otherwise(0L)))
+        val committed = mat.iter(round, folded.frame, Map.empty)
+        changed = folded.result().long("changed")
         mat.note(round, Map("changed" -> changed,
           "wall_ms" -> (System.nanoTime() - t0) / 1000000L))
         state = committed.select("vid", "label")
@@ -131,17 +134,22 @@ object ConnectedComponents {
       // This loop's durable state is the contracted EDGE set (u, v) — NOT a
       // per-vertex frame — so a CheckpointMaterializer must bucket on "u"
       // (Main picks the bucket key per algorithm; round-2 verdict bug).
-      val (startRound, e0) = mat.resume() match {
-        case Some((k, df)) => (k, df.select("u", "v"))
+      // Edge counts are the row counts the commit jobs fold; a resumed edge
+      // set is counted by one run of the same fold.
+      val (startRound, e0, cnt0) = mat.resume() match {
+        case Some((k, df)) =>
+          val st = df.select("u", "v")
+          (k, st, GraftPlans.fold(st).compute().rows)
         case None =>
           val init = graph.edges.select(
               F.greatest(F.col("src"), F.col("dst")).as("u"),
               F.least(F.col("src"), F.col("dst")).as("v"))
             .where(F.col("u") =!= F.col("v")).distinct()
-          (0, mat.iter(0, init.repartition(F.col("u")), Map("init" -> true)))
+          val folded = GraftPlans.fold(init.repartition(F.col("u")))
+          (0, mat.iter(0, folded.frame, Map("init" -> true)), folded.result().rows)
       }
       var e = e0
-      var prevCnt = e.count()
+      var prevCnt = cnt0
       var round = startRound
       var changed = -1L
       while (changed != 0L && round < maxRounds && prevCnt > 0) {
@@ -163,8 +171,9 @@ object ConnectedComponents {
         // must not be touched afterwards. ss ⊆ e (anti == 0) ∧ |ss| == |e|
         // ⇒ sets equal (both distinct) — exact, no hashing shortcut.
         val anti = ss.join(e, Seq("u", "v"), "left_anti").count()
-        val committed = mat.iter(round, ss.repartition(F.col("u")), Map.empty)
-        val cnt = committed.count()
+        val folded = GraftPlans.fold(ss.repartition(F.col("u")))
+        val committed = mat.iter(round, folded.frame, Map.empty)
+        val cnt = folded.result().rows
         changed = if (cnt == prevCnt && anti == 0L) 0L else 1L
         mat.note(round, Map("edges" -> cnt,
           "wall_ms" -> (System.nanoTime() - t0) / 1000000L))

@@ -53,8 +53,9 @@ trait Materializer {
     * O(state), not O(rounds × state) — round-6 ADVICE). Default: the latest
     * cumulative snapshot as a single slice, which is exactly resume(). */
   def resumeSlices(): Seq[(Int, DataFrame)] = resume().toSeq
-  /** Record metrics computed AFTER iter's commit (cheap agg over the
-    * committed data) — the IterMetrics ledger [BASELINE.json:6]. */
+  /** Record metrics of iter's commit (the loops fold them in the commit
+    * job itself, graft.plans.FoldStats) — the IterMetrics ledger
+    * [BASELINE.json:6]. */
   def note(iter: Int, meta: Map[String, Any]): Unit
   def log: Seq[Map[String, Any]]
   /** Release loop-invariant resources at end of run (keeps final state). */

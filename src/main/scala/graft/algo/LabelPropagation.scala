@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
+import graft.plans.{Fold, GraftPlans}
 
 /** Synchronous label propagation — SURVEY.md §2.10.
   *
@@ -62,7 +63,7 @@ object LabelPropagation {
         // shuffle, not two.
         val joined = sym.join(state.withColumnRenamed("vid", "src"), "src") // no exchange
         val flat =
-          if (packedAdjacency) graft.plans.GraftPlans.expandLabels(joined)
+          if (packedAdjacency) GraftPlans.expandLabels(joined)
           else joined.select(F.col("dst"), F.col("label"))
         val counts = flat
           .repartition(F.col("dst"))                          // THE shuffle
@@ -78,10 +79,11 @@ object LabelPropagation {
           .select(F.col("vid"),
             F.coalesce(F.col("new_label"), F.col("prev")).as("label"),
             F.col("prev"))
-        val committed = mat.iter(round, next, Map.empty)
-        changed = committed
-          .agg(F.coalesce(F.sum(F.when(F.col("label") =!= F.col("prev"), 1L).otherwise(0L)), F.lit(0L)))
-          .first().getLong(0)
+        // the change count is folded by the commit job (graft.plans.FoldStats)
+        val folded = GraftPlans.fold(next,
+          Fold.sum("changed", F.when(F.col("label") =!= F.col("prev"), 1L).otherwise(0L)))
+        val committed = mat.iter(round, folded.frame, Map.empty)
+        changed = folded.result().long("changed")
         mat.note(round, Map("changed" -> changed,
           "wall_ms" -> (System.nanoTime() - t0) / 1000000L))
         state = committed.select("vid", "label")

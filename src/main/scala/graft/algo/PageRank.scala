@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
+import graft.plans.{Fold, FoldResult, GraftPlans}
 import graft.scale.Csr
 
 /** PageRank — SURVEY.md §2.10. Classic normalized power iteration:
@@ -19,7 +20,11 @@ import graft.scale.Csr
   * hash-partitioned by `vid` across iterations (the materializer preserves
   * physical partitioning), so the state⋈edges join and both vertex-side
   * joins need NO exchange — the only shuffle per round is the sum-by-dst
-  * message aggregation (A1). Two edge layouts, identical results:
+  * message aggregation (A1). A round is ONE Spark job, the commit: it also
+  * folds the round's linf, l1, dangling mass and rank total
+  * (graft.plans.FoldStats), and the dangling mass rides into the next
+  * round's plan as a scalar, with no driver action or broadcast between
+  * commits. Two edge layouts, identical results:
   *
   *  - plain rows (default): edge-level shuffled-hash join
   *  - `packedAdjacency`: vertex-major CSR arrays (Csr.packAdjacency) — the
@@ -142,26 +147,28 @@ object PageRank {
 
       val maxIters = cfg.fixedIters.getOrElse(cfg.maxIters)
 
-      def danglingOf(df: DataFrame): Double =
-        df.agg(F.coalesce(F.sum(F.when(!F.col("has_out"), F.col("rank")).otherwise(0.0)), F.lit(0.0)))
-          .first().getDouble(0)
-
-      // Fixed-iteration (oracle) runs need no per-round convergence test on
-      // the driver, so the dangling mass rides as an IN-PLAN broadcast
-      // aggregate over the previous committed frame instead of a separate
-      // driver action per round — one action per round, not two (guide
-      // §1.2/§5: the driver should do almost no data work). The aggregation
-      // is the identical Spark agg over the identical flat frame, so the
-      // double it injects is bit-identical to the driver-computed one.
-      // Tolerance-mode runs keep the driver path: linf gates the loop.
-      val inPlanDangling = cfg.fixedIters.isDefined
+      // Every commit folds its round's statistics in the same job
+      // (graft.plans.FoldStats): linf gates tolerance runs, the dangling
+      // mass feeds the next round, and each round's note records all four.
+      // Partials merge in partition order, so the values repeat bit for bit
+      // on every run, at any loop width.
+      val stats = Seq(
+        Fold.max("linf", F.abs(F.col("rank") - F.col("prev"))),
+        Fold.sum("l1", F.abs(F.col("rank") - F.col("prev"))),
+        Fold.sum("dangling_mass", F.when(!F.col("has_out"), F.col("rank")).otherwise(0.0)),
+        Fold.sum("rank_total", F.col("rank")))
+      def commit(k: Int, df: DataFrame, meta: Map[String, Any]): (DataFrame, FoldResult) = {
+        val folded = GraftPlans.fold(df, stats: _*)
+        (mat.iter(k, folded.frame, meta), folded.result())
+      }
 
       // Resume (BASELINE.json:6 "resumable mid-iteration"), warm start
-      // from a prior run's ranks, or cold start at 1/N.
-      val (startIter, full0, dang0) = mat.resume() match {
+      // from a prior run's ranks, or cold start at 1/N. A resumed state's
+      // stats come from one run of the same fold over it.
+      val (startIter, full0, stats0) = mat.resume() match {
         case Some((k, df)) =>
-          (k, df.select("vid", "rank", "prev", "has_out"),
-            if (inPlanDangling) 0.0 else danglingOf(df))
+          val st = df.select("vid", "rank", "prev", "has_out")
+          (k, st, GraftPlans.fold(st, stats: _*).compute())
         case None =>
           // Cold-start vector: uniform 1/N globally, or the teleport vector
           // itself when personalized (unit mass over the seed set).
@@ -181,13 +188,12 @@ object PageRank {
               vmeta.select(F.col("vid"), coldRank.as("rank"),
                 F.lit(0.0).as("prev"), F.col("has_out"))
           }
-          val committed = mat.iter(0, init, Map("init" -> true))
-          (0, committed.select("vid", "rank", "prev", "has_out"),
-            if (inPlanDangling) 0.0 else danglingOf(committed))
+          val (committed, s0) = commit(0, init, Map("init" -> true))
+          (0, committed, s0)
       }
       var full = full0 // the committed frame incl. prev/has_out
       def state = full.select("vid", "rank")
-      var dangling = dang0
+      var dangling = stats0.double("dangling_mass")
 
       def messages(state: DataFrame): DataFrame = {
         val st = state.withColumnRenamed("vid", "src")
@@ -196,7 +202,7 @@ object PageRank {
             // custom whole-operator plan (graft.plans.CsrExpand): one pass
             // over the packed arrays, no CodegenFallback zip_with, no
             // intermediate struct array; still narrow — no exchange
-            graft.plans.GraftPlans.expandMessages(em.join(st, "src"))
+            GraftPlans.expandMessages(em.join(st, "src"))
           else
             em.join(st, "src")                                // no exchange
               .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))
@@ -205,26 +211,19 @@ object PageRank {
           .withColumnRenamed("dst", "vid")
       }
 
-      val danglingExpr = F.coalesce(
-        F.sum(F.when(!F.col("has_out"), F.col("rank")).otherwise(0.0)), F.lit(0.0))
-
       var iter = startIter
       var converged = false
-      var lastWallMs = 0L
       while (iter < maxIters && !converged) {
         iter += 1
         val t0 = System.nanoTime()
         val msgs = messages(state)
-        // The per-iteration dangling mass enters via a one-row broadcast,
-        // NOT a literal: inlining a changing constant would make every
-        // iteration's generated code unique and force a Janino recompile
-        // per round. With a stable plan source, codegen compiles once for
-        // the whole loop. Fixed-iteration runs derive the row IN-PLAN from
-        // the previous committed frame (no driver action); tolerance runs
-        // reuse the driver-computed value from the convergence agg.
-        val consts =
-          if (inPlanDangling) full.agg(danglingExpr.as("dang_mass"))
-          else graph.spark.createDataFrame(Seq(Tuple1(dangling))).toDF("dang_mass")
+        // The round's dangling mass enters as a zero-argument UDF, not a
+        // literal or a broadcast row: the generated code reads the value
+        // through a reference object, so the plan text and the codegen
+        // cache key are the same in every round (a literal would force a
+        // Janino recompile per round; a broadcast costs a job per round).
+        val mass = dangling
+        val dangMass = F.udf(() => mass).withName("dang_mass")()
         // Base-term: global runs keep the ORIGINAL expression tree (so
         // uniform-PageRank results stay bit-identical run-to-run); the
         // personalized branch substitutes tele(v) for 1/N in both the
@@ -232,56 +231,24 @@ object PageRank {
         val rankExpr =
           if (teleport.isDefined)
             F.lit(1.0 - d) * F.col("tele") +
-              F.lit(d) * (F.coalesce(F.col("msum"), F.lit(0.0)) +
-                F.col("dang_mass") * F.col("tele"))
+              F.lit(d) * (F.coalesce(F.col("msum"), F.lit(0.0)) + dangMass * F.col("tele"))
           else
             F.lit((1.0 - d) / n) +
-              F.lit(d) * (F.coalesce(F.col("msum"), F.lit(0.0)) + F.col("dang_mass") / F.lit(n))
+              F.lit(d) * (F.coalesce(F.col("msum"), F.lit(0.0)) + dangMass / F.lit(n))
         val next = vmeta
           .join(msgs, Seq("vid"), "left")                     // no exchange
           .join(state.withColumnRenamed("rank", "prev"), "vid") // no exchange
-          .crossJoin(F.broadcast(consts))
           .select(
             F.col("vid"),
             rankExpr.as("rank"),
             F.col("prev"),
             F.col("has_out"))
-        val committed = mat.iter(iter, next, Map.empty)
-        if (inPlanDangling) {
-          // no driver agg: the next round's dangling subquery reads the
-          // committed blocks; note the round's wall only
-          lastWallMs = (System.nanoTime() - t0) / 1000000L
-          mat.note(iter, Map("wall_ms" -> lastWallMs))
-        } else {
-          // One cheap agg over committed blocks: convergence + next dangling.
-          val row = committed.agg(
-            F.max(F.abs(F.col("rank") - F.col("prev"))).as("linf"),
-            F.sum(F.abs(F.col("rank") - F.col("prev"))).as("l1"),
-            F.sum(F.when(!F.col("has_out"), F.col("rank")).otherwise(0.0)).as("dang"),
-            F.sum("rank").as("total")).first()
-          val linf = row.getDouble(0)
-          dangling = row.getDouble(2)
-          mat.note(iter, Map(
-            "linf" -> linf, "l1" -> row.getDouble(1),
-            "dangling_mass" -> dangling, "rank_total" -> row.getDouble(3),
-            "wall_ms" -> (System.nanoTime() - t0) / 1000000L))
-          converged = linf < cfg.tol
-        }
+        val (committed, s) = commit(iter, next, Map.empty)
+        dangling = s.double("dangling_mass")
+        mat.note(iter, s.values + ("wall_ms" -> (System.nanoTime() - t0) / 1000000L))
+        // fixed-iteration (oracle) runs go exactly fixedIters rounds
+        converged = cfg.fixedIters.isEmpty && s.double("linf") < cfg.tol
         full = committed
-      }
-      // Fixed-iteration runs report the final state's convergence metrics
-      // with ONE agg after the loop (the per-round ledger carries wall_ms;
-      // the ledger's LAST entry keeps the full stats contract).
-      if (inPlanDangling && iter > startIter) {
-        val row = full.agg(
-          F.max(F.abs(F.col("rank") - F.col("prev"))).as("linf"),
-          F.sum(F.abs(F.col("rank") - F.col("prev"))).as("l1"),
-          danglingExpr.as("dang"),
-          F.sum("rank").as("total")).first()
-        mat.note(iter, Map(
-          "linf" -> row.getDouble(0), "l1" -> row.getDouble(1),
-          "dangling_mass" -> row.getDouble(2), "rank_total" -> row.getDouble(3),
-          "wall_ms" -> lastWallMs))
       }
       val out = PageRankResult(state, iter, converged, mat.log)
       mat.close()

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, JavaCode, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
@@ -191,10 +191,11 @@ case class CsrExpandExec(override val output: Seq[Attribute], child: SparkPlan,
     copy(child = newChild)
 }
 
-/** Plans [[CsrExpand]] → [[CsrExpandExec]]. */
+/** Plans [[CsrExpand]] → [[CsrExpandExec]] and [[FoldStats]] → [[FoldStatsExec]]. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case CsrExpand(child, output, mode) => CsrExpandExec(output, planLater(child), mode) :: Nil
+    case FoldStats(child, folds, sink) => FoldStatsExec(folds, sink, planLater(child)) :: Nil
     case _ => Nil
   }
 }
@@ -243,5 +244,26 @@ object GraftPlans {
     org.apache.spark.sql.graft.PlanBridge.ofRows(
       joined.sparkSession,
       CsrExpand(joined.queryExecution.analyzed, CsrExpandMode.CopyLabel))
+  }
+
+  /** `df` with a [[FoldStats]] on top: materializing `frame` (one loop
+    * commit) also folds `folds` over its rows, read back with `result()`. */
+  def fold(df: DataFrame, folds: Fold*): Folded = {
+    val spark = df.sparkSession
+    install(spark)
+    // resolve the fold columns against df's plan, aliases dropped
+    val Project(list, child) = df.select(folds.map(_.column): _*).queryExecution.analyzed
+    val exprs = list.map {
+      case a: Alias => a.child
+      case e        => e
+    }
+    exprs.zip(folds).foreach { case (e, f) =>
+      require(e.dataType == DoubleType || e.dataType == LongType,
+        s"fold ${f.name} must be a double or long column, got ${e.dataType}")
+    }
+    val sink = new FoldSink(folds.map(_.name), folds.map(_.kind).toArray,
+      exprs.map(_.dataType == LongType).toArray)
+    spark.sparkContext.register(sink)
+    new Folded(org.apache.spark.sql.graft.PlanBridge.ofRows(spark, FoldStats(child, exprs, sink)), sink)
   }
 }

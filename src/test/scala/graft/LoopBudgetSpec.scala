@@ -1,0 +1,136 @@
+package graft
+
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, functions => F}
+import org.scalatest.BeforeAndAfterAll
+
+import graft.algo._
+import graft.gen.TranscriptGen
+import graft.graph.GraphBuilder
+
+/** Counts the Spark jobs started in this session. */
+final class JobCounter extends SparkListener {
+  @volatile private var n = 0L
+  override def onJobStart(e: SparkListenerJobStart): Unit = n += 1
+  def jobs(sc: org.apache.spark.SparkContext): Long = {
+    org.apache.spark.graft.ListenerSync.drain(sc)
+    n
+  }
+}
+
+/** Per-loop cost budgets and the reproducibility of folded loop stats.
+  *
+  * A loop round is one Spark job, the commit: its convergence or change
+  * statistics are folded by that job (graft.plans.FoldStats), not read by
+  * a driver action after it. A budget raised later needs a CHANGES.md line
+  * saying why. */
+class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
+  import spark.implicits._
+
+  lazy val graph = {
+    val g = GraphBuilder.fromTranscripts(
+      TranscriptGen.transcripts(spark, nConvs = 40, seed = 11).toDF())
+    // the graph's own memos are built here, not charged to a loop
+    g.numVertices; g.numEdges; g.symmetrized
+    g
+  }
+
+  private lazy val counter = {
+    val c = new JobCounter
+    spark.sparkContext.addSparkListener(c)
+    c
+  }
+  private def jobs: Long = counter.jobs(spark.sparkContext)
+
+  override def afterAll(): Unit = spark.sparkContext.removeSparkListener(counter)
+
+  /** Charges the jobs started inside `shared` calls to the invariants. */
+  private final class Budgeted(width: Int)
+      extends ForwardingMaterializer(new LocalMaterializer, Some(width)) {
+    var sharedJobs = 0L
+    override def shared(name: String, df: DataFrame, repartitionKeys: Seq[String],
+                        fingerprint: Option[String]): DataFrame = {
+      val j0 = jobs
+      val out = super.shared(name, df, repartitionKeys, fingerprint)
+      sharedJobs += jobs - j0
+      out
+    }
+  }
+
+  /** Jobs a loop ran, and its budget: shared invariants + init + 1 a round. */
+  private def budget(run: Materializer => Int): (Long, Long) = {
+    graph
+    val mat = new Budgeted(1)
+    val j0 = jobs
+    val rounds = run(mat)
+    (jobs - j0, mat.sharedJobs + 1 + rounds)
+  }
+
+  test("job budget at width 1: PageRank (tolerance and fixed), HashMin CC, LPA") {
+    val cases = Seq[(String, Materializer => Int)](
+      "pagerank tol" -> (m => PageRank.run(graph, PageRankConfig(tol = 1e-8), m).iterations),
+      "pagerank fixed 10" -> (m =>
+        PageRank.run(graph, PageRankConfig(fixedIters = Some(10)), m).iterations),
+      "hashmin cc" -> (m => ConnectedComponents.run(graph, mat = m).rounds),
+      "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 10, mat = m).rounds))
+    cases.foreach { case (name, run) =>
+      val (used, allowed) = budget(run)
+      assert(used <= allowed, s"$name ran $used jobs, budget $allowed")
+    }
+  }
+
+  private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+
+  test("width 1: folded round stats == the committed-frame agg, bit for bit") {
+    val aggs = ArrayBuffer.empty[Seq[Double]]
+    val mat = new ForwardingMaterializer(new LocalMaterializer, Some(1)) {
+      override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
+        val c = super.iter(iter, df, meta)
+        val r = c.agg(
+          F.max(F.abs(F.col("rank") - F.col("prev"))),
+          F.sum(F.abs(F.col("rank") - F.col("prev"))),
+          F.sum(F.when(!F.col("has_out"), F.col("rank")).otherwise(0.0)),
+          F.sum("rank")).first()
+        aggs += (0 until 4).map(r.getDouble)
+        c
+      }
+    }
+    val r = PageRank.run(graph, PageRankConfig(tol = 1e-8), mat)
+    val notes = r.metricsLog.filter(_.contains("linf"))
+    assert(notes.size == r.iterations && r.converged)
+    notes.zip(aggs.drop(1)).foreach { case (n, want) =>
+      val got = Seq("linf", "l1", "dangling_mass", "rank_total").map(n(_).asInstanceOf[Double])
+      assert(got.map(bits) == want.map(bits), s"round ${n("iter")}: $got vs $want")
+    }
+  }
+
+  test("width 4: three tolerance runs give bit-identical ranks and dangling mass") {
+    val runs = (1 to 3).map { _ =>
+      val r = PageRank.run(graph, PageRankConfig(tol = 1e-8),
+        new ForwardingMaterializer(new LocalMaterializer, Some(4)))
+      assert(r.ranks.rdd.getNumPartitions == 4)
+      (r.ranks.orderBy("vid").as[(Long, Double)].collect().toSeq.map { case (v, x) => (v, bits(x)) },
+        r.metricsLog.flatMap(_.get("dangling_mass")).map(m => bits(m.asInstanceOf[Double])))
+    }
+    assert(runs.head._2.nonEmpty)
+    assert(runs.distinct.size == 1, "ranks or per-round dangling mass differ between runs")
+  }
+
+  test("codegen is stable: no compilations after round 3 of a 20-round PageRank") {
+    graph
+    val compiled = ArrayBuffer.empty[Long]
+    val mat = new ForwardingMaterializer(new LocalMaterializer, Some(1)) {
+      override def note(iter: Int, meta: Map[String, Any]): Unit = {
+        super.note(iter, meta)
+        compiled += CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      }
+    }
+    val r = PageRank.run(graph, PageRankConfig(fixedIters = Some(20)), mat)
+    assert(r.iterations == 20 && compiled.size == 20)
+    assert(compiled.last == compiled(2),
+      s"compilations per round kept growing: ${compiled.mkString(",")}")
+  }
+}

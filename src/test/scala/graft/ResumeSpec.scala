@@ -108,6 +108,41 @@ class ResumeSpec extends SparkSpec {
     assert(linfs.size == 5)
     assert(linfs.last < linfs.head)
     assert(log.drop(1).forall(m => m.contains("dangling_mass") && m.contains("wall_ms")))
+
+    // a fixed-iteration run's rounds carry the same full stats, each round
+    val fixed = new ParquetManifestIO(spark, tmp())
+    PageRank.run(graph, PageRankConfig(fixedIters = Some(4)),
+      new CheckpointMaterializer(fixed, "pagerank"))
+    val rounds = fixed.commitLog("pagerank").drop(1)
+    assert(rounds.size == 4)
+    rounds.foreach { m =>
+      for (k <- Seq("linf", "l1", "dangling_mass", "rank_total", "wall_ms"))
+        assert(m.contains(k), s"iter ${m("iter")} note lacks $k: $m")
+      assert(math.abs(m("rank_total").toString.toDouble - 1.0) < 1e-9)
+    }
+  }
+
+  test("durable fixed-iteration PageRank at width 4: kill after 1 of 3 rounds, resume bit-identical") {
+    val bucket = Some(("vid", 4))
+    def bits(mat: Materializer): Seq[(Long, Long)] =
+      PageRank.run(graph, PageRankConfig(fixedIters = Some(3)), mat)
+        .ranks.orderBy("vid").as[(Long, Double)].collect().toSeq
+        .map { case (v, r) => (v, java.lang.Double.doubleToRawLongBits(r)) }
+    val whole = bits(new CheckpointMaterializer(new ParquetManifestIO(spark, tmp()), "pagerank", bucket))
+
+    val dir = tmp()
+    val killed = new ForwardingMaterializer(
+      new CheckpointMaterializer(new ParquetManifestIO(spark, dir), "pagerank", bucket)) {
+      override def iter(iter: Int, df: org.apache.spark.sql.DataFrame,
+                        meta: Map[String, Any]): org.apache.spark.sql.DataFrame = {
+        if (iter == 2) throw new IllegalStateException("killed")
+        super.iter(iter, df, meta)
+      }
+    }
+    intercept[IllegalStateException](bits(killed))
+    assert(new ParquetManifestIO(spark, dir).latest("pagerank").contains(1))
+    val resumed = bits(new CheckpointMaterializer(new ParquetManifestIO(spark, dir), "pagerank", bucket))
+    assert(resumed == whole)
   }
 
   test("bucketed resume: same ranks AND zero recovery shuffle on the state scan") {
