@@ -391,8 +391,8 @@ object Main {
         val rounds = opts.getOrElse("max-rounds", "8").toInt
         val und = graph.symmetrized.where(F.col("src") =!= F.col("dst"))
         val ms = Mis.run(graph.vertices, und, rounds,
-          materializer(spark, opts, "mis", extraTokens = Seq(s"rounds=$rounds")),
-          sizeHint = math.max(graph.numVertices, graph.numEdges))
+          math.max(graph.numVertices, graph.numEdges),
+          materializer(spark, opts, "mis", extraTokens = Seq(s"rounds=$rounds")))
         write(ms.orderBy("vid"), "mis")
         writeDict()
         val undecided = ms.where(F.col("st") === 0).count()
@@ -404,9 +404,9 @@ object Main {
         val rounds = opts.getOrElse("max-rounds", "6").toInt
         val und = graph.symmetrized.where(F.col("src") =!= F.col("dst"))
         val tr = Truss.run(und, k, rounds,
+          math.max(graph.numVertices, graph.numEdges),
           materializer(spark, opts, "ktruss", bucketCol = "u",
-            extraTokens = Seq(s"k=$k", s"rounds=$rounds")),
-          sizeHint = math.max(graph.numVertices, graph.numEdges))
+            extraTokens = Seq(s"k=$k", s"rounds=$rounds")))
         write(tr.orderBy("u", "v"), "ktruss")
         writeDict()
         println(s"""{"cmd":"ktruss","k":$k,"rounds":$rounds,"edges_kept":${tr.count()},"wall_sec":${(System.nanoTime() - t0) / 1e9}}""")

@@ -30,56 +30,51 @@ final case class CcResult(
 
 object ConnectedComponents {
 
-  /** `packedAdjacency`: consume the symmetrized edges as hub-split
-    * vertex-major arrays (Csr.packAdjacencyKeys) and expand the per-round
-    * label messages through the CsrExpand custom operator (CopyLabel mode)
-    * instead of the row-level join — identical labels, one row per vertex
-    * segment on the join's probe side. */
-  /** `warmStart`: (vid, label) from a PREVIOUS converged run on an
-    * append-only-grown graph (remap via dict keys if ids changed). Valid
-    * because HashMin's fixpoint is the min over init labels reachable in
-    * the component, and with edges only ADDED every prior label is a
-    * member id whose minimum over merged old components equals the new
-    * component minimum. NOT valid after edge/vertex REMOVAL — a prior
-    * label may then name a vertex outside the component; cold-start there.
-    * New vertices init to their own vid. */
+  /** The shared symmetrized edges of CC and LPA, partitioned by src. With
+    * `packedAdjacency` they are hub-split vertex-major arrays
+    * (Csr.packAdjacencyKeys) and the label messages expand through the
+    * CsrExpand custom operator (CopyLabel mode) instead of the row-level
+    * join — identical labels, one row per vertex segment on the probe side. */
+  private[algo] def symEdges(graph: LinkGraph, mat: Materializer,
+                             packedAdjacency: Boolean, packedSegment: Int): DataFrame =
+    if (packedAdjacency)
+      mat.shared("sym_packed", graft.scale.Csr
+        .packAdjacencyKeys(graph.symmetrized, packedSegment)
+        .repartition(F.col("src")), repartitionKeys = Seq("src"),
+        fingerprint = Some(s"segment=$packedSegment"))
+    else mat.shared("sym", graph.symmetrized.repartition(F.col("src")), repartitionKeys = Seq("src"))
+
+  /** `packedAdjacency`: see [[symEdges]]. `warmStart`: (vid, label) from a
+    * PREVIOUS converged run on an append-only-grown graph (remap via dict
+    * keys if ids changed). Valid because HashMin's fixpoint is the min over
+    * init labels reachable in the component, and with edges only ADDED every
+    * prior label is a member id whose minimum over merged old components
+    * equals the new component minimum. NOT valid after edge/vertex REMOVAL —
+    * a prior label may then name a vertex outside the component; cold-start
+    * there. New vertices init to their own vid. */
   def run(graph: LinkGraph, maxRounds: Int = 200,
           mat: Materializer = new LocalMaterializer,
           packedAdjacency: Boolean = false,
           packedSegment: Int = graft.scale.Csr.DefaultSegment,
           warmStart: Option[DataFrame] = None): CcResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark, math.max(graph.numVertices, graph.numEdges))))) {
-      val sym =
-        if (packedAdjacency)
-          mat.shared("sym_packed", graft.scale.Csr
-            .packAdjacencyKeys(graph.symmetrized, packedSegment)
-            .repartition(F.col("src")), repartitionKeys = Seq("src"),
-            fingerprint = Some(s"segment=$packedSegment"))
-        else mat.shared("sym", graph.symmetrized.repartition(F.col("src")), repartitionKeys = Seq("src"))
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
+      val sym = symEdges(graph, mat, packedAdjacency, packedSegment)
 
-      val (startIter, st0) = mat.resume() match {
-        case Some((k, df)) => (k, df.select("vid", "label"))
-        case None =>
-          val base = graph.vertices.repartition(F.col("vid"))
-          val init = warmStart match {
-            case Some(prior) => base
-              .join(prior.select(F.col("vid"), F.col("label").as("warm")), Seq("vid"), "left")
-              .select(F.col("vid"),
-                F.coalesce(F.col("warm"), F.col("vid")).as("label"),
-                F.col("vid").as("prev"))
-            case None =>
-              base.select(F.col("vid"), F.col("vid").as("label"), F.col("vid").as("prev"))
-          }
-          (0, mat.iter(0, init, Map("init" -> true)).select("vid", "label"))
+      def init(): DataFrame = {
+        val base = graph.vertices.repartition(F.col("vid"))
+        warmStart match {
+          case Some(prior) => base
+            .join(prior.select(F.col("vid"), F.col("label").as("warm")), Seq("vid"), "left")
+            .select(F.col("vid"),
+              F.coalesce(F.col("warm"), F.col("vid")).as("label"),
+              F.col("vid").as("prev"))
+          case None =>
+            base.select(F.col("vid"), F.col("vid").as("label"), F.col("vid").as("prev"))
+        }
       }
-      var state = st0
 
-      var round = startIter
-      var changed = -1L
-      while (changed != 0L && round < maxRounds) {
-        round += 1
-        val t0 = System.nanoTime()
+      def step(round: Fixpoint.Round): DataFrame = {
+        val state = round.state
         val joined = sym.join(state.withColumnRenamed("vid", "src"), "src") // no exchange
         val flat =
           if (packedAdjacency) GraftPlans.expandLabels(joined)
@@ -88,24 +83,23 @@ object ConnectedComponents {
           .groupBy("dst")                                     // THE shuffle
           .agg(F.min("label").as("nbr_min"))
           .withColumnRenamed("dst", "vid")
-        val next = state
+        state
           .withColumnRenamed("label", "prev")
           .join(msgs, Seq("vid"), "left")                     // no exchange
           .select(F.col("vid"),
             F.least(F.col("prev"), F.coalesce(F.col("nbr_min"), F.col("prev"))).as("label"),
             F.col("prev"))
-        // the change count is folded by the commit job (graft.plans.FoldStats)
-        val folded = GraftPlans.fold(next,
-          Fold.sum("changed", F.when(F.col("label") < F.col("prev"), 1L).otherwise(0L)))
-        val committed = mat.iter(round, folded.frame, Map.empty)
-        changed = folded.result().long("changed")
-        mat.note(round, Map("changed" -> changed,
-          "wall_ms" -> (System.nanoTime() - t0) / 1000000L))
-        state = committed.select("vid", "label")
       }
-      val out = CcResult(state, round, converged = changed == 0L, mat.log)
-      mat.close()
-      out
+
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "label"),
+        maxRounds = maxRounds,
+        init = () => init(),
+        step = step,
+        stats = Seq(Fold.sum("changed", F.when(F.col("label") < F.col("prev"), 1L).otherwise(0L))),
+        done = (s, _) => s.long("changed") == 0L,
+        note = s => Map("changed" -> s.long("changed"))))
+      CcResult(r.state, r.rounds, converged = r.done, mat.log)
     }
 
   /** Alternating small-star/large-star contraction — Kiveris et al.,
@@ -121,40 +115,28 @@ object ConnectedComponents {
     *
     * Fixpoint = star graphs centered at component minima, so labels equal
     * HashMin's EXACTLY (asserted in StarCcSpec). Convergence test is exact:
-    * equal edge-set cardinality + empty one-sided anti-join (both sides
-    * distinct). Per round: 2 groupBy-min shuffles + distinct — constant
-    * factor above HashMin's single shuffle, paid back logarithmically. */
+    * equal edge-set cardinality + no new edge (both sets distinct), both
+    * folded by the commit job, so a round is one Spark job. Per round:
+    * 2 groupBy-min shuffles + distinct — constant factor above HashMin's
+    * single shuffle, paid back logarithmically. */
   def runStar(graph: LinkGraph, maxRounds: Int = 60,
               mat: Materializer = new LocalMaterializer): CcResult =
-    // width proxy: the contracted edge set starts at O(edges) but vertices
-    // bound its fixpoint size; symmetrized edges/vertex is small on link
-    // graphs, so vertex count is the stable sizing signal here too
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark, math.max(graph.numVertices, graph.numEdges))))) {
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       // This loop's durable state is the contracted EDGE set (u, v) — NOT a
       // per-vertex frame — so a CheckpointMaterializer must bucket on "u"
       // (Main picks the bucket key per algorithm; round-2 verdict bug).
-      // Edge counts are the row counts the commit jobs fold; a resumed edge
-      // set is counted by one run of the same fold.
-      val (startRound, e0, cnt0) = mat.resume() match {
-        case Some((k, df)) =>
-          val st = df.select("u", "v")
-          (k, st, GraftPlans.fold(st).compute().rows)
-        case None =>
-          val init = graph.edges.select(
-              F.greatest(F.col("src"), F.col("dst")).as("u"),
-              F.least(F.col("src"), F.col("dst")).as("v"))
-            .where(F.col("u") =!= F.col("v")).distinct()
-          val folded = GraftPlans.fold(init.repartition(F.col("u")))
-          (0, mat.iter(0, folded.frame, Map("init" -> true)), folded.result().rows)
-      }
-      var e = e0
-      var prevCnt = cnt0
-      var round = startRound
-      var changed = -1L
-      while (changed != 0L && round < maxRounds && prevCnt > 0) {
-        round += 1
-        val t0 = System.nanoTime()
+      // Round 0 is the canonical edge set (u > v): the symmetrized closure
+      // is distinct and holds both directions, so its src > dst half is
+      // every undirected edge once, self-loops dropped. Each round's edges
+      // carry `fresh` (absent from the previous edge set; round 0's all
+      // are) into the commit's fold; the commit holds (u, v) only.
+      def init(): DataFrame = graph.symmetrized.where(F.col("src") > F.col("dst"))
+        .select(F.col("src").as("u"), F.col("dst").as("v"))
+        .repartition(F.col("u"))
+        .withColumn("fresh", F.lit(true))
+
+      def step(round: Fixpoint.Round): DataFrame = {
+        val e = round.state
         val sym = e.select(F.col("u"), F.col("v"))
           .union(e.select(F.col("v").as("u"), F.col("u").as("v")))
         val lsMins = sym.groupBy("u").agg(F.min("v").as("mn"))
@@ -167,30 +149,35 @@ object ConnectedComponents {
           .select(F.col("v").as("u"), F.col("m").as("v"))
           .union(ssMins.select(F.col("u"), F.col("m").as("v")))
           .distinct()
-        // change test BEFORE commit: mat.iter unpersists e's blocks, so e
-        // must not be touched afterwards. ss ⊆ e (anti == 0) ∧ |ss| == |e|
-        // ⇒ sets equal (both distinct) — exact, no hashing shortcut.
-        val anti = ss.join(e, Seq("u", "v"), "left_anti").count()
-        val folded = GraftPlans.fold(ss.repartition(F.col("u")))
-        val committed = mat.iter(round, folded.frame, Map.empty)
-        val cnt = folded.result().rows
-        changed = if (cnt == prevCnt && anti == 0L) 0L else 1L
-        mat.note(round, Map("edges" -> cnt,
-          "wall_ms" -> (System.nanoTime() - t0) / 1000000L))
-        prevCnt = cnt
-        e = committed
+        // The change test rides the commit: each new edge is looked up in
+        // the previous set e, which the materializer frees only after this
+        // commit. Both sets are distinct, so no fresh edge and |ss| == |e|
+        // means ss == e: exact, no hashing shortcut.
+        ss.repartition(F.col("u"))
+          .join(e.withColumn("seen", F.lit(true)), Seq("u", "v"), "left")
+          .select(F.col("u"), F.col("v"), F.col("seen").isNull.as("fresh"))
       }
+
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("u", "v"),
+        maxRounds = maxRounds,
+        init = () => init(),
+        step = step,
+        stats = Seq(Fold.sum("fresh", F.when(F.col("fresh"), 1L).otherwise(0L))),
+        done = (s, last) =>
+          s.rows == 0L || last.exists(_.rows == s.rows) && s.long("fresh") == 0L,
+        note = s => Map("edges" -> s.rows),
+        startStats = true,
+        // a resumed start is only tested for emptiness; its freshness is moot
+        resumed = _.withColumn("fresh", F.lit(false))))
       // star edges point member -> center; centers/isolated label themselves
-      val converged = changed == 0L || prevCnt == 0
-      if (!converged)
+      if (!r.done)
         Console.err.println(s"[graft] star CC hit maxRounds=$maxRounds before " +
           "the star fixpoint: labels below may not be component minima " +
           "(CcResult.converged = false)")
       val labels = graph.vertices
-        .join(e.groupBy(F.col("u").as("vid")).agg(F.min("v").as("lbl")), Seq("vid"), "left")
+        .join(r.state.groupBy(F.col("u").as("vid")).agg(F.min("v").as("lbl")), Seq("vid"), "left")
         .select(F.col("vid"), F.coalesce(F.col("lbl"), F.col("vid")).as("label"))
-      val out = CcResult(labels, round, converged, mat.log)
-      mat.close()
-      out
+      CcResult(labels, r.rounds, r.done, mat.log)
     }
 }

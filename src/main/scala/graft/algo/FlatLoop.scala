@@ -2,9 +2,9 @@ package graft.algo
 
 import org.apache.spark.sql.DataFrame
 
-/** Slot-tracked flat checkpointing for multi-frame iterative loops
-  * (SCC, k-core): every loop frame goes through FlatCheckpoint (plain
-  * `localCheckpoint` chains origin stats across rounds — see
+/** Slot-tracked flat checkpointing for multi-frame iterative loops (SCC,
+  * BFS, SSSP, betweenness): every loop frame goes through FlatCheckpoint
+  * (plain `localCheckpoint` chains origin stats across rounds — see
   * org.apache.spark.sql.graft.FlatCheckpoint), and block reclamation is
   * GENERATIONAL: `ckpt(slot, df)` records the new blocks as the slot's
   * latest generation; `sweep(slots*)` — called at the END of a round, when

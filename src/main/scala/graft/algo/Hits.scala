@@ -1,8 +1,10 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.graft.FlatCheckpoint
 
 import graft.graph.LinkGraph
+import graft.plans.Fold
 
 /** Truncated HITS (hubs and authorities, Kleinberg JACM '99) — SURVEY.md
   * §2.10 (round 6). Over the distinct directed simple edge set, R rounds
@@ -25,8 +27,7 @@ import graft.graph.LinkGraph
   * variant would renormalize per round (breaking oracle exactness);
   * this estimator keeps the exact contract, like Katz's fixed-R trade.
   *
-  * Durable via [[Materializer]]: each round commits (vid, a, h); resume
-  * continues from the last committed round — the Katz/PageRank contract.
+  * Runs on [[Fixpoint]]: each round commits (vid, a, h).
   *
   * Scale shape: state two doubles per vertex; TWO shuffles per round
   * (one per direction — inherent to the mutual recurrence); work R·|E|.
@@ -36,57 +37,45 @@ object Hits {
   /** Returns (vid, auth, hub), both L1-normalized and rounded to 6dp. */
   def run(graph: LinkGraph, rounds: Int,
           mat: Materializer = new LocalMaterializer): DataFrame =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
-      val fl = new FlatLoop(graph.spark)
-      val de = mat.shared("de",
-        graph.directed.where(F.col("src") =!= F.col("dst"))
-          .repartition(F.col("src")), repartitionKeys = Seq("src"))
-      val (start, s0) = mat.resume() match {
-        case Some((i, df)) => (i, fl.ckpt("s", df.select("vid", "a", "h")))
-        case None =>
-          val init = graph.vertices.select(F.col("vid"),
-            F.lit(1.0).as("a"), F.lit(1.0).as("h"))
-          (0, fl.ckpt("s",
-            mat.iter(0, init.repartition(F.col("vid")), Map("init" -> true))))
-      }
-      var s = s0
-      var t = start
-      while (t < rounds) {
-        t += 1
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
+      val de = Neighborhood.directedEdges(graph, mat, reverse = false, fingerprint = None)
+      def step(round: Fixpoint.Round): DataFrame = {
         // authorities from previous hubs: one edges⋈state join, sum by dst
-        val aAgg = s.select(F.col("vid"), F.col("h"))
+        val aAgg = round.state.select(F.col("vid"), F.col("h"))
           .join(de.withColumnRenamed("src", "vid"), "vid")
           .groupBy(F.col("dst").as("vid")).agg(F.sum("h").as("na"))
         // hubs from the NEW authorities: sum over out-neighbors. Consumes
         // aAgg DIRECTLY — a vertex absent from aAgg has a = 0 and
         // contributes nothing to any hub sum, so padding the zeros in
-        // before this join (the previous shape's full-vertex aNew frame)
-        // only added a second vertices join per round for identical sums.
+        // before this join would only add a second vertices join per round
+        // for identical sums.
         val hAgg = aAgg
           .join(de.withColumnRenamed("dst", "vid")
             .withColumnRenamed("src", "osrc"), "vid")
           .groupBy(F.col("osrc").as("vid")).agg(F.sum("na").as("nh"))
-        val next = graph.vertices
+        graph.vertices
           .join(aAgg, Seq("vid"), "left")
           .join(hAgg, Seq("vid"), "left")
           .select(F.col("vid"),
             F.coalesce(F.col("na"), F.lit(0.0)).as("a"),
             F.coalesce(F.col("nh"), F.lit(0.0)).as("h"))
-        s = fl.ckpt("s", mat.iter(t, next, Map.empty))
-        fl.sweep("s")
       }
+      // The normalizing sums ride every commit; integer-valued doubles sum
+      // exactly in any order, so they equal an agg over the final state.
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "a", "h"),
+        maxRounds = rounds,
+        init = () => graph.vertices.select(F.col("vid"),
+          F.lit(1.0).as("a"), F.lit(1.0).as("h")).repartition(F.col("vid")),
+        step = step,
+        stats = Seq(Fold.sum("sa", F.col("a")), Fold.sum("sh", F.col("h"))),
+        startStats = true))
       // ONE normalization at the end: integer sums, one division, 6dp
-      val sums = s.agg(F.sum("a").as("sa"), F.sum("h").as("sh")).first()
-      val (sa, sh) = (sums.getDouble(0), sums.getDouble(1))
-      val out = fl.ckpt("result",
-        s.select(F.col("vid"),
+      val (sa, sh) = (r.seen.last._2.double("sa"), r.seen.last._2.double("sh"))
+      FlatCheckpoint.localCheckpoint(
+        r.state.select(F.col("vid"),
           F.round(F.col("a") / (if (sa > 0) sa else 1.0), 6).as("auth"),
           F.round(F.col("h") / (if (sh > 0) sh else 1.0), 6).as("hub"))
           .orderBy("vid"))
-      fl.releaseAll("result")
-      mat.close()
-      out
     }
 }

@@ -4,40 +4,30 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
 
-/** k-core membership by iterative peeling — SURVEY.md §2.10 (round 4;
-  * durable/resumable round 5).
+/** k-core membership by iterative peeling — SURVEY.md §2.10.
   *
   * The k-core of an undirected graph is the maximal subgraph in which every
   * vertex has degree ≥ k. Computed by the classic peel: repeatedly delete
   * vertices whose degree among the SURVIVORS falls below k; the fixpoint is
   * the k-core (deletion order never matters — the k-core is unique).
   *
-  * ==Durable state (round-4 verdict "What's missing #1")==
+  * The committed state is the KEEP set (vid), hash-bucketed on `vid`. Keep
+  * sets only shrink, so the surviving edges are a pure function of it,
+  * alive_r = sym ∩ (keep_r × keep_r), and so is keep_{r+1}: a resumed run
+  * continues the peel exactly where the killed run stopped (ResumeSpec).
   *
-  * The committed per-round state is the KEEP set (vid) — the survivors of
-  * round r — because the surviving edge set is a pure function of it:
-  * alive_r = sym ∩ (keep_r × keep_r). Keep sets are monotone decreasing
-  * (every endpoint of a surviving edge passed the previous degree test), so
-  * the identity holds inductively and a resumed run rebuilds alive with two
-  * semi-joins against the shared symmetrized-edge invariant, then continues
-  * the peel EXACTLY where the killed run stopped: keep_{r+1} is a pure
-  * function of alive_r, so resumed and uninterrupted runs produce
-  * bit-identical membership (ResumeSpec). Commits are hash-bucketed on
-  * `vid` like every vertex-state loop.
-  *
-  * Execution shape per round: degrees of the surviving subgraph are one
-  * hash aggregation over the surviving edge set; the shrink is two
-  * left-semi joins of edges against the surviving vertex set. The edge set
-  * only ever SHRINKS, so per-round cost is monotonically decreasing — at
-  * web scale the first round (full-degree histogram) dominates. Each round
-  * is checkpoint-truncated (SURVEY §4.4) so the loop's plan stays flat.
+  * A round is one job: two semi-joins of the shared `sym` against keep_r,
+  * then one aggregation (degrees). It scans all of `sym` every round; a
+  * checkpointed alive set would scan only the shrinking edges, at one more
+  * job a round. Measured at `local[4]`, k = 3, a 16-round peel (generated
+  * transcript graph plus a 30-rung ladder), medians of 10 runs: 6.5 s vs
+  * 11.0 s with that checkpoint at 67k edges, 10.9 s vs 16.5 s at 334k.
   *
   * Round count is CAPPED at `maxRounds` with early exit on fixpoint
   * (consecutive keep sets equal — monotonicity makes the count comparison
   * exact). The contract is "the surviving set after ≤ maxRounds peels",
-  * which equals the true k-core whenever the peel converges within the cap
-  * and matches the oracle's unrolled CTE chain round for round either way,
-  * the same fixed-round discipline as LPA.
+  * which matches the oracle's unrolled CTE chain round for round, the same
+  * fixed-round discipline as LPA.
   */
 object KCore {
 
@@ -50,10 +40,7 @@ object KCore {
   def run(graph: LinkGraph, k: Int, maxRounds: Int = 8,
           mat: Materializer = new LocalMaterializer,
           sharedSym: Option[DataFrame] = None): KCoreResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
-      val fl = new FlatLoop(graph.spark)
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       // Undirected distinct neighbor pairs, self-loops dropped: degree below
       // is |distinct neighbors|, mirroring the LPA sym frame and the oracle.
       // NOTE: k is run state, not a layout knob — a durable run encodes it
@@ -64,47 +51,29 @@ object KCore {
           graph.symmetrized.where(F.col("src") =!= F.col("dst")))
           .repartition(F.col("src")), repartitionKeys = Seq("src"))
 
-      def restrict(edges: DataFrame, keep: DataFrame): DataFrame = edges
-        .join(keep.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("vid", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst")
+      // survivors: degree within the subgraph alive = sym ∩ (keep × keep)
+      // is ≥ k (sym is a distinct pair set, so count-by-src IS the degree)
+      def step(round: Fixpoint.Round): DataFrame = {
+        val keep = round.state
+        sym
+          .join(keep.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")
+          .join(keep.withColumnRenamed("vid", "dst"), Seq("dst"), "left_semi")
+          .groupBy("src").agg(F.count(F.lit(1)).as("deg"))
+          .where(F.col("deg") >= k).select(F.col("src").as("vid"))
+      }
 
-      val (startRound, keep0, alive0) = mat.resume() match {
-        case Some((r, df)) =>
-          val keep = df.select("vid")
-          (r, keep, fl.ckpt("alive", restrict(sym, keep)))
-        case None =>
-          val committed = mat.iter(0,
-            graph.vertices.repartition(F.col("vid")), Map("init" -> true))
-          (0, committed, fl.ckpt("alive", sym))
-      }
-      var keep = keep0
-      var alive = alive0
-      var nKeep = keep.count()
-      var rounds = startRound
-      var converged = false
-      while (rounds < maxRounds && !converged) {
-        rounds += 1
-        // survivors this round: degree within the current subgraph ≥ k.
-        // (sym is a distinct pair set, so count-by-src IS the degree.)
-        val next = mat.iter(rounds,
-          alive.groupBy("src").agg(F.count(F.lit(1)).as("deg"))
-            .where(F.col("deg") >= k).select(F.col("src").as("vid")),
-          Map("k" -> k))
-        val n = next.count()
-        // keep sets shrink monotonically, so equal count ⇒ equal set ⇒
-        // alive is stable ⇒ every subsequent peel is a no-op
-        converged = n == nKeep
-        nKeep = n
-        keep = next
-        mat.note(rounds, Map("members" -> n))
-        if (!converged)
-          alive = fl.ckpt("alive", restrict(alive, keep)) // lineage barrier (§4.4)
-        fl.sweep("alive")
-      }
-      val out = KCoreResult(keep, rounds, converged)
-      mat.close()
-      out
+      // keep sets shrink monotonically, so an equal count means an equal
+      // set, a stable subgraph, and no-op peels from here on
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid"),
+        maxRounds = maxRounds,
+        init = () => graph.vertices.repartition(F.col("vid")),
+        step = step,
+        done = (s, last) => last.exists(_.rows == s.rows),
+        note = s => Map("members" -> s.rows),
+        meta = Map("k" -> k),
+        startStats = true))
+      KCoreResult(r.state, r.rounds, r.done)
     }
 
   /** (vid, in_core) over the full vertex set — the query surface. */

@@ -1,6 +1,7 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.graft.FlatCheckpoint
 
 import graft.graph.LinkGraph
 
@@ -16,9 +17,7 @@ import graft.graph.LinkGraph
   * so 6dp values carry a theoretical 1-ulp boundary risk between
   * engines (round-5 ADVICE) — held at three scale factors.
   *
-  * Durable via [[Materializer]] (round-5 verdict "What's missing #2"):
-  * each round commits the (vid, c) state; resume continues from the
-  * last committed round — same contract as PageRank's loop.
+  * Runs on [[Fixpoint]]: each round commits the (vid, c) state.
   *
   * Scale shape: state is one double per vertex; per round one shuffle;
   * work R·|E| — the same profile as a fixed-iteration PageRank without
@@ -28,36 +27,21 @@ object Katz {
 
   def run(graph: LinkGraph, alpha: Double, rounds: Int,
           mat: Materializer = new LocalMaterializer): DataFrame =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
-      val fl = new FlatLoop(graph.spark)
-      val de = mat.shared("de",
-        graph.directed.where(F.col("src") =!= F.col("dst"))
-          .repartition(F.col("src")), repartitionKeys = Seq("src"))
-      val (start, c0) = mat.resume() match {
-        case Some((i, df)) => (i, fl.ckpt("c", df.select("vid", "c")))
-        case None =>
-          val init = graph.vertices.select(F.col("vid"), F.lit(0.0).as("c"))
-          (0, fl.ckpt("c",
-            mat.iter(0, init.repartition(F.col("vid")), Map("init" -> true))))
-      }
-      var c = c0
-      var t = start
-      while (t < rounds) {
-        t += 1
-        val agg = c.join(de.withColumnRenamed("src", "vid"), "vid")
-          .groupBy(F.col("dst").as("vid"))
-          .agg((F.lit(alpha) * F.sum(F.col("c") + 1.0)).as("nc"))
-        val next = graph.vertices.join(agg, Seq("vid"), "left")
-          .select(F.col("vid"), F.coalesce(F.col("nc"), F.lit(0.0)).as("c"))
-        c = fl.ckpt("c", mat.iter(t, next, Map.empty))
-        fl.sweep("c")
-      }
-      val out = fl.ckpt("result",
-        c.select(F.col("vid"), F.round(F.col("c"), 6).as("katz")).orderBy("vid"))
-      fl.releaseAll("result")
-      mat.close()
-      out
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
+      val de = Neighborhood.directedEdges(graph, mat, reverse = false, fingerprint = None)
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "c"),
+        maxRounds = rounds,
+        init = () => graph.vertices.select(F.col("vid"), F.lit(0.0).as("c"))
+          .repartition(F.col("vid")),
+        step = round => {
+          val agg = round.state.join(de.withColumnRenamed("src", "vid"), "vid")
+            .groupBy(F.col("dst").as("vid"))
+            .agg((F.lit(alpha) * F.sum(F.col("c") + 1.0)).as("nc"))
+          graph.vertices.join(agg, Seq("vid"), "left")
+            .select(F.col("vid"), F.coalesce(F.col("nc"), F.lit(0.0)).as("c"))
+        }))
+      FlatCheckpoint.localCheckpoint(
+        r.state.select(F.col("vid"), F.round(F.col("c"), 6).as("katz")).orderBy("vid"))
     }
 }

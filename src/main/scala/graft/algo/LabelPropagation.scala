@@ -32,31 +32,11 @@ object LabelPropagation {
           mat: Materializer = new LocalMaterializer,
           packedAdjacency: Boolean = false,
           packedSegment: Int = graft.scale.Csr.DefaultSegment): LpaResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark, math.max(graph.numVertices, graph.numEdges))))) {
-      val sym =
-        if (packedAdjacency)
-          mat.shared("sym_packed", graft.scale.Csr
-            .packAdjacencyKeys(graph.symmetrized, packedSegment)
-            .repartition(F.col("src")), repartitionKeys = Seq("src"),
-            fingerprint = Some(s"segment=$packedSegment"))
-        else mat.shared("sym", graph.symmetrized.repartition(F.col("src")), repartitionKeys = Seq("src"))
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
+      val sym = ConnectedComponents.symEdges(graph, mat, packedAdjacency, packedSegment)
 
-      val (startIter, st0) = mat.resume() match {
-        case Some((k, df)) => (k, df.select("vid", "label"))
-        case None =>
-          val init = graph.vertices
-            .repartition(F.col("vid"))
-            .select(F.col("vid"), F.col("vid").as("label"), F.col("vid").as("prev"))
-          (0, mat.iter(0, init, Map("init" -> true)).select("vid", "label"))
-      }
-      var state = st0
-
-      var round = startIter
-      var changed = -1L
-      while (changed != 0L && round < maxRounds) {
-        round += 1
-        val t0 = System.nanoTime()
+      def step(round: Fixpoint.Round): DataFrame = {
+        val state = round.state
         // Count neighbor labels, then argmax with smallest-label tie-break.
         // Explicit dst-clustered exchange: HashPartitioning(dst) satisfies
         // BOTH groupBy(dst,label) and groupBy(dst), so the round pays one
@@ -73,23 +53,24 @@ object LabelPropagation {
           .groupBy("dst")                                     // no exchange
           .agg(F.max_by(F.col("label"), F.struct(F.col("cnt"), (-F.col("label")).as("nl"))).as("new_label"))
           .withColumnRenamed("dst", "vid")
-        val next = state
+        state
           .withColumnRenamed("label", "prev")
           .join(best, Seq("vid"), "left")                     // no exchange
           .select(F.col("vid"),
             F.coalesce(F.col("new_label"), F.col("prev")).as("label"),
             F.col("prev"))
-        // the change count is folded by the commit job (graft.plans.FoldStats)
-        val folded = GraftPlans.fold(next,
-          Fold.sum("changed", F.when(F.col("label") =!= F.col("prev"), 1L).otherwise(0L)))
-        val committed = mat.iter(round, folded.frame, Map.empty)
-        changed = folded.result().long("changed")
-        mat.note(round, Map("changed" -> changed,
-          "wall_ms" -> (System.nanoTime() - t0) / 1000000L))
-        state = committed.select("vid", "label")
       }
-      val out = LpaResult(state, round, converged = changed == 0L, mat.log)
-      mat.close()
-      out
+
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "label"),
+        maxRounds = maxRounds,
+        init = () => graph.vertices
+          .repartition(F.col("vid"))
+          .select(F.col("vid"), F.col("vid").as("label"), F.col("vid").as("prev")),
+        step = step,
+        stats = Seq(Fold.sum("changed", F.when(F.col("label") =!= F.col("prev"), 1L).otherwise(0L))),
+        done = (s, _) => s.long("changed") == 0L,
+        note = s => Map("changed" -> s.long("changed"))))
+      LpaResult(r.state, r.rounds, converged = r.done, mat.log)
     }
 }

@@ -1,6 +1,9 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.graft.FlatCheckpoint
+
+import graft.plans.Fold
 
 /** Deterministic maximal independent set — SURVEY.md §2.10 (round 6).
   * Local-min rounds over the undirected simple graph (the deterministic
@@ -31,37 +34,22 @@ import org.apache.spark.sql.{DataFrame, functions => F}
   * over the (small) newly-settled set; the undecided frontier only
   * shrinks.
   *
-  * Durable via [[Materializer]]: each round commits (vid, st).
+  * Runs on [[Fixpoint]]: each round commits (vid, st).
   */
 object Mis {
 
   /** @param und symmetric simple adjacency (src, dst), both directions,
     *            no self-loops — the engine's shared `undirected` frame.
+    * @param sizeHint max(vertices, edges): the loop width's sizing signal
     * @return (vid, st) with st 1 = in MIS, 2 = excluded, 0 = undecided
     *         (only when the round cap fires before fixpoint). */
-  def run(vertices: DataFrame, und: DataFrame, rounds: Int,
-          mat: Materializer = new LocalMaterializer,
-          sizeHint: Long = -1L): DataFrame = {
-    val spark = vertices.sparkSession
-    IterativeConf(spark, Some(mat.loopPartitions.getOrElse(
-      if (sizeHint > 0) IterativeConf.adaptivePartitions(spark, sizeHint)
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt))) {
-      val fl = new FlatLoop(spark)
+  def run(vertices: DataFrame, und: DataFrame, rounds: Int, sizeHint: Long,
+          mat: Materializer = new LocalMaterializer): DataFrame =
+    Fixpoint(vertices.sparkSession, mat, sizeHint) { fx =>
       val edges = mat.shared("und", und.repartition(F.col("src")),
         repartitionKeys = Seq("src"))
-      val (start, s0) = mat.resume() match {
-        case Some((i, df)) => (i, fl.ckpt("s", df.select("vid", "st")))
-        case None =>
-          val init = vertices.select(F.col("vid"), F.lit(0).as("st"))
-          (0, fl.ckpt("s",
-            mat.iter(0, init.repartition(F.col("vid")), Map("init" -> true))))
-      }
-      var s = s0
-      var t = start
-      var active = true
-      while (t < rounds && active) {
-        t += 1
-        val undec = s.where(F.col("st") === 0).select("vid")
+      def step(round: Fixpoint.Round): DataFrame = {
+        val undec = round.state.where(F.col("st") === 0).select("vid")
         // min undecided-neighbor vid per undecided vertex (one shuffle)
         val minNb = edges
           .join(undec.withColumnRenamed("vid", "dst"), "dst")
@@ -77,22 +65,22 @@ object Mis {
           .select(F.col("dst").as("vid")).distinct()
           .join(undec, Seq("vid"), "left_semi")
           .join(newIn, Seq("vid"), "left_anti")
-        val next = s
-          .join(newIn.withColumn("in1", F.lit(1)), Seq("vid"), "left")
+        round.state.join(newIn.withColumn("in1", F.lit(1)), Seq("vid"), "left")
           .join(newOut.withColumn("out2", F.lit(2)), Seq("vid"), "left")
           .select(F.col("vid"),
             F.when(F.col("st") =!= 0, F.col("st"))
               .when(F.col("in1").isNotNull, F.lit(1))
               .when(F.col("out2").isNotNull, F.lit(2))
               .otherwise(F.lit(0)).as("st"))
-        s = fl.ckpt("s", mat.iter(t, next, Map.empty))
-        fl.sweep("s")
-        active = s.where(F.col("st") === 0).limit(1).count() > 0
       }
-      val out = fl.ckpt("result", s.orderBy("vid"))
-      fl.releaseAll("result")
-      mat.close()
-      out
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "st"),
+        maxRounds = rounds,
+        init = () => vertices.select(F.col("vid"), F.lit(0).as("st"))
+          .repartition(F.col("vid")),
+        step = step,
+        stats = Seq(Fold.sum("undecided", F.when(F.col("st") === 0, 1L).otherwise(0L))),
+        done = (s, _) => s.long("undecided") == 0L))
+      FlatCheckpoint.localCheckpoint(r.state.orderBy("vid"))
     }
-  }
 }

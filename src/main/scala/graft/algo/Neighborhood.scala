@@ -3,6 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
+import graft.plans.{Fold, FoldResult}
 
 /** Neighborhood function + distance-based centrality — SURVEY.md §2.10
   * (round 5). The neighborhood function N(t) = |{(u, v) : dist(u→v) ≤ t}|
@@ -34,6 +35,16 @@ import graft.graph.LinkGraph
   * stays flat, exactly like the oracle's cumulative sets.
   */
 object Neighborhood {
+
+  /** The shared distinct directed simple edges (src, dst), partitioned by
+    * src; `reverse` flips every edge. */
+  private[algo] def directedEdges(graph: LinkGraph, mat: Materializer, reverse: Boolean,
+                                  fingerprint: Option[String]): DataFrame = {
+    val de = graph.directed.where(F.col("src") =!= F.col("dst"))
+    val flipped = if (reverse) de.select(F.col("dst").as("src"), F.col("src").as("dst")) else de
+    mat.shared("de", flipped.repartition(F.col("src")), repartitionKeys = Seq("src"),
+      fingerprint = fingerprint)
+  }
 
   final case class NhoodResult(
       counts: DataFrame, // (t: int, pairs: long) — exact; est double for HB
@@ -75,12 +86,7 @@ object Neighborhood {
       IterativeConf.adaptivePartitions(graph.spark,
         math.max(graph.numVertices, graph.numEdges))))) {
       val fl = new FlatLoop(graph.spark)
-      val de0 = graph.directed.where(F.col("src") =!= F.col("dst"))
-      val de = if (reverse)
-        de0.select(F.col("dst").as("src"), F.col("src").as("dst")) else de0
-      val edges = mat.shared("de", de.repartition(F.col("src")),
-        repartitionKeys = Seq("src"),
-        fingerprint = Some(s"reverse=$reverse"))
+      val edges = directedEdges(graph, mat, reverse, Some(s"reverse=$reverse"))
 
       val (start, parts0, frontier0) = mat.resumeSlices() match {
         case Nil =>
@@ -175,52 +181,24 @@ object Neighborhood {
   def hyperball(graph: LinkGraph, maxT: Int, lgK: Int = 12,
                 mat: Materializer = new LocalMaterializer,
                 reverse: Boolean = false): NhoodResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val spark = graph.spark
       import spark.implicits._
-      val fl = new FlatLoop(spark)
       // messages flow src→dst: dst's ball absorbs src's ball (dist(o→dst)
       // ≤ dist(o→src) + 1), so partition the shared edges by the probe key
-      val de0 = graph.directed.where(F.col("src") =!= F.col("dst"))
-      val de = if (reverse)
-        de0.select(F.col("dst").as("src"), F.col("src").as("dst")) else de0
-      val edges = mat.shared("de", de.repartition(F.col("src")),
-        repartitionKeys = Seq("src"),
-        fingerprint = Some(s"lgK=$lgK;reverse=$reverse"))
+      val edges = directedEdges(graph, mat, reverse, Some(s"lgK=$lgK;reverse=$reverse"))
 
-      val stateCols = Seq("vid", "sk", "est", "hacc", "sacc", "ecc_t")
-      // hll_sketch_estimate returns a rounded LONG; keep the double contract
-      def globalEst(state: DataFrame): Double =
-        state.agg(F.sum(F.col("est"))).first().getDouble(0)
+      // ball(v, 0) = {v}: one single-element sketch per vertex
+      def init(): DataFrame = graph.vertices.groupBy("vid")
+        .agg(F.hll_sketch_agg(F.col("vid"), F.lit(lgK)).as("sk"))
+        .select(F.col("vid"), F.col("sk"),
+          F.hll_sketch_estimate(F.col("sk")).cast("double").as("est"),
+          F.lit(0.0).as("hacc"), F.lit(0.0).as("sacc"),
+          F.lit(0).as("ecc_t"))
+        .repartition(F.col("vid"))
 
-      val (start, st0, est0) = mat.resume() match {
-        case Some((t, df)) =>
-          val s = fl.ckpt("state", df.select(stateCols.map(F.col): _*))
-          (t, s, globalEst(s))
-        case None =>
-          // ball(v, 0) = {v}: one single-element sketch per vertex
-          val init = graph.vertices.groupBy("vid")
-            .agg(F.hll_sketch_agg(F.col("vid"), F.lit(lgK)).as("sk"))
-            .select(F.col("vid"), F.col("sk"),
-              F.hll_sketch_estimate(F.col("sk")).cast("double").as("est"),
-              F.lit(0.0).as("hacc"), F.lit(0.0).as("sacc"),
-              F.lit(0).as("ecc_t"))
-          val s = fl.ckpt("state",
-            mat.iter(0, init.repartition(F.col("vid")), Map("init" -> true)))
-          val e0 = globalEst(s)
-          mat.note(0, Map("est_pairs" -> e0))
-          (0, s, e0)
-      }
-      var state = st0
-      var t = start
-      val ests = scala.collection.mutable.Map.empty[Int, Double]
-      ests(t) = est0
-      var last = est0
-      var flatRounds = 0
-      while (t < maxT && flatRounds < 2) {
-        t += 1
+      def step(round: Fixpoint.Round): DataFrame = {
+        val (t, state) = (round.n, round.state)
         val msgs = edges.join(
             state.select(F.col("vid").as("src"), F.col("sk")), "src")
           .select(F.col("dst").as("vid"), F.col("sk"))
@@ -238,31 +216,42 @@ object Neighborhood {
           F.max("sacc").as("sacc0"), F.max("ecc_t").as("ecc0"))
         val cur = F.hll_sketch_estimate(F.col("sk")).cast("double")
         val delta = F.greatest(cur - F.col("prev_est"), F.lit(0.0))
-        val next = agg.select(F.col("vid"), F.col("sk"),
+        agg.select(F.col("vid"), F.col("sk"),
           cur.as("est"),
           (F.col("hacc0") + delta / t).as("hacc"),
           (F.col("sacc0") + delta * t).as("sacc"),
           F.when(delta > 0, F.lit(t)).otherwise(F.col("ecc0")).as("ecc_t"))
-        val committed = mat.iter(t, next, Map.empty)
-        state = fl.ckpt("state", committed)
-        val est = globalEst(state)
-        mat.note(t, Map("est_pairs" -> est))
-        // sketches are monotone, but the ROUNDED global estimate can
-        // plateau for a round while registers still grow — require two
-        // consecutive flat rounds before declaring saturation
-        flatRounds = if (est > last) 0 else flatRounds + 1
-        ests(t) = est; last = est
-        fl.sweep("state")
       }
+
+      var flatRounds = 0 // saturation: two consecutive flat rounds
+      def saturated(s: FoldResult, last: Option[FoldResult]): Boolean =
+        last.exists { l =>
+          flatRounds = if (s.double("est") > l.double("est")) 0 else flatRounds + 1
+          flatRounds >= 2
+        }
+
+      // N(t) is the folded sum of the per-vertex estimates: hll_sketch_estimate
+      // rounds to a whole number, so the sum is exact in any merge order
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "sk", "est", "hacc", "sacc", "ecc_t"),
+        maxRounds = maxT,
+        init = () => init(),
+        step = step,
+        stats = Seq(Fold.sum("est", F.col("est"))),
+        done = saturated,
+        note = s => Map("est_pairs" -> s.double("est")),
+        startStats = true,
+        noteStart = true))
       // Rounds before a RESUME point come from the durable ledger's
       // est_pairs notes; rounds after the early-exit stay flat at the
       // saturated estimate.
       val noted = mat.log.flatMap(m =>
         for (i <- m.get("iter"); e <- m.get("est_pairs"))
           yield (i.toString.toInt, e.toString.toDouble)).toMap
-      val known = noted ++ ests
+      val known = noted ++ r.seen.map { case (i, s) => i -> s.double("est") }
+      val last = r.seen.last._2.double("est")
       val rows = (0 to maxT).map(i => (i, known.getOrElse(i, last))).toSeq
-      val perVertex = state.select(F.col("vid"),
+      val perVertex = r.state.select(F.col("vid"),
         F.col("est").as("reached_est"),
         F.round(F.col("hacc"), 6).as("harmonic_est"),
         F.col("sacc").as("sumdist_est"),
@@ -270,10 +259,8 @@ object Neighborhood {
           (F.col("est") - 1.0) / F.col("sacc")).otherwise(F.lit(0.0)), 6)
           .as("closeness_est"),
         F.col("ecc_t").as("ecc_est"))
-      val out = NhoodResult(rows.toDF("t", "est_pairs").orderBy("t"), None, t,
+      NhoodResult(rows.toDF("t", "est_pairs").orderBy("t"), None, r.rounds,
         Some(perVertex))
-      mat.close()
-      out
     }
 
   /** q-effective diameter from a (t, pairs) frame: the smallest t with

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
-import graft.plans.{Fold, FoldResult, GraftPlans}
+import graft.plans.{Fold, GraftPlans}
 import graft.scale.Csr
 
 /** PageRank — SURVEY.md §2.10. Classic normalized power iteration:
@@ -74,8 +74,7 @@ object PageRank {
           mat: Materializer = new LocalMaterializer,
           warmStart: Option[DataFrame] = None,
           teleport: Option[DataFrame] = None): PageRankResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark, math.max(graph.numVertices, graph.numEdges))))) {
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val d = cfg.damping
       val n = graph.numVertices.toDouble
 
@@ -145,8 +144,6 @@ object PageRank {
           mat.shared("em", emRows.repartition(F.col("src")),
             repartitionKeys = Seq("src"), fingerprint = layoutFp)
 
-      val maxIters = cfg.fixedIters.getOrElse(cfg.maxIters)
-
       // Every commit folds its round's statistics in the same job
       // (graft.plans.FoldStats): linf gates tolerance runs, the dangling
       // mass feeds the next round, and each round's note records all four.
@@ -157,43 +154,28 @@ object PageRank {
         Fold.sum("l1", F.abs(F.col("rank") - F.col("prev"))),
         Fold.sum("dangling_mass", F.when(!F.col("has_out"), F.col("rank")).otherwise(0.0)),
         Fold.sum("rank_total", F.col("rank")))
-      def commit(k: Int, df: DataFrame, meta: Map[String, Any]): (DataFrame, FoldResult) = {
-        val folded = GraftPlans.fold(df, stats: _*)
-        (mat.iter(k, folded.frame, meta), folded.result())
-      }
 
-      // Resume (BASELINE.json:6 "resumable mid-iteration"), warm start
-      // from a prior run's ranks, or cold start at 1/N. A resumed state's
-      // stats come from one run of the same fold over it.
-      val (startIter, full0, stats0) = mat.resume() match {
-        case Some((k, df)) =>
-          val st = df.select("vid", "rank", "prev", "has_out")
-          (k, st, GraftPlans.fold(st, stats: _*).compute())
-        case None =>
-          // Cold-start vector: uniform 1/N globally, or the teleport vector
-          // itself when personalized (unit mass over the seed set).
-          val coldRank: org.apache.spark.sql.Column =
-            if (teleport.isDefined) F.col("tele") else F.lit(1.0 / n)
-          val init = warmStart match {
-            case Some(prior) =>
-              val filled = vmeta
-                .join(prior.select(F.col("vid"), F.col("rank").as("warm")), Seq("vid"), "left")
-                .select(F.col("vid"),
-                  F.coalesce(F.col("warm"), coldRank).as("r0"), F.col("has_out"))
-              // renormalize to unit mass (vertex set may have changed)
-              val mass = filled.agg(F.sum("r0")).first().getDouble(0)
-              filled.select(F.col("vid"), (F.col("r0") / F.lit(mass)).as("rank"),
-                F.lit(0.0).as("prev"), F.col("has_out"))
-            case None =>
-              vmeta.select(F.col("vid"), coldRank.as("rank"),
-                F.lit(0.0).as("prev"), F.col("has_out"))
-          }
-          val (committed, s0) = commit(0, init, Map("init" -> true))
-          (0, committed, s0)
+      // Warm start from a prior run's ranks, or cold start at 1/N.
+      def init(): DataFrame = {
+        // Cold-start vector: uniform 1/N globally, or the teleport vector
+        // itself when personalized (unit mass over the seed set).
+        val coldRank: org.apache.spark.sql.Column =
+          if (teleport.isDefined) F.col("tele") else F.lit(1.0 / n)
+        warmStart match {
+          case Some(prior) =>
+            val filled = vmeta
+              .join(prior.select(F.col("vid"), F.col("rank").as("warm")), Seq("vid"), "left")
+              .select(F.col("vid"),
+                F.coalesce(F.col("warm"), coldRank).as("r0"), F.col("has_out"))
+            // renormalize to unit mass (vertex set may have changed)
+            val mass = filled.agg(F.sum("r0")).first().getDouble(0)
+            filled.select(F.col("vid"), (F.col("r0") / F.lit(mass)).as("rank"),
+              F.lit(0.0).as("prev"), F.col("has_out"))
+          case None =>
+            vmeta.select(F.col("vid"), coldRank.as("rank"),
+              F.lit(0.0).as("prev"), F.col("has_out"))
+        }
       }
-      var full = full0 // the committed frame incl. prev/has_out
-      def state = full.select("vid", "rank")
-      var dangling = stats0.double("dangling_mass")
 
       def messages(state: DataFrame): DataFrame = {
         val st = state.withColumnRenamed("vid", "src")
@@ -211,18 +193,15 @@ object PageRank {
           .withColumnRenamed("dst", "vid")
       }
 
-      var iter = startIter
-      var converged = false
-      while (iter < maxIters && !converged) {
-        iter += 1
-        val t0 = System.nanoTime()
+      def step(round: Fixpoint.Round): DataFrame = {
+        val state = round.state.select("vid", "rank")
         val msgs = messages(state)
         // The round's dangling mass enters as a zero-argument UDF, not a
         // literal or a broadcast row: the generated code reads the value
         // through a reference object, so the plan text and the codegen
         // cache key are the same in every round (a literal would force a
         // Janino recompile per round; a broadcast costs a job per round).
-        val mass = dangling
+        val mass = round.last.get.double("dangling_mass")
         val dangMass = F.udf(() => mass).withName("dang_mass")()
         // Base-term: global runs keep the ORIGINAL expression tree (so
         // uniform-PageRank results stay bit-identical run-to-run); the
@@ -235,7 +214,7 @@ object PageRank {
           else
             F.lit((1.0 - d) / n) +
               F.lit(d) * (F.coalesce(F.col("msum"), F.lit(0.0)) + dangMass / F.lit(n))
-        val next = vmeta
+        vmeta
           .join(msgs, Seq("vid"), "left")                     // no exchange
           .join(state.withColumnRenamed("rank", "prev"), "vid") // no exchange
           .select(
@@ -243,15 +222,21 @@ object PageRank {
             rankExpr.as("rank"),
             F.col("prev"),
             F.col("has_out"))
-        val (committed, s) = commit(iter, next, Map.empty)
-        dangling = s.double("dangling_mass")
-        mat.note(iter, s.values + ("wall_ms" -> (System.nanoTime() - t0) / 1000000L))
-        // fixed-iteration (oracle) runs go exactly fixedIters rounds
-        converged = cfg.fixedIters.isEmpty && s.double("linf") < cfg.tol
-        full = committed
       }
-      val out = PageRankResult(state, iter, converged, mat.log)
-      mat.close()
-      out
+
+      // The committed frame carries prev and has_out for the stats.
+      // Fixed-iteration (oracle) runs go exactly fixedIters rounds; a start
+      // state never counts as converged.
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("vid", "rank", "prev", "has_out"),
+        maxRounds = cfg.fixedIters.getOrElse(cfg.maxIters),
+        init = () => init(),
+        step = step,
+        stats = stats,
+        done = (s, last) =>
+          last.isDefined && cfg.fixedIters.isEmpty && s.double("linf") < cfg.tol,
+        note = _.values,
+        startStats = true))
+      PageRankResult(r.state.select("vid", "rank"), r.rounds, r.done, mat.log)
     }
 }

@@ -249,8 +249,7 @@ object GraphQueries {
 
     // Truncated HITS: integer alternating-walk counts (exact under any
     // summation order) normalized ONCE at the end — Hits scaladoc.
-    "g_hits" -> ((s, d) => Caches.memo(s, d, "hits")(
-      FlatCheckpoint.localCheckpoint(Hits.run(graph(s, d), HitsRounds)))),
+    "g_hits" -> ((s, d) => Caches.memo(s, d, "hits")(Hits.run(graph(s, d), HitsRounds))),
 
     // k-truss decomposition over the shared undirected frame: surviving
     // canonical edges with fixpoint support (Truss scaladoc — monotone
@@ -258,9 +257,7 @@ object GraphQueries {
     "g_ktruss" -> ((s, d) => Caches.memo(s, d, "ktruss") {
       val g = graph(s, d)
       val (und, _) = undirected(s, d)
-      FlatCheckpoint.localCheckpoint(
-        Truss.run(und, KTrussK, KTrussRounds,
-          sizeHint = math.max(g.numVertices, g.numEdges)))
+      Truss.run(und, KTrussK, KTrussRounds, math.max(g.numVertices, g.numEdges))
     }),
 
     // Deterministic local-min MIS over the shared undirected frame,
@@ -268,9 +265,7 @@ object GraphQueries {
     "g_mis" -> ((s, d) => Caches.memo(s, d, "mis") {
       val g = graph(s, d)
       val (und, _) = undirected(s, d)
-      FlatCheckpoint.localCheckpoint(
-        Mis.run(g.vertices, und, MisRounds,
-          sizeHint = math.max(g.numVertices, g.numEdges)))
+      Mis.run(g.vertices, und, MisRounds, math.max(g.numVertices, g.numEdges))
     }),
 
     "g_lpa" -> ((s, d) =>

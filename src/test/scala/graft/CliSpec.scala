@@ -176,7 +176,10 @@ class CliSpec extends SparkSpec {
     val cli = spark.read.parquet(s"$out/mis").orderBy("vid")
       .as[(Long, Int)].collect().toSeq
     val und = graph.symmetrized.where(F2.col("src") =!= F2.col("dst"))
-    val api = graft.algo.Mis.run(graph.vertices, und, 8)
+    // the CLI sizes this graph at width 1; the API run is pinned at 4
+    val api = graft.algo.Mis.run(graph.vertices, und, 8,
+      math.max(graph.numVertices, graph.numEdges),
+      new ForwardingMaterializer(new graft.algo.LocalMaterializer, Some(4)))
       .orderBy("vid").as[(Long, Int)].collect().toSeq
     assert(cli == api && cli.nonEmpty)
     // a fixpoint run leaves nothing undecided on this fixture
@@ -195,7 +198,8 @@ class CliSpec extends SparkSpec {
       .as[(Long, Long, Long)].collect().toSeq
     val eg = GraphBuilder.fromEvents(spark.read.parquet(events))
     val und = eg.symmetrized.where(F2.col("src") =!= F2.col("dst"))
-    val api = graft.algo.Truss.run(und, 4, 10)
+    val api = graft.algo.Truss.run(und, 4, 10, math.max(eg.numVertices, eg.numEdges),
+      new ForwardingMaterializer(new graft.algo.LocalMaterializer, Some(4)))
       .as[(Long, Long, Long)].collect().toSeq
     assert(cli == api && cli.nonEmpty)
     // every surviving edge sits in >= 2 triangles of the survivors (k=4)

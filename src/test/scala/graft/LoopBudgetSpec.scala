@@ -34,7 +34,7 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     val g = GraphBuilder.fromTranscripts(
       TranscriptGen.transcripts(spark, nConvs = 40, seed = 11).toDF())
     // the graph's own memos are built here, not charged to a loop
-    g.numVertices; g.numEdges; g.symmetrized
+    g.numVertices; g.numEdges; g.symmetrized; g.directed
     g
   }
 
@@ -47,10 +47,16 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.sparkContext.removeSparkListener(counter)
 
-  /** Charges the jobs started inside `shared` calls to the invariants. */
+  /** Charges the jobs started inside `shared` calls to the invariants and
+    * counts the commits (init + one a round). */
   private final class Budgeted(width: Int)
       extends ForwardingMaterializer(new LocalMaterializer, Some(width)) {
     var sharedJobs = 0L
+    var commits = 0L
+    override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
+      commits += 1
+      super.iter(iter, df, meta)
+    }
     override def shared(name: String, df: DataFrame, repartitionKeys: Seq[String],
                         fingerprint: Option[String]): DataFrame = {
       val j0 = jobs
@@ -80,6 +86,35 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
       val (used, allowed) = budget(run)
       assert(used <= allowed, s"$name ran $used jobs, budget $allowed")
     }
+  }
+
+  test("job budget at width 1: Katz, HITS, MIS, k-core, k-truss, HyperBall, star CC") {
+    // A loop that returns a sorted frame flat-checkpoints it after the
+    // loop: one job at width 1 (a single range partition needs no sample).
+    val sortedTail = 1
+    lazy val und = graph.symmetrized.where(F.col("src") =!= F.col("dst"))
+    lazy val hint = math.max(graph.numVertices, graph.numEdges)
+    val cases = Seq[(String, Int, Materializer => Any)](
+      ("katz", sortedTail, m => Katz.run(graph, 0.1, 10, m)),
+      ("hits", sortedTail, m => Hits.run(graph, 10, m)),
+      ("mis", sortedTail, m => Mis.run(graph.vertices, und, 8, sizeHint = hint, mat = m)),
+      ("k-core", 0, m => KCore.run(graph, 2, mat = m)),
+      ("k-truss", sortedTail, m => Truss.run(und, 3, 6, sizeHint = hint, mat = m)),
+      ("hyperball", 0, m => Neighborhood.hyperball(graph, 10, mat = m)),
+      ("star cc", 0, m => ConnectedComponents.runStar(graph, mat = m)))
+    val over = cases.flatMap { case (name, tail, run) =>
+      graph; und; hint
+      val mat = new Budgeted(1)
+      val j0 = jobs
+      run(mat)
+      val used = jobs - j0
+      val allowed = mat.sharedJobs + mat.commits + tail
+      assert(mat.commits > 1, s"$name ran no round")
+      if (used <= allowed) None
+      else Some(s"$name ran $used jobs, budget $allowed " +
+        s"(shared ${mat.sharedJobs} + ${mat.commits} commits + tail $tail)")
+    }
+    assert(over.isEmpty, over.mkString("; "))
   }
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
