@@ -75,7 +75,7 @@ object ConnectedComponents {
 
       def step(round: Fixpoint.Round): DataFrame = {
         val state = round.state
-        val joined = sym.join(state.withColumnRenamed("vid", "src"), "src") // no exchange
+        val joined = sym.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
         val flat =
           if (packedAdjacency) GraftPlans.expandLabels(joined)
           else joined.select(F.col("dst"), F.col("label"))
@@ -85,7 +85,7 @@ object ConnectedComponents {
           .withColumnRenamed("dst", "vid")
         state
           .withColumnRenamed("label", "prev")
-          .join(msgs, Seq("vid"), "left")                     // no exchange
+          .join(msgs.hint("shuffle_hash"), Seq("vid"), "left") // no exchange
           .select(F.col("vid"),
             F.least(F.col("prev"), F.coalesce(F.col("nbr_min"), F.col("prev"))).as("label"),
             F.col("prev"))

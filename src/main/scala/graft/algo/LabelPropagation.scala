@@ -41,7 +41,7 @@ object LabelPropagation {
         // Explicit dst-clustered exchange: HashPartitioning(dst) satisfies
         // BOTH groupBy(dst,label) and groupBy(dst), so the round pays one
         // shuffle, not two.
-        val joined = sym.join(state.withColumnRenamed("vid", "src"), "src") // no exchange
+        val joined = sym.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
         val flat =
           if (packedAdjacency) GraftPlans.expandLabels(joined)
           else joined.select(F.col("dst"), F.col("label"))
@@ -55,7 +55,7 @@ object LabelPropagation {
           .withColumnRenamed("dst", "vid")
         state
           .withColumnRenamed("label", "prev")
-          .join(best, Seq("vid"), "left")                     // no exchange
+          .join(best.hint("shuffle_hash"), Seq("vid"), "left") // no exchange
           .select(F.col("vid"),
             F.coalesce(F.col("new_label"), F.col("prev")).as("label"),
             F.col("prev"))

@@ -220,7 +220,7 @@ object Neighborhood {
           cur.as("est"),
           (F.col("hacc0") + delta / t).as("hacc"),
           (F.col("sacc0") + delta * t).as("sacc"),
-          F.when(delta > 0, F.lit(t)).otherwise(F.col("ecc0")).as("ecc_t"))
+          F.when(delta > 0, t).otherwise(F.col("ecc0")).as("ecc_t"))
       }
 
       var flatRounds = 0 // saturation: two consecutive flat rounds

@@ -18,13 +18,18 @@ import graft.scale.Csr
   * Execution shape per iteration (SURVEY.md §3.2/§4.3): transition edges
   * are materialized ONCE hash-partitioned by the join key; state stays
   * hash-partitioned by `vid` across iterations (the materializer preserves
-  * physical partitioning), so the state⋈edges join and both vertex-side
-  * joins need NO exchange — the only shuffle per round is the sum-by-dst
-  * message aggregation (A1). A round is ONE Spark job, the commit: it also
-  * folds the round's linf, l1, dangling mass and rank total
-  * (graft.plans.FoldStats), and the dangling mass rides into the next
-  * round's plan as a scalar, with no driver action or broadcast between
-  * commits. Two edge layouts, identical results:
+  * physical partitioning; at width 1 the one-partition invariants and
+  * state report hash partitioning on their keys), so the state⋈edges join
+  * and both vertex-side joins need NO exchange — the only exchange per
+  * round, at every width, is the sum-by-dst message shuffle (A1), after a
+  * map-side partial sum. The three joins are shuffled-hash joins (hinted:
+  * flat leaves carry no size statistics), building on the state and the
+  * messages, so a round sorts nothing. A round is ONE Spark job, the
+  * commit: it also folds the round's linf, l1, dangling mass and rank
+  * total (graft.plans.FoldStats), and the dangling mass rides into the next
+  * round's plan as a slot-backed column, with no driver action or
+  * broadcast between commits. The round is planned and compiled once per
+  * loop ([[Fixpoint]]). Two edge layouts, identical results:
   *
   *  - plain rows (default): edge-level shuffled-hash join
   *  - `packedAdjacency`: vertex-major CSR arrays (Csr.packAdjacency) — the
@@ -184,9 +189,9 @@ object PageRank {
             // custom whole-operator plan (graft.plans.CsrExpand): one pass
             // over the packed arrays, no CodegenFallback zip_with, no
             // intermediate struct array; still narrow — no exchange
-            GraftPlans.expandMessages(em.join(st, "src"))
+            GraftPlans.expandMessages(em.join(st.hint("shuffle_hash"), "src"))
           else
-            em.join(st, "src")                                // no exchange
+            em.join(st.hint("shuffle_hash"), "src")            // no exchange
               .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))
         contribs.groupBy("dst")                               // THE shuffle
           .agg(F.sum(F.col("c")).as("msum"))
@@ -196,13 +201,11 @@ object PageRank {
       def step(round: Fixpoint.Round): DataFrame = {
         val state = round.state.select("vid", "rank")
         val msgs = messages(state)
-        // The round's dangling mass enters as a zero-argument UDF, not a
-        // literal or a broadcast row: the generated code reads the value
-        // through a reference object, so the plan text and the codegen
-        // cache key are the same in every round (a literal would force a
-        // Janino recompile per round; a broadcast costs a job per round).
-        val mass = round.last.get.double("dangling_mass")
-        val dangMass = F.udf(() => mass).withName("dang_mass")()
+        // The last round's dangling mass is a slot-backed column, not a
+        // literal or a broadcast row: the plan is the same in every round,
+        // so it is planned and compiled once (a literal would change the
+        // plan; a broadcast costs a job per round).
+        val dangMass = round.last("dangling_mass")
         // Base-term: global runs keep the ORIGINAL expression tree (so
         // uniform-PageRank results stay bit-identical run-to-run); the
         // personalized branch substitutes tele(v) for 1/N in both the
@@ -215,8 +218,8 @@ object PageRank {
             F.lit((1.0 - d) / n) +
               F.lit(d) * (F.coalesce(F.col("msum"), F.lit(0.0)) + dangMass / F.lit(n))
         vmeta
-          .join(msgs, Seq("vid"), "left")                     // no exchange
-          .join(state.withColumnRenamed("rank", "prev"), "vid") // no exchange
+          .join(msgs.hint("shuffle_hash"), Seq("vid"), "left") // no exchange
+          .join(state.withColumnRenamed("rank", "prev").hint("shuffle_hash"), "vid")
           .select(
             F.col("vid"),
             rankExpr.as("rank"),

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -82,12 +83,16 @@ case class VectorDot(left: Expression, right: Expression) extends BinaryExpressi
   override def prettyName: String = "vector_dot"
 }
 
-/** Session registration for graft's native expressions. */
+/** Session registration for graft's native expressions: once per
+  * session. A name already registered is left as it is, so the many call
+  * sites cost nothing after the first (and Spark logs no replacement). */
 object GraftFunctions {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vector_dot", exprs => VectorDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
+  def register(spark: SparkSession): Unit = synchronized {
+    val registry = spark.sessionState.functionRegistry
+    def once(name: String, build: Seq[Expression] => Expression): Unit =
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    once("vector_dot", e => VectorDot(e(0), e(1)))
+    once("simhash64", e => SimHash64(e(0)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 /** A built link graph: integer-id weighted edges + the entity dictionary.
+  * GraphBuilder materializes both (flat checkpoints).
   *
   * edges: (src: long, dst: long, kind: int, weight: double) — kind 1 =
   * adjacency, 2 = invocation; parallel raw edges are collapsed into weight.
@@ -102,7 +103,9 @@ object GraphBuilder {
   /** raw: (src_key, dst_key, kind) string edges → dense-id weighted graph.
     * `raw` is consumed three times (key dictionary + two id joins); persist
     * it so the upstream window/scan runs once (spills to disk at scale —
-    * the 100 TB variant would stage it to a table instead). */
+    * the 100 TB variant would stage it to a table instead). The edges are
+    * materialized here, once (a flat checkpoint), so no reader of
+    * `edges` re-runs the dictionary joins; `raw` is freed after. */
   def build(raw0: DataFrame, dictPartitions: Int = 0): LinkGraph = {
     val raw = raw0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keys = raw.select(F.col("src_key").as("key"))
@@ -112,11 +115,12 @@ object GraphBuilder {
     val d = dict.withColumnRenamed("key", "dst_key").withColumnRenamed("vid", "dst")
     // Dictionary joins: vertex-dictionary side is per-entity (≪ edges); AQE
     // turns these into broadcast joins when the dict is small enough.
-    val edges = raw
+    val edges = org.apache.spark.sql.graft.FlatCheckpoint.localCheckpoint(raw
       .join(s, "src_key")
       .join(d, "dst_key")
       .groupBy("src", "dst", "kind")
-      .agg(F.count(F.lit(1)).cast("double").as("weight"))
+      .agg(F.count(F.lit(1)).cast("double").as("weight")))
+    raw.unpersist(blocking = false)
     LinkGraph(edges, dict)
   }
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{CodegenSupport, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.graft.{LoopState, LoopStateExec}
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** CSR message expansion as a WHOLE-OPERATOR custom plan — SURVEY.md §4.6,
@@ -191,11 +192,14 @@ case class CsrExpandExec(override val output: Seq[Attribute], child: SparkPlan,
     copy(child = newChild)
 }
 
-/** Plans [[CsrExpand]] → [[CsrExpandExec]] and [[FoldStats]] → [[FoldStatsExec]]. */
+/** Plans [[CsrExpand]] → [[CsrExpandExec]], [[FoldStats]] → [[FoldStatsExec]]
+  * and a loop's state leaf (LoopState) → LoopStateExec. */
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case CsrExpand(child, output, mode) => CsrExpandExec(output, planLater(child), mode) :: Nil
     case FoldStats(child, folds, sink) => FoldStatsExec(folds, sink, planLater(child)) :: Nil
+    case LoopState(output, slot, partitioning, ordering) =>
+      LoopStateExec(output, slot, partitioning, ordering) :: Nil
     case _ => Nil
   }
 }
@@ -248,7 +252,11 @@ object GraftPlans {
 
   /** `df` with a [[FoldStats]] on top: materializing `frame` (one loop
     * commit) also folds `folds` over its rows, read back with `result()`. */
-  def fold(df: DataFrame, folds: Fold*): Folded = {
+  def fold(df: DataFrame, folds: Fold*): Folded = fold(df, folds, None)
+
+  /** As above, into `sink` when given (a loop's one sink, reset here and
+    * by each round), else into a new registered sink. */
+  def fold(df: DataFrame, folds: Seq[Fold], sink: Option[FoldSink]): Folded = {
     val spark = df.sparkSession
     install(spark)
     // resolve the fold columns against df's plan, aliases dropped
@@ -261,9 +269,15 @@ object GraftPlans {
       require(e.dataType == DoubleType || e.dataType == LongType,
         s"fold ${f.name} must be a double or long column, got ${e.dataType}")
     }
-    val sink = new FoldSink(folds.map(_.name), folds.map(_.kind).toArray,
-      exprs.map(_.dataType == LongType).toArray)
-    spark.sparkContext.register(sink)
-    new Folded(org.apache.spark.sql.graft.PlanBridge.ofRows(spark, FoldStats(child, exprs, sink)), sink)
+    val longs = exprs.map(_.dataType == LongType)
+    val s = sink.getOrElse {
+      val s = new FoldSink(folds.map(_.name), folds.map(_.kind).toArray, longs.toArray)
+      spark.sparkContext.register(s)
+      s
+    }
+    require(s.names == folds.map(_.name) && s.longs.toSeq == longs,
+      s"fold (${folds.map(_.name).mkString(", ")}) does not match its sink")
+    s.reset()
+    new Folded(org.apache.spark.sql.graft.PlanBridge.ofRows(spark, FoldStats(child, exprs, s)), s)
   }
 }

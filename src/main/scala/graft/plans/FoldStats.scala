@@ -98,7 +98,10 @@ final class FoldSink(val names: Seq[String], val kinds: Array[FoldKind], val lon
     c.parts = parts
     c
   }
-  override def reset(): Unit = parts = Map.empty
+  override def reset(): Unit = {
+    parts = Map.empty
+    expected = -1
+  }
   override def add(v: (Int, FoldPartial)): Unit = parts += v
   override def merge(other: AccumulatorV2[(Int, FoldPartial), Map[Int, FoldPartial]]): Unit =
     parts ++= other.value
@@ -178,7 +181,7 @@ case class FoldStatsExec(folds: Seq[Expression], sink: FoldSink, child: SparkPla
 /** A frame whose materialization also folds its statistics. Hand `frame` to
   * the job that materializes the round (a Materializer's `iter`), then read
   * `result()`; or call `compute()` to run the fold as a job of its own. */
-final class Folded(val frame: DataFrame, sink: FoldSink) {
+final class Folded(val frame: DataFrame, val sink: FoldSink) {
   def result(): FoldResult = sink.result()
   def compute(): FoldResult = {
     frame.queryExecution.toRdd.foreach(_ => ())

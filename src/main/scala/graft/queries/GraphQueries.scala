@@ -52,8 +52,7 @@ object GraphQueries {
   // derived edge set.
   def graph(spark: SparkSession, dir: String): LinkGraph =
     Caches.memo(spark, dir, "graph") {
-      val g = GraphBuilder.fromEvents(events(spark, dir))
-      LinkGraph(FlatCheckpoint.localCheckpoint(g.edges), g.dict)
+      GraphBuilder.fromEvents(events(spark, dir))
     }
 
   // g_pagerank and g_top_pagerank share one run. The iterative graph

@@ -3,7 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -29,9 +29,14 @@ import org.apache.spark.sql.execution.LogicalRDD
 object FlatCheckpoint {
 
   /** Eagerly materialize `df`; returns a flat-leaf frame over the
-    * checkpointed blocks. Caller may unpersist via the returned RDD. */
-  def localCheckpoint(df: DataFrame): DataFrame =
-    localCheckpointTracked(df)._1
+    * checkpointed blocks. Caller may unpersist via the returned RDD.
+    * `keys`: the columns `df` was repartitioned by. Spark plans a
+    * one-partition repartition as SinglePartition, which a join does not
+    * accept as co-partitioned with another one-partition side (it shuffles
+    * both); with `keys` such a leaf reports hash partitioning on them into
+    * one partition instead, as it would at any width. */
+  def localCheckpoint(df: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    localCheckpointTracked(df, keys)._1
 
   /** Like [[localCheckpoint]] but also returns THE id of the persistent RDD
     * backing the checkpoint. Loop frameworks that reclaim prior generations
@@ -40,21 +45,24 @@ object FlatCheckpoint {
     * computation (e.g. a shared cache persisted by a lazily-built input on
     * its first action) to the checkpoint, and a later sweep then unpersists
     * the unrelated cache (round-4 ADVICE). */
-  def localCheckpointTracked(df: DataFrame): (DataFrame, Int) = {
-    val session = df.sparkSession.asInstanceOf[CSparkSession]
-    val qe = df.queryExecution
-    val physical = qe.executedPlan
-    val internal: RDD[InternalRow] = qe.toRdd.map(_.copy())
+  def localCheckpointTracked(df: DataFrame, keys: Seq[String] = Nil): (DataFrame, Int) = {
+    val ref = StateRef.of(df).keyedBy(keys)
+    val internal: RDD[InternalRow] = ref.rdd.map(_.copy())
     internal.localCheckpoint()
     internal.count()
-    val logical = LogicalRDD(
-      qe.analyzed.output,
-      internal,
-      pickPartitioning(physical.outputPartitioning, qe.analyzed.output),
-      physical.outputOrdering,
-      isStreaming = false,
-      stream = None)(session, None, None)
-    (CDataset.ofRows(session, logical), internal.id)
+    (flatFrame(df.sparkSession.asInstanceOf[CSparkSession], ref.output, internal,
+      ref.partitioning, ref.ordering), internal.id)
+  }
+
+  /** A frame over `rdd` as a bare LogicalRDD leaf. The leaf is marked
+    * analyzed, so the frame costs no analyzer pass; a flat frame's rows are
+    * read back with no planning at all (StateRef.of). */
+  def flatFrame(session: CSparkSession, output: Seq[Attribute], rdd: RDD[InternalRow],
+                partitioning: Partitioning, ordering: Seq[SortOrder]): DataFrame = {
+    val logical = LogicalRDD(output, rdd, partitioning, ordering,
+      isStreaming = false, stream = None)(session, None, None)
+    logical.setAnalyzed()
+    CDataset.ofRows(session, logical)
   }
 
   /** Mirrors Spark's own Dataset.checkpoint normalization — a
@@ -67,7 +75,7 @@ object FlatCheckpoint {
     * discarding the partitioning and buying an extra state exchange in
     * round 1 of every cold-started loop. The loop key (vid/src/u) is by
     * convention the first output column, so earliest-column wins. */
-  private def pickPartitioning(p: Partitioning, output: Seq[Attribute]): Partitioning =
+  private[graft] def pickPartitioning(p: Partitioning, output: Seq[Attribute]): Partitioning =
     p match {
       case c: PartitioningCollection =>
         def score(m: Partitioning): Int = m match {

@@ -3,6 +3,7 @@ package graft
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.scalatest.BeforeAndAfterAll
@@ -167,5 +168,34 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     assert(r.iterations == 20 && compiled.size == 20)
     assert(compiled.last == compiled(2),
       s"compilations per round kept growing: ${compiled.mkString(",")}")
+  }
+
+  test("a loop plans its round once: no analyzer or optimizer rule runs after round 1") {
+    graph
+    // Catalyst plan-rule runs so far, by RuleExecutor's per-rule metrics.
+    // Expression codegen's canonicalizer is left out: every task that
+    // builds a projection runs it, in this JVM at local[4], and it plans
+    // nothing.
+    val row = """(\S+)\s+\d+ / \d+\s+\d+ / (\d+)\s*""".r
+    def ruleRuns: Long = RuleExecutor.dumpTimeSpent().linesIterator.collect {
+      case row(rule, runs) if !rule.contains("ExpressionCanonicalizer") => runs.toLong
+    }.sum
+    val cases = Seq[(String, Materializer => Int)](
+      "pagerank" -> (m => PageRank.run(graph, PageRankConfig(fixedIters = Some(20)), m).iterations),
+      "hashmin cc" -> (m => ConnectedComponents.run(graph, maxRounds = 20, mat = m).rounds),
+      "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 20, mat = m).rounds))
+    cases.foreach { case (name, run) =>
+      val runs = ArrayBuffer.empty[Long]
+      val mat = new ForwardingMaterializer(new LocalMaterializer, Some(1)) {
+        override def note(iter: Int, meta: Map[String, Any]): Unit = {
+          super.note(iter, meta)
+          runs += ruleRuns
+        }
+      }
+      val rounds = run(mat)
+      assert(rounds >= 3 && runs.size == rounds, s"$name: $rounds rounds, ${runs.size} notes")
+      assert(runs.head > 0 && runs.last == runs.head,
+        s"$name ran Catalyst rules after round 1: ${runs.map(_ - runs.head).mkString(",")}")
+    }
   }
 }

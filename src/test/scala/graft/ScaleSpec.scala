@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.graft.LoopPlanned
 import graft.algo._
 import graft.gen.TranscriptGen
 import graft.graph.GraphBuilder
@@ -126,6 +130,50 @@ class ScaleSpec extends SparkSpec {
       val plan = next.queryExecution.executedPlan.toString
       val shuffles = "Exchange hashpartitioning".r.findAllIn(plan).length
       assert(shuffles == 1, s"expected 1 shuffle, got $shuffles in plan:\n$plan")
+    }
+  }
+
+  /** The round plans the loops started by `run` prepared, one per prepare
+    * (org.apache.spark.sql.graft.LoopPlanned events). */
+  private def roundPlans(run: => Any): Seq[String] = {
+    val plans = ArrayBuffer.empty[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case LoopPlanned(_, plan) => plans.synchronized(plans += plan)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      run
+      org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    plans.toSeq
+  }
+
+  // The real PageRank, HashMin CC and LPA rounds, as the loops plan them:
+  // planned once per loop; shuffled-hash joins on the co-partitioned state,
+  // invariants and messages (no sort-merge join, so no per-round sorts);
+  // and one exchange per round, the message shuffle (LPA's explicit
+  // dst-clustered repartition). At width 1 too: one-partition invariants
+  // and state report hash partitioning on their keys, so the state, the
+  // invariants and the messages stay co-partitioned and the messages keep
+  // their map-side partial aggregation before the exchange.
+  for (width <- Seq(1, 4)) test(s"real round plans at width $width: planned once, " +
+      "shuffled-hash joins, one exchange") {
+    def mat = new ForwardingMaterializer(new LocalMaterializer, Some(width))
+    val loops = Seq[(String, () => Any)](
+      "pagerank" -> (() => PageRank.run(graph, PageRankConfig(fixedIters = Some(3)), mat)),
+      "hashmin cc" -> (() => ConnectedComponents.run(graph, mat = mat)),
+      "lpa" -> (() => LabelPropagation.run(graph, maxRounds = 3, mat = mat)))
+    loops.foreach { case (name, run) =>
+      val plans = roundPlans(run())
+      assert(plans.size == 1, s"$name prepared ${plans.size} round plans:\n${plans.mkString("\n")}")
+      val plan = plans.head
+      assert(!plan.contains("SortMergeJoin"), s"$name round has a sort-merge join:\n$plan")
+      assert("ShuffledHashJoin".r.findAllIn(plan).length >= 2, s"$name round:\n$plan")
+      val exchanges = "Exchange (hashpartitioning|SinglePartition)".r.findAllIn(plan).length
+      assert(exchanges == 1, s"$name round has $exchanges exchanges at width $width:\n$plan")
     }
   }
 }
