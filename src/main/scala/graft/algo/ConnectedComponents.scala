@@ -80,7 +80,7 @@ object ConnectedComponents {
           if (packedAdjacency) GraftPlans.expandLabels(joined)
           else joined.select(F.col("dst"), F.col("label"))
         val msgs = flat
-          .groupBy("dst")                                     // THE shuffle
+          .groupBy("dst")                                     // THE shuffle (width > 1)
           .agg(F.min("label").as("nbr_min"))
           .withColumnRenamed("dst", "vid")
         state
@@ -152,10 +152,12 @@ object ConnectedComponents {
         // The change test rides the commit: each new edge is looked up in
         // the previous set e, which the materializer frees only after this
         // commit. Both sets are distinct, so no fresh edge and |ss| == |e|
-        // means ss == e: exact, no hashing shortcut.
-        ss.repartition(F.col("u"))
-          .join(e.withColumn("seen", F.lit(true)), Seq("u", "v"), "left")
+        // means ss == e: exact, no hashing shortcut. The lookup joins on
+        // (u, v), so the commit is put back on u, as round 0 committed it:
+        // the loop then prepares its round once.
+        ss.join(e.withColumn("seen", F.lit(true)), Seq("u", "v"), "left")
           .select(F.col("u"), F.col("v"), F.col("seen").isNull.as("fresh"))
+          .repartition(F.col("u"))
       }
 
       val r = fx.run(Fixpoint.Loop(

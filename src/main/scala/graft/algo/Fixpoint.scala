@@ -62,7 +62,7 @@ final class Fixpoint private (mat: Materializer) {
       val (leaf, slot) = LoopState.frame(spark, state)
       val round = new PreparedRound(
         keep(fold(step(new Round(leaf, slots, sink))).frame).queryExecution.executedPlan)
-      val out = StateRef(round.output, null, round.partitioning, round.plan.outputOrdering)
+      val out = StateRef(round.output, null, round.partitioning, round.ordering)
         .keyedBy(cols.take(1))
       val widened = state.copy(output = state.output.zip(out.output).map {
         case (a, b) => a.withNullability(a.nullable || b.nullable)
@@ -109,7 +109,7 @@ final class Fixpoint private (mat: Materializer) {
       ref = LoopState.ref(state)
       seen :+= (k -> s)
     }
-    Outcome(state, k, stopped, seen)
+    Outcome(LoopState.handOut(state), k, stopped, seen)
   }
 }
 
@@ -172,7 +172,10 @@ object Fixpoint {
   private final case class Prepared(shape: Any, slot: StateSlot, round: PreparedRound)
 
   /** The last committed state and round; whether the stop test fired
-    * (false when the cap ended the loop); every (round, stats) seen. */
+    * (false when the cap ended the loop); every (round, stats) seen. A
+    * state in one partition reports it as SinglePartition (the loop's own
+    * commits are keyed, LoopState.ref), so a sort after the loop needs no
+    * exchange. */
   final case class Outcome(state: DataFrame, rounds: Int, done: Boolean,
                            seen: Vector[(Int, FoldResult)])
 

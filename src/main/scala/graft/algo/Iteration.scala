@@ -13,7 +13,8 @@ import graft.io.TableIO
   * preserves the physical hash-partitioning of the input plan
   * (localCheckpoint / cache carry `outputPartitioning` through), so a loop
   * that materializes state hash-partitioned by `vid` and its edge invariant
-  * by `src` pays exactly ONE exchange per iteration — the message groupBy.
+  * by `src` pays exactly ONE exchange per iteration — the message groupBy
+  * (none at width 1, where a loop's prepared round drops it).
   * Previous iterations' blocks are freed as the loop advances.
   */
 // Deliberately NOT sealed (round 6): custom backends — an Iceberg-commit
@@ -214,7 +215,12 @@ final class CheckpointMaterializer(io: TableIO, val stateTable: String,
   * side small enough to hash. The PageRank, HashMin CC and LPA rounds
   * therefore hint `shuffle_hash` on their state and message joins, and
   * plan one exchange per round (the message shuffle) with no sort-merge
-  * join at widths 1 and 4 (ScaleSpec). A resumed bucketed state is
+  * join at widths 1 and 4 (ScaleSpec). At width 1 that exchange moves
+  * from one partition into one, and the prepared round drops it
+  * (org.apache.spark.sql.graft.PreparedRound): a round is one stage of
+  * one task, which then holds the hash tables of both former stages (a
+  * huge graph forced to width 1 by `local[1]` needs the memory for both;
+  * the aggregates still spill as before). A resumed bucketed state is
   * planned on its own (Fixpoint reads its rows into the state slot), where
   * Spark would drop the bucketing of a bare scan; kept, the resumed state
   * reports its hash partitioning and the first resumed round needs no

@@ -40,13 +40,14 @@ object LabelPropagation {
         // Count neighbor labels, then argmax with smallest-label tie-break.
         // Explicit dst-clustered exchange: HashPartitioning(dst) satisfies
         // BOTH groupBy(dst,label) and groupBy(dst), so the round pays one
-        // shuffle, not two.
+        // shuffle, not two; at width 1 it pays none (the prepared round
+        // drops a shuffle from one partition into one).
         val joined = sym.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
         val flat =
           if (packedAdjacency) GraftPlans.expandLabels(joined)
           else joined.select(F.col("dst"), F.col("label"))
         val counts = flat
-          .repartition(F.col("dst"))                          // THE shuffle
+          .repartition(F.col("dst"))                          // THE shuffle (width > 1)
           .groupBy("dst", "label")
           .agg(F.count(F.lit(1)).as("cnt"))
         val best = counts

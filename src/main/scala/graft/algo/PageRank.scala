@@ -21,8 +21,11 @@ import graft.scale.Csr
   * physical partitioning; at width 1 the one-partition invariants and
   * state report hash partitioning on their keys), so the state⋈edges join
   * and both vertex-side joins need NO exchange — the only exchange per
-  * round, at every width, is the sum-by-dst message shuffle (A1), after a
-  * map-side partial sum. The three joins are shuffled-hash joins (hinted:
+  * round is the sum-by-dst message shuffle (A1), after a map-side partial
+  * sum. At width 1 the prepared round drops that shuffle too (one
+  * partition into one moves no row), so the round is one stage of one
+  * task, which holds both aggregates' hash tables at once; they still
+  * spill as before. The three joins are shuffled-hash joins (hinted:
   * flat leaves carry no size statistics), building on the state and the
   * messages, so a round sorts nothing. A round is ONE Spark job, the
   * commit: it also folds the round's linf, l1, dangling mass and rank
@@ -193,7 +196,7 @@ object PageRank {
           else
             em.join(st.hint("shuffle_hash"), "src")            // no exchange
               .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))
-        contribs.groupBy("dst")                               // THE shuffle
+        contribs.groupBy("dst")                               // THE shuffle (width > 1)
           .agg(F.sum(F.col("c")).as("msum"))
           .withColumnRenamed("dst", "vid")
       }

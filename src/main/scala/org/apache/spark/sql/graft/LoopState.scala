@@ -10,8 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, Attri
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeAndComment, CodeGenerator}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.classic.{SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.{CodegenSupport, LeafExecNode, LogicalRDD, SparkPlan, UnaryExecNode, WholeStageCodegenEvaluatorFactory, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.metric.SQLMetric
 
 /** Holds the RDD of a loop's current committed state; a [[LoopStateExec]]
@@ -87,6 +88,18 @@ object LoopState {
     * keyed invariants, and a round plans as it does at any width. */
   def ref(df: DataFrame): StateRef = StateRef.of(df).keyedBy(df.columns.take(1).toSeq)
 
+  /** `df` as a loop hands it out: a flat frame in one partition reports
+    * SinglePartition instead of its loop key, which a sort or an
+    * aggregate after the loop accepts with no exchange; any other frame as
+    * it is. */
+  def handOut(df: DataFrame): DataFrame = df.queryExecution.logical match {
+    case r: LogicalRDD if !r.isStreaming && r.outputPartitioning.numPartitions == 1 &&
+        r.outputPartitioning != SinglePartition =>
+      FlatCheckpoint.flatFrame(df.sparkSession.asInstanceOf[CSparkSession], r.output, r.rdd,
+        SinglePartition, r.outputOrdering)
+    case _ => df
+  }
+
   /** A frame over a new leaf shaped like `state`, and the slot it reads. */
   def frame(spark: org.apache.spark.sql.SparkSession, state: StateRef): (DataFrame, StateSlot) = {
     val slot = new StateSlot
@@ -130,6 +143,13 @@ object LoopPlanned {
 
 /** A loop round's physical plan, planned once and executed every round.
   *
+  * At width 1 the plan drops every shuffle from one partition into one
+  * partition: such an exchange moves no row between partitions, and with
+  * one map task and one reduce partition the rows keep their order, so
+  * the results are the same bit for bit. The round is then one stage of
+  * one task, which holds the hash tables of both former stages at once
+  * (the aggregates still spill as before). `plan` is the plan executed.
+  *
   * Spark memoizes `execute()` per plan node, and an exchange's shuffle
   * dependency is made once per node, so each round executes a fresh
   * `clone()` of the plan. A clone alone would generate every whole-stage
@@ -142,23 +162,32 @@ object LoopPlanned {
   * round plan may therefore not contain subqueries, nor broadcast anything
   * computed from its state; per-round scalars enter through UDFs that read
   * a serializable slot when the tasks are serialized. */
-final class PreparedRound(val plan: SparkPlan) {
-  require(plan.find(_.subqueries.nonEmpty).isEmpty, s"a loop round may not hold subqueries:\n$plan")
-  require(plan.collectFirst {
+final class PreparedRound(planned: SparkPlan) {
+  require(planned.find(_.subqueries.nonEmpty).isEmpty,
+    s"a loop round may not hold subqueries:\n$planned")
+  require(planned.collectFirst {
     case b: BroadcastExchangeLike if b.exists(_.isInstanceOf[LoopStateExec]) => b
-  }.isEmpty, s"a loop round may not broadcast its state:\n$plan")
+  }.isEmpty, s"a loop round may not broadcast its state:\n$planned")
 
+  val plan: SparkPlan = planned.transformUp {
+    case s: ShuffleExchangeExec
+        if s.outputPartitioning.numPartitions == 1 &&
+          s.child.outputPartitioning.numPartitions == 1 => s.child
+  }
   private val template = plan.transformUp {
     case w: WholeStageCodegenExec => ReusedCodegenExec(w.child, w.codegenStageId, new StageCode)
   }
   val output: Seq[Attribute] = plan.output
-  val partitioning: Partitioning = FlatCheckpoint.pickPartitioning(plan.outputPartitioning, output)
+  // As planned: a dropped shuffle went from one partition into one and
+  // kept its rows' order, so the planned partitioning and ordering hold.
+  val partitioning: Partitioning = FlatCheckpoint.pickPartitioning(planned.outputPartitioning, output)
+  val ordering: Seq[SortOrder] = planned.outputOrdering
 
   /** The round's rows, computed over what the state slots hold now, as a
     * flat frame (a bare LogicalRDD, no planning needed to read it). */
   def execute(): DataFrame = {
     val rdd = template.clone().execute()
-    FlatCheckpoint.flatFrame(plan.session, output, rdd, partitioning, plan.outputOrdering)
+    FlatCheckpoint.flatFrame(plan.session, output, rdd, partitioning, ordering)
   }
 }
 

@@ -4,7 +4,8 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.scalatest.BeforeAndAfterAll
 
@@ -12,13 +13,20 @@ import graft.algo._
 import graft.gen.TranscriptGen
 import graft.graph.GraphBuilder
 
-/** Counts the Spark jobs started in this session. */
+/** Counts the Spark jobs started, and the stages and tasks run, in this
+  * session. */
 final class JobCounter extends SparkListener {
-  @volatile private var n = 0L
+  @volatile private var n, stages, tasks = 0L
   override def onJobStart(e: SparkListenerJobStart): Unit = n += 1
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages += 1
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks += 1
   def jobs(sc: org.apache.spark.SparkContext): Long = {
     org.apache.spark.graft.ListenerSync.drain(sc)
     n
+  }
+  def stagesAndTasks(sc: org.apache.spark.SparkContext): (Long, Long) = {
+    org.apache.spark.graft.ListenerSync.drain(sc)
+    (stages, tasks)
   }
 }
 
@@ -91,7 +99,8 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("job budget at width 1: Katz, HITS, MIS, k-core, k-truss, HyperBall, star CC") {
     // A loop that returns a sorted frame flat-checkpoints it after the
-    // loop: one job at width 1 (a single range partition needs no sample).
+    // loop: one job at width 1 (the loop hands out one partition, which
+    // the sort takes with no exchange).
     val sortedTail = 1
     lazy val und = graph.symmetrized.where(F.col("src") =!= F.col("dst"))
     lazy val hint = math.max(graph.numVertices, graph.numEdges)
@@ -116,6 +125,38 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
         s"(shared ${mat.sharedJobs} + ${mat.commits} commits + tail $tail)")
     }
     assert(over.isEmpty, over.mkString("; "))
+  }
+
+  // A round is one job; at width 4 its message shuffle splits it into a
+  // map and a reduce stage. At width 1 the prepared round drops the shuffle
+  // from one partition into one, so the round is one stage of one task.
+  test("stages per round: one stage, one task at width 1; two stages at width 4") {
+    graph
+    for (width <- Seq(1, 4)) {
+      val cases = Seq[(String, Materializer => Int)](
+        "pagerank" -> (m =>
+          PageRank.run(graph, PageRankConfig(fixedIters = Some(5)), m).iterations),
+        "hashmin cc" -> (m => ConnectedComponents.run(graph, mat = m).rounds),
+        "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 5, mat = m).rounds))
+      cases.foreach { case (name, run) =>
+        val perRound = ArrayBuffer.empty[(Long, Long)]
+        val mat = new ForwardingMaterializer(new LocalMaterializer, Some(width)) {
+          override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
+            val (s0, t0) = counter.stagesAndTasks(spark.sparkContext)
+            val out = super.iter(iter, df, meta)
+            val (s1, t1) = counter.stagesAndTasks(spark.sparkContext)
+            if (iter > 0) perRound += ((s1 - s0, t1 - t0))
+            out
+          }
+        }
+        val rounds = run(mat)
+        assert(rounds >= 2 && perRound.size == rounds,
+          s"$name: $rounds rounds, ${perRound.size} commits")
+        val want = if (width == 1) Seq((1L, 1L)) else Seq((2L, 2L * width))
+        assert(perRound.distinct == want,
+          s"$name at width $width: (stages, tasks) per round ${perRound.mkString(", ")}")
+      }
+    }
   }
 
   private def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)

@@ -153,14 +153,15 @@ class ScaleSpec extends SparkSpec {
 
   // The real PageRank, HashMin CC and LPA rounds, as the loops plan them:
   // planned once per loop; shuffled-hash joins on the co-partitioned state,
-  // invariants and messages (no sort-merge join, so no per-round sorts);
-  // and one exchange per round, the message shuffle (LPA's explicit
-  // dst-clustered repartition). At width 1 too: one-partition invariants
-  // and state report hash partitioning on their keys, so the state, the
-  // invariants and the messages stay co-partitioned and the messages keep
-  // their map-side partial aggregation before the exchange.
+  // invariants and messages (no sort-merge join, so no per-round sorts).
+  // At width 4 a round has one exchange, the message shuffle (LPA's
+  // explicit dst-clustered repartition), after the messages' map-side
+  // partial aggregation. At width 1 it has none: one-partition invariants
+  // and state report hash partitioning on their keys, so the joins plan
+  // as at width 4, and the prepared round then drops the shuffle from one
+  // partition into one, which moves no row; the round is one stage.
   for (width <- Seq(1, 4)) test(s"real round plans at width $width: planned once, " +
-      "shuffled-hash joins, one exchange") {
+      s"shuffled-hash joins, ${if (width == 1) "no exchange" else "one exchange"}") {
     def mat = new ForwardingMaterializer(new LocalMaterializer, Some(width))
     val loops = Seq[(String, () => Any)](
       "pagerank" -> (() => PageRank.run(graph, PageRankConfig(fixedIters = Some(3)), mat)),
@@ -172,8 +173,25 @@ class ScaleSpec extends SparkSpec {
       val plan = plans.head
       assert(!plan.contains("SortMergeJoin"), s"$name round has a sort-merge join:\n$plan")
       assert("ShuffledHashJoin".r.findAllIn(plan).length >= 2, s"$name round:\n$plan")
-      val exchanges = "Exchange (hashpartitioning|SinglePartition)".r.findAllIn(plan).length
-      assert(exchanges == 1, s"$name round has $exchanges exchanges at width $width:\n$plan")
+      val exchanges = "\\bExchange ".r.findAllIn(plan).length
+      val want = if (width == 1) 0 else 1
+      assert(exchanges == want, s"$name round has $exchanges exchanges at width $width:\n$plan")
     }
+  }
+
+  // Star CC commits round 0 on u and every later round on u too (its
+  // (u, v) lookup join is put back on u), so it prepares once at any width.
+  for (width <- Seq(1, 4)) test(s"star CC plans its round once at width $width") {
+    val plans = roundPlans(ConnectedComponents.runStar(graph,
+      mat = new ForwardingMaterializer(new LocalMaterializer, Some(width))))
+    assert(plans.size == 1, s"star CC prepared ${plans.size} round plans:\n${plans.mkString("\n")}")
+  }
+
+  test("a width-1 loop hands out one partition: a sort after it plans no exchange") {
+    val r = PageRank.run(graph, PageRankConfig(fixedIters = Some(2)),
+      new ForwardingMaterializer(new LocalMaterializer, Some(1)))
+    val plan = r.ranks.orderBy("vid").queryExecution.executedPlan.toString
+    assert("\\bExchange ".r.findFirstIn(plan).isEmpty,
+      s"sorted width-1 ranks plan an exchange:\n$plan")
   }
 }
