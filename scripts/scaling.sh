@@ -10,7 +10,7 @@
 #   log        JSON-lines output, appended (default /tmp/scaling.jsonl)
 #   pairs      interleaved 8/32-core pairs per algorithm (default 4)
 #   algos      comma-separated algo[:iters] list (default scan_derive:3);
-#              algos: pagerank pagerank_packed cc triangles scan_derive;
+#              algos: pagerank cc triangles scan_derive;
 #              iters default to 3 for scan_derive and 12 otherwise
 #
 # Keep the log as scripts/scaling_<tag>_raw.jsonl when it backs a figure in

@@ -18,7 +18,7 @@ import org.apache.spark.sql.DataFrame
   * not a before/after diff of `sc.getPersistentRDDs`, which would attribute
   * unrelated side-effect caches created during the frame's computation
   * (e.g. GraphBuilder's shared edge persist on the graph's first action) to
-  * the slot and silently unpersist them at the next sweep (round-4 ADVICE).
+  * the slot and silently unpersist them at the next sweep.
   */
 private[algo] final class FlatLoop(spark: org.apache.spark.sql.SparkSession) {
   private val sc = spark.sparkContext
@@ -48,7 +48,7 @@ private[algo] final class FlatLoop(spark: org.apache.spark.sql.SparkSession) {
     gens -= s
   }
 
-  /** End-of-run reclamation (round-5 ADVICE): free EVERY tracked
+  /** End-of-run reclamation: free EVERY tracked
     * generation except the latest of the named `keep` slots. Call only
     * after the kept frames are materialized — everything else (level
     * frames, settled sets, edge invariants) is dead weight once the

@@ -7,7 +7,7 @@ import graft.graph.LinkGraph
 import graft.plans.Fold
 
 /** Truncated HITS (hubs and authorities, Kleinberg JACM '99) — SURVEY.md
-  * §2.10 (round 6). Over the distinct directed simple edge set, R rounds
+  * §2.10. Over the distinct directed simple edge set, R rounds
   * of the ORIGINAL sequential update:
   *
   *   a_t(v) = Σ_{u→v} h_{t−1}(u)       (authorities from previous hubs)
@@ -39,6 +39,9 @@ object Hits {
           mat: Materializer = new LocalMaterializer): DataFrame =
     Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val de = Neighborhood.directedEdges(graph, mat, reverse = false, fingerprint = None)
+      // keyed like the state, so a round re-shuffles no vertex
+      val vertices = mat.shared("vertices", graph.vertices.repartition(F.col("vid")),
+        repartitionKeys = Seq("vid"))
       def step(round: Fixpoint.Round): DataFrame = {
         // authorities from previous hubs: one edges⋈state join, sum by dst
         val aAgg = round.state.select(F.col("vid"), F.col("h"))
@@ -53,7 +56,7 @@ object Hits {
           .join(de.withColumnRenamed("dst", "vid")
             .withColumnRenamed("src", "osrc"), "vid")
           .groupBy(F.col("osrc").as("vid")).agg(F.sum("na").as("nh"))
-        graph.vertices
+        vertices
           .join(aAgg, Seq("vid"), "left")
           .join(hAgg, Seq("vid"), "left")
           .select(F.col("vid"),
@@ -65,8 +68,10 @@ object Hits {
       val r = fx.run(Fixpoint.Loop(
         cols = Seq("vid", "a", "h"),
         maxRounds = rounds,
-        init = () => graph.vertices.select(F.col("vid"),
-          F.lit(1.0).as("a"), F.lit(1.0).as("h")).repartition(F.col("vid")),
+        // sorted on vid like every later commit (a sort-merge join's
+        // output), so the loop plans its round once
+        init = () => vertices.select(F.col("vid"), F.lit(1.0).as("a"), F.lit(1.0).as("h"))
+          .sortWithinPartitions("vid"),
         step = step,
         stats = Seq(Fold.sum("sa", F.col("a")), Fold.sum("sh", F.col("h"))),
         startStats = true))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
 
-/** Landmark (hub) distance labels — SURVEY.md §2.10 (round 5). The
+/** Landmark (hub) distance labels — SURVEY.md §2.10. The
   * reference repo's signature domain is hub labelings for fast
   * point-to-point distance queries on large graphs; the Spark-native
   * re-expression here is the landmark sketch family (Das Sarma et al.

@@ -17,7 +17,7 @@ import graft.io.TableIO
   * (none at width 1, where a loop's prepared round drops it).
   * Previous iterations' blocks are freed as the loop advances.
   */
-// Deliberately NOT sealed (round 6): custom backends — an Iceberg-commit
+// Deliberately NOT sealed: custom backends — an Iceberg-commit
 // materializer in a real deployment, the fault-injecting wrapper the
 // kill+resume specs use — extend it outside this file.
 trait Materializer {
@@ -38,13 +38,13 @@ trait Materializer {
     * keys (FlatCheckpoint.localCheckpoint), not SinglePartition, so the
     * invariant stays co-partitioned with the loop state.
     *
-    * `fingerprint` (round-3 ADVICE): an identity string for the
-    * PARAMETERS this invariant was derived with (layout knobs like
-    * packedSegment; the run-level input token comes from the
-    * materializer's constructor). A durable backend records it in the
-    * commit manifest and RECOMPUTES instead of reading back when the
-    * committed value differs — without it, a resumed run whose layout
-    * changed under the same ckpt dir silently served the stale snapshot.
+    * `fingerprint`: an identity string for the PARAMETERS this invariant
+    * was derived with (PageRank's edge weighting, a PPR seed set; the
+    * run-level input token comes from the materializer's constructor). A
+    * durable backend records it in the commit manifest and RECOMPUTES
+    * instead of reading back when the committed value differs — without
+    * it, a resumed run whose parameters changed under the same ckpt dir
+    * would silently serve the stale snapshot.
     * Deliberately NOT a data fingerprint: read-back must keep working
     * when the input is gone (the restart-recovery contract, ResumeSpec). */
   def shared(name: String, df: DataFrame, repartitionKeys: Seq[String] = Nil,
@@ -54,8 +54,8 @@ trait Materializer {
   /** Every committed iteration ascending — for loops whose commits are
     * per-round SLICES rather than cumulative snapshots (Betweenness commits
     * one (phase, level) slice per round, so total durable write volume is
-    * O(state), not O(rounds × state) — round-6 ADVICE). Default: the latest
-    * cumulative snapshot as a single slice, which is exactly resume(). */
+    * O(state), not O(rounds × state)). Default: the latest cumulative
+    * snapshot as a single slice, which is exactly resume(). */
   def resumeSlices(): Seq[(Int, DataFrame)] = resume().toSeq
   /** Record metrics of iter's commit (the loops fold them in the commit
     * job itself, graft.plans.FoldStats) — the IterMetrics ledger
@@ -114,22 +114,22 @@ final class CheckpointMaterializer(io: TableIO, val stateTable: String,
     val flat = loop.ckpt("state", df)
     // Stamp the run identity on every state commit: resume() verifies it,
     // so mid-run state is as staleness-guarded as the shared invariants
-    // (round-4 ADVICE: a ppr --resume with a changed seed spec must not
-    // silently continue from the old seed set's iteration state).
+    // (a ppr --resume with a changed seed spec must not silently continue
+    // from the old seed set's iteration state).
     val stamped = runFingerprint.map(f => meta + ("run_fingerprint" -> (f: Any))).getOrElse(meta)
     io.commit(stateTable, iter, flat, stamped, bucket)
     // the previous round's blocks go only after the new commit
     loop.sweep("state")
     flat
   }
-  /** A committed copy is READ BACK instead of recomputed — a restarted
-    * run reuses its invariants (the round-3 review found the previous
-    * commit-but-never-read version gave no actual recovery). The parquet
-    * roundtrip drops hash partitioning, so the caller-declared keys are
-    * re-applied at the loop width before the flat checkpoint — the
-    * one-shuffle-per-round contract holds from the first resumed round.
+  /** A committed copy is READ BACK instead of recomputed — a restarted run
+    * reuses its invariants (a commit that is never read back gives no
+    * recovery). The parquet roundtrip drops hash partitioning, so the
+    * caller-declared keys are re-applied at the loop width before the flat
+    * checkpoint — the one-shuffle-per-round contract holds from the first
+    * resumed round.
     *
-    * Staleness guard (round-3 ADVICE): the effective fingerprint
+    * Staleness guard: the effective fingerprint
     * (runFingerprint + the call's parameter fingerprint) is recorded in
     * the commit manifest; a committed snapshot whose recorded fingerprint
     * DIFFERS from the current one is recomputed and committed as the next
@@ -175,9 +175,9 @@ final class CheckpointMaterializer(io: TableIO, val stateTable: String,
     * committed state carries a run fingerprint different from this run's:
     * unlike a shared invariant — which can just be recomputed — mid-run
     * iteration state from different run parameters is semantically a
-    * DIFFERENT computation, and continuing it would produce wrong results
-    * (round-4 ADVICE). A commit with no recorded fingerprint (older layout)
-    * is trusted — back-compat. */
+    * DIFFERENT computation, and continuing it would produce wrong results.
+    * A commit with no recorded fingerprint (older layout) is trusted —
+    * back-compat. */
   override def resume(): Option[(Int, DataFrame)] =
     io.latest(stateTable).map { i =>
       for (f <- runFingerprint;
@@ -238,14 +238,13 @@ object IterativeConf {
 
   /** P' = clamp(ceil(rows / 64k), 1, session P): tiny loops collapse to a
     * handful of tasks per round; at web scale rows/64k ≥ P so the session's
-    * width is kept. `rows` must be the PER-ROUND SHUFFLE VOLUME, not just
-    * the state size — callers pass max(vertices, edges), because the
-    * message stream the round shuffles is edge-scale (round-3 review: a
-    * dense graph sized by vertex count alone crushes edge-scale shuffles
-    * into too few partitions). Everything inside the loop (state
-    * repartitions, shared edge invariants, the message groupBy) uses ONE
-    * consistent width, so the one-shuffle-per-round contract is preserved
-    * — just narrower. */
+    * width is kept. `rows` must be the PER-ROUND SHUFFLE VOLUME, not just the
+    * state size — callers pass max(vertices, edges), because the message
+    * stream the round shuffles is edge-scale (a dense graph sized by vertex
+    * count alone crushes edge-scale shuffles into too few partitions).
+    * Everything inside the loop (state repartitions, shared edge invariants,
+    * the message groupBy) uses ONE consistent width, so the
+    * one-shuffle-per-round contract is preserved — just narrower. */
   def adaptivePartitions(spark: SparkSession, stateRows: Long): Int = {
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     math.max(1, math.min(p.toLong, (stateRows + RowsPerPartition - 1) / RowsPerPartition)).toInt

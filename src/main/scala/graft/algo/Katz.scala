@@ -5,7 +5,7 @@ import org.apache.spark.sql.graft.FlatCheckpoint
 
 import graft.graph.LinkGraph
 
-/** Truncated Katz centrality — SURVEY.md §2.10 (round 5; durable round 6).
+/** Truncated Katz centrality — SURVEY.md §2.10; durable.
   * katz(v) = Σ_{k=1..R} α^k · |paths of length k ending at v| over the
   * distinct directed simple edge set, computed by the recurrence
   * c_t = α · Aᵀ(1 + c_{t−1}), c_0 = 0 — each round is the engine's
@@ -15,7 +15,7 @@ import graft.graph.LinkGraph
   * DuckDB oracle reproduce it exactly with unrolled round CTEs. Like
   * betweenness's δ, the per-round sums accumulate non-integer doubles,
   * so 6dp values carry a theoretical 1-ulp boundary risk between
-  * engines (round-5 ADVICE) — held at three scale factors.
+  * engines — held at three scale factors.
   *
   * Runs on [[Fixpoint]]: each round commits the (vid, c) state.
   *
@@ -29,16 +29,20 @@ object Katz {
           mat: Materializer = new LocalMaterializer): DataFrame =
     Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val de = Neighborhood.directedEdges(graph, mat, reverse = false, fingerprint = None)
+      // keyed like the state, so a round re-shuffles no vertex
+      val vertices = mat.shared("vertices", graph.vertices.repartition(F.col("vid")),
+        repartitionKeys = Seq("vid"))
       val r = fx.run(Fixpoint.Loop(
         cols = Seq("vid", "c"),
         maxRounds = rounds,
-        init = () => graph.vertices.select(F.col("vid"), F.lit(0.0).as("c"))
-          .repartition(F.col("vid")),
+        // sorted on vid like every later commit (a sort-merge join's
+        // output), so the loop plans its round once
+        init = () => vertices.select(F.col("vid"), F.lit(0.0).as("c")).sortWithinPartitions("vid"),
         step = round => {
           val agg = round.state.join(de.withColumnRenamed("src", "vid"), "vid")
             .groupBy(F.col("dst").as("vid"))
             .agg((F.lit(alpha) * F.sum(F.col("c") + 1.0)).as("nc"))
-          graph.vertices.join(agg, Seq("vid"), "left")
+          vertices.join(agg, Seq("vid"), "left")
             .select(F.col("vid"), F.coalesce(F.col("nc"), F.lit(0.0)).as("c"))
         }))
       FlatCheckpoint.localCheckpoint(

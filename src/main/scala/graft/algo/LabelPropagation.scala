@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
-import graft.plans.{Fold, GraftPlans}
+import graft.plans.Fold
 
 /** Synchronous label propagation — SURVEY.md §2.10.
   *
@@ -26,14 +26,11 @@ final case class LpaResult(
 
 object LabelPropagation {
 
-  /** `packedAdjacency`: hub-split vertex-major arrays + CsrExpand CopyLabel
-    * expansion (see ConnectedComponents.run) — identical labels. */
+  /** Runs on the row adjacency of [[ConnectedComponents.symEdges]]. */
   def run(graph: LinkGraph, maxRounds: Int = 10,
-          mat: Materializer = new LocalMaterializer,
-          packedAdjacency: Boolean = false,
-          packedSegment: Int = graft.scale.Csr.DefaultSegment): LpaResult =
+          mat: Materializer = new LocalMaterializer): LpaResult =
     Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
-      val sym = ConnectedComponents.symEdges(graph, mat, packedAdjacency, packedSegment)
+      val sym = ConnectedComponents.symEdges(graph, mat)
 
       def step(round: Fixpoint.Round): DataFrame = {
         val state = round.state
@@ -42,11 +39,8 @@ object LabelPropagation {
         // BOTH groupBy(dst,label) and groupBy(dst), so the round pays one
         // shuffle, not two; at width 1 it pays none (the prepared round
         // drops a shuffle from one partition into one).
-        val joined = sym.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
-        val flat =
-          if (packedAdjacency) GraftPlans.expandLabels(joined)
-          else joined.select(F.col("dst"), F.col("label"))
-        val counts = flat
+        val counts = sym.join(state.withColumnRenamed("vid", "src").hint("shuffle_hash"), "src")
+          .select(F.col("dst"), F.col("label"))
           .repartition(F.col("dst"))                          // THE shuffle (width > 1)
           .groupBy("dst", "label")
           .agg(F.count(F.lit(1)).as("cnt"))

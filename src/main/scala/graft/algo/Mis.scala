@@ -5,7 +5,7 @@ import org.apache.spark.sql.graft.FlatCheckpoint
 
 import graft.plans.Fold
 
-/** Deterministic maximal independent set — SURVEY.md §2.10 (round 6).
+/** Deterministic maximal independent set — SURVEY.md §2.10.
   * Local-min rounds over the undirected simple graph (the deterministic
   * skeleton of Luby '86, with vid as the permanent priority instead of a
   * per-round coin — every round is reproducible, which is what lets the

@@ -6,7 +6,7 @@ import graft.graph.LinkGraph
 import graft.plans.{Fold, FoldResult}
 
 /** Neighborhood function + distance-based centrality — SURVEY.md §2.10
-  * (round 5). The neighborhood function N(t) = |{(u, v) : dist(u→v) ≤ t}|
+  * The neighborhood function N(t) = |{(u, v) : dist(u→v) ≤ t}|
   * is the backbone of distance distribution / effective-diameter analysis
   * on large graphs (Palmer et al. ANF, KDD 2002; Boldi-Rosa-Vigna
   * HyperANF/HyperBall, WWW 2011 — the same lineage of compact-structure
@@ -72,10 +72,10 @@ object Neighborhood {
     * an anti-join against the cumulative reach. The cumulative reach is a
     * UNION of the per-level flat frames — levels are append-only, so
     * re-materializing (and re-shuffling) the whole cumulative state each
-    * round, as the pre-round-7 shape did, only copied O(reach) rows per
-    * round for nothing (guide §2.4: remove shuffles outright; §1.2: the
-    * distributed algorithm first). Durable commits are the per-round
-    * LEVEL SLICES (o, v, d): total durable write volume is O(reach), not
+    * round would only copy O(reach) rows per round for nothing (guide
+    * §2.4: remove shuffles outright; §1.2: the distributed algorithm
+    * first). Durable commits are the per-round LEVEL SLICES (o, v, d):
+    * total durable write volume is O(reach), not
     * O(maxT·reach); resume unions all committed slices
     * ([[Materializer.resumeSlices]]) and the max-iter slice is the
     * frontier. Closes `mat`. */
@@ -165,8 +165,7 @@ object Neighborhood {
     * shuffle per round (max over the single pre-existing state row), so
     * the sketch-path centralities cost zero extra exchanges — this is
     * the 100-TB surface for harmonic/closeness/ecc, whose exact
-    * counterparts need the O(n²)-state all-origins BFS (round-5 verdict
-    * "What's missing #1").
+    * counterparts need the O(n²)-state all-origins BFS.
     *
     * `reverse = false` grows in-balls ({o : dist(o→v) ≤ t} — messages
     * flow src→dst), matching g_harmonic's in-direction; `reverse = true`
@@ -174,8 +173,8 @@ object Neighborhood {
     *
     * Saturation: a round whose global (rounded) estimate is flat can
     * still hide raw register growth, so early exit requires TWO
-    * consecutive flat rounds (round-5 ADVICE — one plateau round must
-    * not freeze N(t) while sketches are still growing).
+    * consecutive flat rounds (one plateau round must not freeze N(t)
+    * while sketches are still growing).
     *
     * Durable state per round: (vid, sk, est, hacc, sacc, ecc_t). */
   def hyperball(graph: LinkGraph, maxT: Int, lgK: Int = 12,

@@ -3,8 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
-import graft.plans.{Fold, GraftPlans}
-import graft.scale.Csr
+import graft.plans.Fold
 
 /** PageRank — SURVEY.md §2.10. Classic normalized power iteration:
   *
@@ -32,23 +31,19 @@ import graft.scale.Csr
   * total (graft.plans.FoldStats), and the dangling mass rides into the next
   * round's plan as a slot-backed column, with no driver action or
   * broadcast between commits. The round is planned and compiled once per
-  * loop ([[Fixpoint]]). Two edge layouts, identical results:
+  * loop ([[Fixpoint]]).
   *
-  *  - plain rows (default): edge-level shuffled-hash join
-  *  - `packedAdjacency`: vertex-major CSR arrays (Csr.packAdjacency) — the
-  *    join touches one row per vertex SEGMENT (hubs split at packedSegment
-  *    neighbors/row, so no task owns a whole mega-hub); expansion is the
-  *    CsrExpand custom operator. Hub splitting is the engine's one skew
-  *    mechanism.
+  * The adjacency is one row table of transition edges (src, dst, p),
+  * hash-partitioned on src and materialized once per loop as a keyed
+  * invariant; a round joins it edge by edge with the state. Hub skew has
+  * no special handling: all of a hub's out-edges are in its src partition.
   */
 final case class PageRankConfig(
     damping: Double = 0.85,
     tol: Double = 1e-6,
     maxIters: Int = 100,
     fixedIters: Option[Int] = None,
-    weighted: Boolean = true,
-    packedAdjacency: Boolean = false,
-    packedSegment: Int = graft.scale.Csr.DefaultSegment)
+    weighted: Boolean = true)
 
 final case class PageRankResult(
     ranks: DataFrame, // (vid: long, rank: double)
@@ -73,11 +68,10 @@ object PageRank {
     *
     * with tele(v) = 1/|S| for seeds, 0 otherwise — dangling mass D_t flows
     * back to the seeds, which is what keeps Σp = 1 under personalization.
-    * The message kernel (and hence both edge layouts — plain rows and
-    * packed CSR + CsrExpand) is untouched: personalization only
-    * changes the per-vertex base term. `teleport = None` keeps the global
-    * formula on its original expression tree, so uniform-PageRank results
-    * stay bit-identical to prior rounds. */
+    * The message kernel is untouched: personalization only changes the
+    * per-vertex base term. `teleport = None` keeps the global formula on
+    * its original expression tree, so uniform-PageRank results stay
+    * bit-identical to the unpersonalized kernel. */
   def run(graph: LinkGraph, cfg: PageRankConfig = PageRankConfig(),
           mat: Materializer = new LocalMaterializer,
           warmStart: Option[DataFrame] = None,
@@ -107,9 +101,9 @@ object PageRank {
       val vmeta = teleport match {
         case Some(seedsRaw) =>
           // Seeds are intersected with the graph's vertex set BEFORE |S| is
-          // counted (round-4 ADVICE): a --seeds parquet carrying vids absent
-          // from the graph would otherwise inflate |S|, making tele sum to
-          // < 1 and silently breaking the Σp = 1 invariant.
+          // counted: a --seeds parquet carrying vids absent from the graph
+          // would otherwise inflate |S|, making tele sum to < 1 and silently
+          // breaking the Σp = 1 invariant.
           val rawDistinct = seedsRaw.select("vid").distinct()
           val seeds = rawDistinct.join(graph.vertices, Seq("vid"), "left_semi")
           // One tiny action: |S| + an order-independent content signature
@@ -121,9 +115,9 @@ object PageRank {
           require(ns > 0, "personalized PageRank requires a non-empty teleport " +
             "seed set intersecting the graph's vertices")
           // The teleport vector is a function of the SEED SET, so its durable
-          // snapshot must be fingerprinted by it (round-4 ADVICE): a --resume
-          // under the same ckpt dir with a different seed spec recomputes
-          // instead of silently reusing the stale vector.
+          // snapshot must be fingerprinted by it: a --resume under the same
+          // ckpt dir with a different seed spec recomputes instead of
+          // silently reusing the stale vector.
           val seedFp = Some(s"seeds:n=${seedRow.getLong(0)};sig=${seedRow.getLong(1)}")
           mat.shared("vmeta_ppr",
             vmetaBase
@@ -137,20 +131,14 @@ object PageRank {
             repartitionKeys = Seq("vid"))
       }
 
-      // Parameter fingerprint for the durable invariants: a resumed run
-      // whose layout knobs changed under the same ckpt dir must recompute,
+      // Parameter fingerprint for the durable edge table: a resumed run
+      // whose weighting changed under the same ckpt dir must recompute,
       // not silently read the stale snapshot.
-      val layoutFp = Some(s"weighted=${cfg.weighted};segment=${cfg.packedSegment}")
+      val layoutFp = Some(s"weighted=${cfg.weighted}")
 
-      // Edge layout materialization, partitioned on the join key.
-      val em =
-        if (cfg.packedAdjacency)
-          mat.shared("em_packed",
-            Csr.packAdjacency(emRows, cfg.packedSegment).repartition(F.col("src")),
-            repartitionKeys = Seq("src"), fingerprint = layoutFp)
-        else
-          mat.shared("em", emRows.repartition(F.col("src")),
-            repartitionKeys = Seq("src"), fingerprint = layoutFp)
+      // The transition edges, materialized once, partitioned on the join key.
+      val em = mat.shared("em", emRows.repartition(F.col("src")),
+        repartitionKeys = Seq("src"), fingerprint = layoutFp)
 
       // Every commit folds its round's statistics in the same job
       // (graft.plans.FoldStats): linf gates tolerance runs, the dangling
@@ -187,16 +175,9 @@ object PageRank {
 
       def messages(state: DataFrame): DataFrame = {
         val st = state.withColumnRenamed("vid", "src")
-        val contribs =
-          if (cfg.packedAdjacency)
-            // custom whole-operator plan (graft.plans.CsrExpand): one pass
-            // over the packed arrays, no CodegenFallback zip_with, no
-            // intermediate struct array; still narrow — no exchange
-            GraftPlans.expandMessages(em.join(st.hint("shuffle_hash"), "src"))
-          else
-            em.join(st.hint("shuffle_hash"), "src")            // no exchange
-              .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))
-        contribs.groupBy("dst")                               // THE shuffle (width > 1)
+        em.join(st.hint("shuffle_hash"), "src")               // no exchange
+          .select(F.col("dst"), (F.col("p") * F.col("rank")).as("c"))
+          .groupBy("dst")                                     // THE shuffle (width > 1)
           .agg(F.sum(F.col("c")).as("msum"))
           .withColumnRenamed("dst", "vid")
       }

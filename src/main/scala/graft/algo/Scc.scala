@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
 
-/** Strongly connected components — SURVEY.md §2.10 (round 4; durable /
-  * resumable + incremental mark frontier round 5).
+/** Strongly connected components — SURVEY.md §2.10: durable, resumable,
+  * with an incremental mark frontier.
   *
   * Contract: `label(v)` = min vid in v's SCC (v→*u AND u→*v) — like the
   * HashMin CC label, order-independent and therefore EXACT-comparable
@@ -31,7 +31,7 @@ import graft.graph.LinkGraph
   *     global-min-vid root's SCC, so the outer loop terminates; in
   *     practice phase count is small (each phase peels every root class).
   *
-  * ==Durable state (round-4 verdict "What's missing #1")==
+  * ==Durable state==
   *
   * The committed state is the LABELED frame (vid, label): the remaining
   * subgraph is a pure function of it (verts = vertices ∖ labeled, edges =
@@ -48,8 +48,8 @@ import graft.graph.LinkGraph
   * monotonically SHRINKING vertex/edge set. Every frame goes through
   * FlatCheckpoint via [[FlatLoop]] (lineage truncated each round, prior
   * generations' blocks reclaimed at round end — SURVEY §4.4); the mark
-  * phase propagates only the newly-marked FRONTIER per round (round-4
-  * verdict "Next round #6"), so per-round work tracks the frontier's edge
+  * phase propagates only the newly-marked FRONTIER per round, so
+  * per-round work tracks the frontier's edge
   * neighborhood, not the accumulated mark set.
   */
 object Scc {
@@ -191,7 +191,7 @@ object Scc {
     * need to leave the color class, and crossing classes would only mark
     * vertices provably outside SCC(c).
     *
-    * Propagation is FRONTIER-INCREMENTAL (round-4 verdict "Next round #6"):
+    * Propagation is FRONTIER-INCREMENTAL:
     * each round expands only the vertices marked LAST round (one edge join
     * against the frontier + an anti-join against the accumulated mark set),
     * instead of re-distincting the whole accumulated set — per-round cost

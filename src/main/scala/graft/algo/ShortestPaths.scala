@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.graph.LinkGraph
 
-/** Weighted multi-source shortest paths — SURVEY.md §2.10 (round 5). The
+/** Weighted multi-source shortest paths — SURVEY.md §2.10. The
   * reference repo's domain is distance computation on large graphs; BFS
   * ([[Neighborhood.bfsFrom]]) covers hop-count metrics, and this is its
   * weighted counterpart: distributed Bellman-Ford relaxation (the classic
@@ -66,9 +66,9 @@ object ShortestPaths {
       // Durable commits are the per-round IMPROVEMENT SLICES (o, v, dist):
       // relaxation is monotone, so the committed state is equivalently
       // min-over-slices — total durable write volume tracks the improvement
-      // wavefront, not rounds × full state, and the per-round full-state
-      // repartition + second materialization of the old shape are gone
-      // (guide §2.4/§1.2 — the round-6 Betweenness ADVICE applied here).
+      // wavefront, not rounds × full state, with no per-round full-state
+      // repartition or second materialization (guide §2.4/§1.2; the same
+      // slice layout as Betweenness).
       val (start, state0, frontier0) = mat.resumeSlices() match {
         case Nil =>
           val init = origins.select(

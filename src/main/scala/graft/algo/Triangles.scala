@@ -16,9 +16,9 @@ import graft.graph.LinkGraph
   * Deterministic exact counts; no iteration. The three stage
   * materializations (canonical edges, oriented edges, triangle list)
   * default to eager localCheckpoint; pass a [[CheckpointMaterializer]] to
-  * route them through durable TableIO commits instead (round-2 verdict
-  * "What's missing #1" — executor loss must not kill a long run; the
-  * pipeline-side intermediates gained the same option this round).
+  * route them through durable TableIO commits instead (executor loss
+  * must not kill a long run; the pipeline-side intermediates have the
+  * same option).
   */
 final case class TriangleResult(
     total: Long,

@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.graft.FlatCheckpoint
 
-/** k-truss decomposition (Cohen '08) — SURVEY.md §2.10 (round 6). The
+/** k-truss decomposition (Cohen '08) — SURVEY.md §2.10. The
   * k-truss is the maximal subgraph in which every EDGE participates in at
   * least k−2 triangles of the subgraph — the edge-analogue of k-core and
   * the standard cohesive-community primitive. Classic peel:

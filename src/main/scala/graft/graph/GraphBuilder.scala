@@ -20,8 +20,8 @@ final case class LinkGraph(edges: DataFrame, dict: DataFrame) {
 
   /** Distinct directed pairs, ignoring kind/weight — MATERIALIZED once per
     * graph on first use: ~8 algo/query consumers (HITS, Katz, betweenness,
-    * BFS, SCC, reciprocity, hub landmarks, …) each re-ran this distinct as
-    * a full edge shuffle per pass before round 7 (guide §1.2/§2.4). The
+    * BFS, SCC, reciprocity, hub landmarks, …) would each re-run this
+    * distinct as a full edge shuffle per pass otherwise (guide §1.2/§2.4). The
     * graph instance is memoized per (session, dir) and dropped by
     * Caches.clear together with its blocks, so the lifetime matches the
     * other shared frames. */

@@ -41,7 +41,7 @@ object IvfAnn {
   private def withNorm(emb: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     // nrm > 0: zero vectors can't be centroids or candidates — cosine is
-    // NaN; the oracle's norms CTE filters identically (round-3 verdict #7).
+    // NaN; the oracle's norms CTE filters identically.
     emb.select(F.col("vec_id"), F.col("embedding").as("v"))
       .select(F.col("vec_id"), F.col("v"),
         F.sqrt(F.expr("vector_dot(v, v)")).as("nrm"))
@@ -123,7 +123,7 @@ object IvfAnn {
     * nprobe probing, exact-cosine top-k — the same computation in plain
     * SQL. Assignment/probing rank on UNROUNDED cosines in both engines
     * (identical index-ascending double accumulation, the property the
-    * round-2 LSH oracle already relies on); only the output cosine is
+    * LSH oracle already relies on); only the output cosine is
     * rounded. */
   def annIvfSql(nQueries: Int, k: Int, cells: Int,
                 nprobe: Int = DefaultNProbe, seed: Int = DefaultSeed): String =

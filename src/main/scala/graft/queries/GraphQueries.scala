@@ -56,14 +56,12 @@ object GraphQueries {
     }
 
   // g_pagerank and g_top_pagerank share one run. The iterative graph
-  // queries (PageRank, PPR, CC, LPA) use the packed hub-split CSR layout
-  // with the CsrExpand operator; CsrExpandSpec pins its parity with the
-  // row layout.
+  // queries (PageRank, PPR, CC, LPA) run on the row adjacency, as every
+  // other caller does.
   def pageRanks(spark: SparkSession, dir: String): DataFrame =
     Caches.memo(spark, dir, "pagerank") {
       PageRank.run(graph(spark, dir),
-        PageRankConfig(damping = PrDamping, fixedIters = Some(PrIters),
-          packedAdjacency = true)).ranks
+        PageRankConfig(damping = PrDamping, fixedIters = Some(PrIters))).ranks
     }
 
   // Personalized PageRank, seeded on the user entities: the "which event
@@ -74,8 +72,7 @@ object GraphQueries {
       val g = graph(spark, dir)
       val seeds = g.dict.where(F.col("key").startsWith("user:")).select("vid")
       PageRank.run(g,
-        PageRankConfig(damping = PrDamping, fixedIters = Some(PrIters),
-          packedAdjacency = true),
+        PageRankConfig(damping = PrDamping, fixedIters = Some(PrIters)),
         teleport = Some(seeds)).ranks
     }
 
@@ -124,7 +121,7 @@ object GraphQueries {
   def ccLabels(s: SparkSession, d: String): DataFrame =
     Caches.memo(s, d, "cc") {
       FlatCheckpoint.localCheckpoint(
-        ConnectedComponents.run(graph(s, d), packedAdjacency = true)
+        ConnectedComponents.run(graph(s, d))
           .labels.orderBy("vid"))
     }
 
@@ -268,8 +265,7 @@ object GraphQueries {
     }),
 
     "g_lpa" -> ((s, d) =>
-      LabelPropagation.run(graph(s, d), maxRounds = LpaRounds,
-        packedAdjacency = true).labels.orderBy("vid")),
+      LabelPropagation.run(graph(s, d), maxRounds = LpaRounds).labels.orderBy("vid")),
 
     "g_triangles" -> ((s, d) => {
       import s.implicits._
@@ -296,11 +292,9 @@ object GraphQueries {
       // Linear, deterministic pair sample: u ↔ u + j·stride for j =
       // −Offsets..Offsets (self-pair included), kept only when the offset
       // vid exists — ≤ (2·Offsets+1)·n/stride pairs, generated map-side
-      // (explode, no join). The round-5 shape cross-joined the stride
-      // sample with itself: (n/stride)² pairs, ~2·10¹⁶ at 10⁹ vertices —
-      // a demo generator that could not ride to scale (round-5 verdict
-      // "What's wrong #1"). The label join itself (HubLabels.distances)
-      // is unchanged.
+      // (explode, no join). Cross-joining the stride sample with itself
+      // would make (n/stride)² pairs, ~2·10¹⁶ at 10⁹ vertices. The label
+      // join itself is HubLabels.distances.
       val us = g.vertices.where(F.col("vid") % HubPairStride === 0)
       val pairs = us.select(F.col("vid").as("u"),
           F.explode(F.array(
@@ -363,7 +357,7 @@ object GraphQueries {
     // integer sums (degrees are ints) and the float formula is applied
     // once at the end — so Spark's and DuckDB's aggregation orders cannot
     // produce different doubles, unlike a naive corr() over floats. The
-    // Pearson products are computed in DOUBLE (round-5 ADVICE): n·sxy at
+    // Pearson products are computed in DOUBLE: n·sxy at
     // web-scale edge counts overflows 64-bit ints, which Spark (non-ANSI)
     // wraps silently while DuckDB errors; both engines now evaluate the
     // identical IEEE double expression, so the hash match is preserved.

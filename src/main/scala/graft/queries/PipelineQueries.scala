@@ -101,9 +101,9 @@ object PipelineQueries {
 
   // Rep-filtered shingles (one representative per distinct text): consumed
   // by the LSH candidate build, d_minhash_lsh and d_dedup_clusters — each
-  // re-ran the semi-join (and d_dedup_clusters read it four times inside
-  // one query: sizes, both sides of the verify join, shingledReps) before
-  // round 7. One materialization, many block reads (guide §1.2/§5).
+  // would re-run the semi-join (and d_dedup_clusters read it four times
+  // inside one query: sizes, both sides of the verify join, shingledReps)
+  // otherwise. One materialization, many block reads (guide §1.2/§5).
   private def shinglesRepsOf(s: SparkSession, d: String): DataFrame =
     memoized(s, d, "shreps") {
       val repsOnly = textGroupsOf(s, d)
@@ -111,17 +111,16 @@ object PipelineQueries {
       shinglesOf(s, d).join(repsOnly, Seq("doc_id"), "left_semi")
     }
 
-  // (doc_id, rep): EXACT-DUP GROUPS by text content — the round-4 bucket-
-  // occupancy guard (round-3 verdict "What's missing #1"). Every near-dup
-  // banding join (minhash-LSH, simhash pigeonhole) operates on ONE
-  // REPRESENTATIVE (min doc_id) per distinct text, so bucket occupancy —
-  // and hence the Σ|bucket|² candidate volume — is bounded by the
+  // (doc_id, rep): EXACT-DUP GROUPS by text content — the bucket-occupancy
+  // guard. Every near-dup banding join (minhash-LSH, simhash pigeonhole)
+  // operates on ONE REPRESENTATIVE (min doc_id) per distinct text, so bucket
+  // occupancy — and hence the Σ|bucket|² candidate volume — is bounded by the
   // DISTINCT-content count, not the corpus size: a dup-heavy corpus (10⁶
-  // copies of one boilerplate page, all with identical signatures) lands
-  // ONE row per band bucket instead of 10⁶, and member-level pairs are
-  // reconstituted afterwards by group expansion — a streamed join whose
-  // size is the OUTPUT contract, never an intermediate blow-up. Semantics
-  // are identical because identical text ⇒ identical shingles/signatures
+  // copies of one boilerplate page, all with identical signatures) lands ONE
+  // row per band bucket instead of 10⁶, and member-level pairs are
+  // reconstituted afterwards by group expansion — a streamed join whose size
+  // is the OUTPUT contract, never an intermediate blow-up. Semantics are
+  // identical because identical text ⇒ identical shingles/signatures
   // (DedupGuardSpec pins both the equivalence and the bound).
   private[graft] def textGroupsOf(s: SparkSession, d: String): DataFrame =
     memoized(s, d, "textgroups") {
@@ -173,9 +172,9 @@ object PipelineQueries {
   // index, the IVF index, and the brute-force cosine baseline — one corpus
   // scan (and in durable mode one snapshot) instead of three identical ones.
   // Zero-norm (all-zero) embeddings are FILTERED here: cosine against them
-  // is 0/0 = NaN, which would silently disorder the bounded top-k buffer
-  // (round-3 verdict #7). Every oracle's norms CTE applies the identical
-  // `nrm > 0` filter, so both engines exclude them in lock-step.
+  // is 0/0 = NaN, which would silently disorder the bounded top-k buffer.
+  // Every oracle's norms CTE applies the identical `nrm > 0` filter, so
+  // both engines exclude them in lock-step.
   private def normsOf(s: SparkSession, d: String): DataFrame =
     Caches.memo(s, d, "norms") {
       graft.functions.GraftFunctions.register(s)
@@ -394,9 +393,15 @@ object PipelineQueries {
       edges = dupEdges.select(F.col("da").as("src"), F.col("db").as("dst"),
         F.lit(1).as("kind"), F.lit(1.0).as("weight")),
       dict = endpoints)
+    // A width-1 loop hands out its labels as one partition, which gives the
+    // join no key partitioning to copy: a plain join would shuffle both
+    // sides first. Labels that fit one loop partition (one row per vertex;
+    // the loop's own size hint already counted them) are broadcast instead.
+    val labels = graft.algo.ConnectedComponents.run(dupGraph).labels
+      .withColumnRenamed("vid", "doc_id")
+    val small = dupGraph.numVertices <= graft.algo.IterativeConf.RowsPerPartition
     dd.select("doc_id")
-      .join(graft.algo.ConnectedComponents.run(dupGraph).labels
-        .withColumnRenamed("vid", "doc_id"), Seq("doc_id"), "left")
+      .join(if (small) F.broadcast(labels) else labels, Seq("doc_id"), "left")
       .select(F.col("doc_id"),
         F.coalesce(F.col("label"), F.col("doc_id")).as("cluster_id"),
         (F.coalesce(F.col("label"), F.col("doc_id")) === F.col("doc_id")).as("is_canonical"))
@@ -534,7 +539,7 @@ object PipelineQueries {
     * matches exactly in ≥ 1 chunk, so an equi-join on (chunk_idx, value)
     * generates Σ per-bucket |bucket|² candidates, then bit_count verifies.
     * Callers pass the REP-collapsed signature frame, so |bucket| is bounded
-    * by distinct-content count (the round-4 occupancy guard). Returns
+    * by distinct-content count (the occupancy guard). Returns
     * (ra, rb, hamming), ra < rb, distinct. */
   private def bandedHammingPairs(sh: DataFrame, hashCol: String, bits: Int): DataFrame = {
     val nChunks = HammingMax + 1
@@ -583,7 +588,7 @@ object PipelineQueries {
     graft.functions.GraftFunctions.register(s)
     // coalesce(…, array()): a NULL text must hash to 0 (empty word set),
     // matching the oracle's LEFT JOIN + CASE-over-NULL-sums convention —
-    // without it the native expression would return NULL (round-2 ADVICE).
+    // without it the native expression would return NULL.
     docs(s, d).select(F.col("doc_id"),
         F.expr("simhash64(array_distinct(filter(coalesce(split(text, ' '), array()), w -> w <> '')))")
           .as("simhash64"))
@@ -762,7 +767,7 @@ object PipelineQueries {
        |FROM documents d LEFT JOIN m ON m.doc_id = d.doc_id
        |ORDER BY d.doc_id""".stripMargin
 
-  // ----------------------------------------------- decontamination (round 4)
+  // ----------------------------------------------------------- decontamination
 
   val DecontamNgram = 8 // word n-gram width for benchmark overlap
   val BenchmarkMod = 25 // doc_id % BenchmarkMod == 0 ⇒ benchmark member
@@ -815,7 +820,7 @@ object PipelineQueries {
        |WHERE d.doc_id % $BenchmarkMod <> 0
        |ORDER BY d.doc_id""".stripMargin
 
-  // -------------------------------------------- repetition signals (round 4)
+  // -------------------------------------------------------- repetition signals
 
   /** Gopher-style within-document repetition signals — the quality filter
     * that catches boilerplate/spam which per-row length heuristics miss:
@@ -880,7 +885,7 @@ object PipelineQueries {
       |LEFT JOIN bigrams b ON b.doc_id = d.doc_id
       |ORDER BY d.doc_id""".stripMargin
 
-  // ------------------------------------- unigram LM quality score (round 4)
+  // ------------------------------------------------- unigram LM quality score
 
   val VocabCap = 65536 // top-V corpus words kept in the broadcast vocab
 
@@ -895,10 +900,10 @@ object PipelineQueries {
     * Scale shape: the corpus-wide word count is MATERIALIZED once (the
     * classic map-side-combining word-count agg) and both the total and the
     * Zipf-truncated top-V vocab read that memo, so exactly ONE corpus
-    * aggregation runs per pass (round-4 verdict "What's wrong #2"); the
-    * vocab (a few MB) is BROADCAST and the exploded corpus tokens probe it
-    * map-side, then one doc_id-keyed aggregation — the probe plan scans the
-    * corpus exactly once (plan-asserted, RoundFourOpsSpec). */
+    * aggregation runs per pass; the vocab (a few MB) is BROADCAST and the
+    * exploded corpus tokens probe it map-side, then one doc_id-keyed
+    * aggregation — the probe plan scans the corpus exactly once
+    * (plan-asserted, RoundFourOpsSpec). */
   def dUnigramLp(s: SparkSession, d: String): DataFrame = {
     val counts = wordCountsOf(s, d) // ONE corpus agg, shared + materialized
     val total = counts.agg(F.sum("c")).first().getLong(0).toDouble // memo scan
@@ -927,7 +932,7 @@ object PipelineQueries {
        |FROM toks t LEFT JOIN vocab v ON v.w = t.w CROSS JOIN total tt
        |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin
 
-  // ------------------------------------- deterministic sampling (round 5)
+  // --------------------------------------------------- deterministic sampling
 
   /** Keep ≈ bound/0x10000 of DISTINCT CONTENTS: hex-prefix threshold on
     * md5(text). Content-keyed (not doc_id-keyed) on purpose — identical
@@ -980,7 +985,7 @@ object PipelineQueries {
        |SELECT lang, CAST(rk AS INT) AS rk, sample_key, doc_id
        |FROM r WHERE rk <= $StratK ORDER BY lang, rk""".stripMargin
 
-  // ----------------------------------------- corpus statistics (round 5)
+  // -------------------------------------------------------- corpus statistics
 
   /** Top-[[TfidfK]] terms per doc by tf·idf, idf = ln(N/df) (no smoothing:
     * df ≥ 1 for every term that appears). The per-doc ranking is a window
@@ -1115,7 +1120,7 @@ object PipelineQueries {
     * then emails, then long digit runs replaced by typed tokens, applied
     * in that fixed order (replacement tokens contain no pattern
     * characters, so later passes cannot re-match earlier output; URLs go
-    * FIRST — round-5 ADVICE: an email-shaped substring inside a URL like
+    * FIRST — an email-shaped substring inside a URL like
     * 'https://user@host.com/x' would otherwise break the URL match —
     * and digit runs inside URLs are protected by the preceding URL
     * pass). `n_redactions` counts matches of each pattern on the
@@ -1181,7 +1186,7 @@ object PipelineQueries {
     * for the production 50–100-token window. */
   val DedupBlockW = 3
 
-  /** Block-level exact dedup (round 6) — the chunked approximation of
+  /** Block-level exact dedup — the chunked approximation of
     * suffix-array substring dedup (Lee et al. "Deduplicating Training
     * Data Makes Language Models Better", which dedups exact 50-token
     * spans): split each doc into consecutive NON-overlapping
@@ -1404,10 +1409,10 @@ object PipelineQueries {
   /** Planes value the ANN oracle SQL is generated with. Verify pins the
     * (session, dir) it is about to dump oracles for via [[OracleContext]],
     * so the VALUES literal carries exactly the planes the Spark plan
-    * derived for that corpus. An UNSET context FAILS LOUDLY (round-3
-    * ADVICE): a silent corpus-independent default here would bake planes
-    * that diverge from the Spark plan at non-fixture sizes and fail the
-    * driver's hash compare far from the cause. */
+    * derived for that corpus. An UNSET context FAILS LOUDLY: a silent
+    * corpus-independent default here would bake planes that diverge from
+    * the Spark plan at non-fixture sizes and fail the oracle hash
+    * compare far from the cause. */
   private def oracleContextFor(what: String): (SparkSession, String) =
     OracleContext.get.getOrElse(throw new IllegalStateException(
       s"OracleContext is unset: the $what oracle SQL derives corpus-size " +

@@ -23,7 +23,7 @@ import graft.graph.{GraphBuilder, LinkGraph}
   *   run <cores> <dir> <iters> <algo> -- read the prepped graph, run the
   *                                      algorithm, print one JSON line
   *
-  * algo: pagerank | pagerank_packed | cc | triangles | scan_derive
+  * algo: pagerank | cc | triangles | scan_derive
   */
 object ScalingBench {
 
@@ -66,10 +66,6 @@ object ScalingBench {
     val walls: Seq[Double] = algo match {
       case "pagerank" =>
         val r = PageRank.run(g, PageRankConfig(fixedIters = Some(iters)))
-        r.metricsLog.flatMap(_.get("wall_ms")).map(_.toString.toDouble / 1000.0)
-      case "pagerank_packed" =>
-        val r = PageRank.run(g, PageRankConfig(fixedIters = Some(iters),
-          packedAdjacency = true))
         r.metricsLog.flatMap(_.get("wall_ms")).map(_.toString.toDouble / 1000.0)
       case "cc" =>
         val r = ConnectedComponents.run(g, maxRounds = iters)

@@ -44,7 +44,7 @@ object FlatCheckpoint {
     * the call attributes every persistent RDD created DURING the frame's
     * computation (e.g. a shared cache persisted by a lazily-built input on
     * its first action) to the checkpoint, and a later sweep then unpersists
-    * the unrelated cache (round-4 ADVICE). */
+    * the unrelated cache. */
   def localCheckpointTracked(df: DataFrame, keys: Seq[String] = Nil): (DataFrame, Int) = {
     val ref = StateRef.of(df).keyedBy(keys)
     val internal: RDD[InternalRow] = ref.rdd.map(_.copy())

@@ -130,6 +130,9 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
   // A round is one job; at width 4 its message shuffle splits it into a
   // map and a reduce stage. At width 1 the prepared round drops the shuffle
   // from one partition into one, so the round is one stage of one task.
+  // Katz and HITS join a keyed vertex invariant, so at width 1 their rounds
+  // shuffle nothing either. They are checked at width 1 only: a HITS round
+  // at width 4 plans four exchanges.
   test("stages per round: one stage, one task at width 1; two stages at width 4") {
     graph
     for (width <- Seq(1, 4)) {
@@ -137,7 +140,10 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
         "pagerank" -> (m =>
           PageRank.run(graph, PageRankConfig(fixedIters = Some(5)), m).iterations),
         "hashmin cc" -> (m => ConnectedComponents.run(graph, mat = m).rounds),
-        "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 5, mat = m).rounds))
+        "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 5, mat = m).rounds)) ++
+        (if (width > 1) Nil else Seq[(String, Materializer => Int)](
+          "katz" -> { m => Katz.run(graph, 0.1, 5, m); 5 },
+          "hits" -> { m => Hits.run(graph, 5, m); 5 }))
       cases.foreach { case (name, run) =>
         val perRound = ArrayBuffer.empty[(Long, Long)]
         val mat = new ForwardingMaterializer(new LocalMaterializer, Some(width)) {

@@ -36,34 +36,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("streaming dedup: canonical = first-seen min under any batch split (all seeds)") {
-    import graft.streaming.StreamingDedup
-    seeds.foreach { seed =>
-      val rnd = new scala.util.Random(seed)
-      val docs = (0L until 24L).map(id => (id, s"h${rnd.nextInt(6)}")) // 6 hash groups
-      val batches = rnd.shuffle(docs).grouped(8).toVector // arbitrary arrival order
-      val states = scala.collection.mutable.Map.empty[String, TestGroupState[StreamingDedup.HashState]]
-      val out = batches.flatMap { batch =>
-        batch.groupBy(_._2).flatMap { case (h, rows) =>
-          StreamingDedup.emitHash(h,
-            rows.iterator.map { case (id, hh) => (id, hh) },
-            states.getOrElseUpdate(h, new TestGroupState(None)))
-        }
-      }
-      // every doc labeled exactly once
-      assert(out.map(_.doc_id).sorted == (0L until 24L).toVector)
-      // per hash: canonical is the min id of the EARLIEST batch containing it
-      docs.groupBy(_._2).foreach { case (h, members) =>
-        val firstBatch = batches.find(_.exists(_._2 == h)).get
-        val expectedCanon = firstBatch.filter(_._2 == h).map(_._1).min
-        val labels = out.filter(_.text_md5 == h)
-        assert(labels.forall(_.canonical_id == expectedCanon), s"seed $seed hash $h")
-        assert(labels.forall(l => l.is_dup == (l.doc_id != expectedCanon)))
-        assert(members.map(_._1).toSet == labels.map(_.doc_id).toSet)
-      }
-    }
-  }
-
   test("per-turn text equality under stable ordering survives ingest/repartition") {
     seeds.foreach { seed =>
       val turns = TranscriptGen.transcripts(spark, nConvs = 25, seed = seed).toDF()

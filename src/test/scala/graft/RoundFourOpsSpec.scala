@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 
 import graft.algo._
 import graft.graph.LinkGraph
+import graft.oracle.Oracles
 import graft.queries.PipelineQueries
 
 /** Round-4 operators: personalized PageRank (teleport vector), k-core
@@ -18,37 +19,18 @@ class RoundFourOpsSpec extends SparkSpec {
     LinkGraph(e, dict)
   }
 
-  /** Dense in-driver PPR oracle — same semantics as the teleport branch. */
-  def densePpr(n: Int, edges: Seq[(Long, Long)], seeds: Set[Long],
-               d: Double, iters: Int): Array[Double] = {
-    val tele = Array.tabulate(n)(v => if (seeds(v.toLong)) 1.0 / seeds.size else 0.0)
-    val wdeg = Array.fill(n)(0.0)
-    edges.foreach { case (s, _) => wdeg(s.toInt) += 1.0 }
-    var p = tele.clone()
-    for (_ <- 1 to iters) {
-      val contrib = Array.fill(n)(0.0)
-      edges.foreach { case (s, t) => contrib(t.toInt) += p(s.toInt) / wdeg(s.toInt) }
-      val dang = (0 until n).filter(wdeg(_) == 0.0).map(p).sum
-      p = Array.tabulate(n)(v => (1 - d) * tele(v) + d * (contrib(v) + dang * tele(v)))
-    }
-    p
-  }
-
   val pprEdges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (5L, 2L))
   // 4 is dangling; 5 has no in-edges and is NOT a seed; seeds = {0, 3}
   val pprSeeds = Set(0L, 3L)
 
-  test("personalized PageRank matches the dense oracle (row + packed layouts)") {
+  test("personalized PageRank matches the dense oracle") {
     val g = graphOf(6, pprEdges)
-    val want = densePpr(6, pprEdges, pprSeeds, 0.85, 10)
-    for (packedLayout <- Seq(false, true)) {
-      val r = PageRank.run(g,
-        PageRankConfig(fixedIters = Some(10), packedAdjacency = packedLayout),
-        teleport = Some(pprSeeds.toSeq.toDF("vid")))
-      val got = r.ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-      got.zip(want).zipWithIndex.foreach { case ((a, b), v) =>
-        assert(math.abs(a - b) < 1e-9, s"vid $v packed=$packedLayout: $a vs $b")
-      }
+    val want = Oracles.personalizedPageRank(6, pprEdges, pprSeeds, 0.85, 10)
+    val r = PageRank.run(g, PageRankConfig(fixedIters = Some(10)),
+      teleport = Some(pprSeeds.toSeq.toDF("vid")))
+    val got = r.ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
+    got.zip(want).zipWithIndex.foreach { case ((a, b), v) =>
+      assert(math.abs(a - b) < 1e-9, s"vid $v: $a vs $b")
     }
   }
 

@@ -7,8 +7,8 @@ import org.apache.spark.sql.{functions => F}
 import org.apache.spark.sql.graft.LoopPlanned
 import graft.algo._
 import graft.gen.TranscriptGen
-import graft.graph.GraphBuilder
-import graft.scale.Csr
+import graft.graph.{GraphBuilder, LinkGraph}
+import graft.oracle.Oracles
 
 class ScaleSpec extends SparkSpec {
   import spark.implicits._
@@ -18,53 +18,24 @@ class ScaleSpec extends SparkSpec {
     GraphBuilder.fromTranscripts(turns)
   }
 
-  lazy val plainRanks: Array[Double] =
-    PageRank.run(graph, PageRankConfig(tol = 1e-8))
-      .ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-
-  test("packed-adjacency PageRank == plain PageRank (1e-9)") {
-    val packed = PageRank.run(graph, PageRankConfig(tol = 1e-8, packedAdjacency = true))
-      .ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-    plainRanks.zip(packed).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= 1e-9, s"$a vs $b")
-    }
-  }
-
-  test("hub splitting: a mega-hub packs into ceil(deg/K) bounded segment rows; parity holds") {
-    import graft.graph.LinkGraph
-    // hub 0 → 1..200 (degree 200) grafted onto a 200-chain: forces the
-    // power-law shape packAdjacency must bound
+  test("mega-hub graph: row-layout PageRank == dense oracle (1e-9)") {
+    // hub 0 → 1..200 (degree 200) grafted onto a 200-chain whose end is
+    // dangling: the power-law shape, on the one row layout
     val hubDeg = 200
-    val K = 16
-    val edges = ((1 to hubDeg).map(i => (0L, i.toLong)) ++
-      (1 until hubDeg).map(i => (i.toLong, i.toLong + 1)))
-      .toDF("src", "dst")
+    val pairs = (1 to hubDeg).map(i => (0L, i.toLong)) ++
+      (1 until hubDeg).map(i => (i.toLong, i.toLong + 1))
+    val edges = pairs.toDF("src", "dst")
       .select(F.col("src"), F.col("dst"), F.lit(1).as("kind"), F.lit(1.0).as("weight"))
     val dict = (0 to hubDeg).map(_.toLong).toDF("vid")
       .select(F.col("vid").cast("string").as("key"), F.col("vid"))
-    val g = LinkGraph(edges, dict)
-
-    val em = g.edges.select(F.col("src"), F.col("dst"), (F.col("weight") / 1.0).as("p"))
-    val packed = Csr.packAdjacency(em, maxSegment = K)
-    val hubRows = packed.where(F.col("src") === 0L)
-      .select(F.col("dsts")).as[Seq[Long]].collect()
-    assert(hubRows.length == (hubDeg + K - 1) / K,
-      s"hub must split into ceil($hubDeg/$K) rows, got ${hubRows.length}")
-    assert(hubRows.forall(_.size <= K), "no segment may exceed the cap")
-    assert(hubRows.flatten.sorted.toSeq == (1 to hubDeg).map(_.toLong),
-      "segments must be disjoint and cover the full neighbor set")
-    // non-hub vertices stay single-row
-    assert(packed.groupBy("src").count().where(F.col("count") > 1)
-      .select("src").as[Long].collect().toSeq == Seq(0L))
-
-    // and the split layout computes the same ranks as the plain one
-    val plain = PageRank.run(g, PageRankConfig(tol = 1e-8))
+    val n = hubDeg + 1
+    val got = PageRank.run(LinkGraph(edges, dict), PageRankConfig(fixedIters = Some(30)))
       .ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-    val split = PageRank.run(g, PageRankConfig(tol = 1e-8,
-      packedAdjacency = true, packedSegment = K))
-      .ranks.orderBy("vid").as[(Long, Double)].collect().map(_._2)
-    plain.zip(split).foreach { case (a, b) =>
-      assert(math.abs(a - b) <= 1e-9, s"$a vs $b")
+    // teleport over every vertex is the global PageRank
+    val want = Oracles.personalizedPageRank(n, pairs, (0 until n).map(_.toLong).toSet, 0.85, 30)
+    assert(got.length == n)
+    got.zip(want).zipWithIndex.foreach { case ((a, b), v) =>
+      assert(math.abs(a - b) <= 1e-9, s"vid $v: $a vs $b")
     }
   }
 

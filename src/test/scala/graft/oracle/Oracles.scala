@@ -47,6 +47,25 @@ object Oracles {
     p
   }
 
+  /** Dense personalized PageRank, the semantics of graft.algo.PageRank's
+    * teleport branch: teleport and dangling mass go uniformly to `seeds`;
+    * `iters` fixed rounds. With every vertex a seed it is the global
+    * PageRank (unit edge weights). */
+  def personalizedPageRank(n: Int, edges: Seq[(Long, Long)], seeds: Set[Long],
+                           d: Double, iters: Int): Array[Double] = {
+    val tele = Array.tabulate(n)(v => if (seeds(v.toLong)) 1.0 / seeds.size else 0.0)
+    val wdeg = Array.fill(n)(0.0)
+    edges.foreach { case (s, _) => wdeg(s.toInt) += 1.0 }
+    var p = tele.clone()
+    for (_ <- 1 to iters) {
+      val contrib = Array.fill(n)(0.0)
+      edges.foreach { case (s, t) => contrib(t.toInt) += p(s.toInt) / wdeg(s.toInt) }
+      val dang = (0 until n).filter(wdeg(_) == 0.0).map(p).sum
+      p = Array.tabulate(n)(v => (1 - d) * tele(v) + d * (contrib(v) + dang * tele(v)))
+    }
+    p
+  }
+
   /** Synchronous LPA with smallest-label tie-break, identical to
     * graft.algo.LabelPropagation (symmetrized, distinct neighbors). */
   def lpa(n: Int, undirected: Seq[(Int, Int)], maxRounds: Int = 10): Array[Long] = {
