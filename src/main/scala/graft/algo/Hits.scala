@@ -29,8 +29,10 @@ import graft.plans.Fold
   *
   * Runs on [[Fixpoint]]: each round commits (vid, a, h).
   *
-  * Scale shape: state two doubles per vertex; TWO shuffles per round
-  * (one per direction — inherent to the mutual recurrence); work R·|E|.
+  * Scale shape: state two doubles per vertex; the edges are held twice,
+  * keyed on src and on dst, so a round moves no edge: TWO shuffles per
+  * round (one per direction — inherent to the mutual recurrence); work
+  * R·|E|.
   */
 object Hits {
 
@@ -39,6 +41,8 @@ object Hits {
           mat: Materializer = new LocalMaterializer): DataFrame =
     Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val de = Neighborhood.directedEdges(graph, mat, reverse = false, fingerprint = None)
+      // the same edges keyed on dst, for the hub sums: a round moves no edge
+      val deIn = mat.shared("de_in", de.repartition(F.col("dst")), repartitionKeys = Seq("dst"))
       // keyed like the state, so a round re-shuffles no vertex
       val vertices = mat.shared("vertices", graph.vertices.repartition(F.col("vid")),
         repartitionKeys = Seq("vid"))
@@ -47,18 +51,20 @@ object Hits {
         val aAgg = round.state.select(F.col("vid"), F.col("h"))
           .join(de.withColumnRenamed("src", "vid"), "vid")
           .groupBy(F.col("dst").as("vid")).agg(F.sum("h").as("na"))
-        // hubs from the NEW authorities: sum over out-neighbors. Consumes
-        // aAgg DIRECTLY — a vertex absent from aAgg has a = 0 and
-        // contributes nothing to any hub sum, so padding the zeros in
-        // before this join would only add a second vertices join per round
-        // for identical sums.
-        val hAgg = aAgg
-          .join(de.withColumnRenamed("dst", "vid")
-            .withColumnRenamed("src", "osrc"), "vid")
-          .groupBy(F.col("osrc").as("vid")).agg(F.sum("na").as("nh"))
+        // hubs from the NEW authorities: each authority meets its in-edges
+        // in place (both keyed on vid) and goes out once as itself and
+        // once per in-edge as a hub message to the edge's source; one
+        // shuffle sums both. A vertex absent from aAgg has a = 0 and sends
+        // nothing.
+        val sums = aAgg.join(deIn.select(F.col("dst").as("vid"), F.col("src")), Seq("vid"), "left")
+          .select(F.explode(F.array(
+            F.struct(F.col("vid"), F.col("na").as("a"), F.lit(null).cast("double").as("h")),
+            F.struct(F.col("src").as("vid"), F.lit(null).cast("double").as("a"),
+              F.col("na").as("h")))).as("m"))
+          .where(F.col("m.vid").isNotNull)
+          .groupBy(F.col("m.vid").as("vid")).agg(F.max("m.a").as("na"), F.sum("m.h").as("nh"))
         vertices
-          .join(aAgg, Seq("vid"), "left")
-          .join(hAgg, Seq("vid"), "left")
+          .join(sums, Seq("vid"), "left")
           .select(F.col("vid"),
             F.coalesce(F.col("na"), F.lit(0.0)).as("a"),
             F.coalesce(F.col("nh"), F.lit(0.0)).as("h"))

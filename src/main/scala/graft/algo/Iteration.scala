@@ -15,7 +15,8 @@ import graft.io.TableIO
   * that materializes state hash-partitioned by `vid` and its edge invariant
   * by `src` pays exactly ONE exchange per iteration — the message groupBy
   * (none at width 1, where a loop's prepared round drops it).
-  * Previous iterations' blocks are freed as the loop advances.
+  * The loop runner ([[Fixpoint]]), not the backend, frees the blocks of
+  * earlier iterations.
   */
 // Deliberately NOT sealed: custom backends — an Iceberg-commit
 // materializer in a real deployment, the fault-injecting wrapper the
@@ -52,9 +53,9 @@ trait Materializer {
   /** Resume point: highest committed iteration and its state, if any. */
   def resume(): Option[(Int, DataFrame)]
   /** Every committed iteration ascending — for loops whose commits are
-    * per-round SLICES rather than cumulative snapshots (Betweenness commits
-    * one (phase, level) slice per round, so total durable write volume is
-    * O(state), not O(rounds × state)). Default: the latest cumulative
+    * per-round SLICES rather than cumulative snapshots (Fixpoint's append
+    * loops: BFS, SSSP, betweenness), so total durable write volume is
+    * O(state), not O(rounds × state). Default: the latest cumulative
     * snapshot as a single slice, which is exactly resume(). */
   def resumeSlices(): Seq[(Int, DataFrame)] = resume().toSeq
   /** Record metrics of iter's commit (the loops fold them in the commit
@@ -67,18 +68,15 @@ trait Materializer {
 }
 
 /** Ephemeral: eager flat localCheckpoint (partitioning-preserving, no
-  * origin-stats chaining — see FlatCheckpoint), previous iteration's RDD
-  * blocks unpersisted as the loop advances (a one-slot [[FlatLoop]]). Not
+  * origin-stats chaining — see FlatCheckpoint). Frees nothing: the loop
+  * runner ([[Fixpoint]]) frees a state its next commit replaced. Not
   * resumable. */
 final class LocalMaterializer extends Materializer {
   private val buf = scala.collection.mutable.ArrayBuffer.empty[Map[String, Any]]
-  private lazy val loop = new FlatLoop(SparkSession.active)
 
   override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
     buf += (meta + ("iter" -> iter))
-    val out = loop.ckpt("state", df)
-    loop.sweep("state")
-    out
+    FlatCheckpoint.localCheckpoint(df)
   }
   override def shared(name: String, df: DataFrame, repartitionKeys: Seq[String],
                       fingerprint: Option[String]): DataFrame =
@@ -97,7 +95,8 @@ final class LocalMaterializer extends Materializer {
   * Some((key, P))` snapshots are written hash-BUCKETED on the loop key, so
   * a RESUMED loop's state scan reports HashPartitioning(key, P) and the
   * one-shuffle contract holds from the first resumed iteration too (without
-  * it, resume pays one recovery re-shuffle).
+  * it, resume pays one recovery re-shuffle). Frees nothing, like
+  * [[LocalMaterializer]].
   *
   * `runFingerprint` identifies the RUN'S INPUT (e.g. Main passes the
   * --input/--events/--conv token): it joins every shared() call's
@@ -106,20 +105,17 @@ final class LocalMaterializer extends Materializer {
 final class CheckpointMaterializer(io: TableIO, val stateTable: String,
                                    bucket: Option[(String, Int)] = None,
                                    runFingerprint: Option[String] = None) extends Materializer {
-  private lazy val loop = new FlatLoop(SparkSession.active)
 
   override def iter(iter: Int, df: DataFrame, meta: Map[String, Any]): DataFrame = {
     // One compute: flat checkpoint; the durable parquet write + manifest
     // then stream from the checkpointed blocks, not a recompute.
-    val flat = loop.ckpt("state", df)
+    val flat = FlatCheckpoint.localCheckpoint(df)
     // Stamp the run identity on every state commit: resume() verifies it,
     // so mid-run state is as staleness-guarded as the shared invariants
     // (a ppr --resume with a changed seed spec must not silently continue
     // from the old seed set's iteration state).
     val stamped = runFingerprint.map(f => meta + ("run_fingerprint" -> (f: Any))).getOrElse(meta)
     io.commit(stateTable, iter, flat, stamped, bucket)
-    // the previous round's blocks go only after the new commit
-    loop.sweep("state")
     flat
   }
   /** A committed copy is READ BACK instead of recomputed — a restarted run

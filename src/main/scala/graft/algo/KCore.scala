@@ -71,7 +71,7 @@ object KCore {
         step = step,
         done = (s, last) => last.exists(_.rows == s.rows),
         note = s => Map("members" -> s.rows),
-        meta = Map("k" -> k),
+        meta = _ => Map("k" -> k),
         startStats = true))
       KCoreResult(r.state, r.rounds, r.done)
     }

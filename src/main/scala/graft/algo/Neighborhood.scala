@@ -68,67 +68,39 @@ object Neighborhood {
   /** Multi-source BFS from an explicit origin set: reach rows (o, v, d)
     * with d = dist(o→v) ≤ maxT (`reverse = true` walks edges dst→src, so
     * d = dist(v→o) — distances INTO the origins). The workhorse behind
-    * [[exact]] and HubLabels: per-round cost is one frontier⋈edges join +
-    * an anti-join against the cumulative reach. The cumulative reach is a
-    * UNION of the per-level flat frames — levels are append-only, so
-    * re-materializing (and re-shuffling) the whole cumulative state each
-    * round would only copy O(reach) rows per round for nothing (guide
-    * §2.4: remove shuffles outright; §1.2: the distributed algorithm
-    * first). Durable commits are the per-round LEVEL SLICES (o, v, d):
-    * total durable write volume is O(reach), not
-    * O(maxT·reach); resume unions all committed slices
-    * ([[Materializer.resumeSlices]]) and the max-iter slice is the
-    * frontier. Closes `mat`. */
+    * [[exact]] and HubLabels, run as a [[Fixpoint]] APPEND loop: round t
+    * commits only level t, the rows first reached at distance t, and
+    * reads the reach so far as one leaf (every level, concatenated
+    * partition by partition, each hashed on (o, v)). Per round one frontier⋈edges join
+    * and an anti-join against that reach; levels are append-only, so the
+    * reach is never copied. Durable write volume is O(reach), not
+    * O(maxT·reach); resume reads every committed level back, and the
+    * latest is the frontier. The loop stops at maxT or at the first empty
+    * level. The reach comes back as one frame over the levels. Closes
+    * `mat`. */
   def bfsFrom(graph: LinkGraph, origins: DataFrame, maxT: Int,
               reverse: Boolean = false,
               mat: Materializer = new LocalMaterializer): DataFrame =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
-      val fl = new FlatLoop(graph.spark)
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val edges = directedEdges(graph, mat, reverse, Some(s"reverse=$reverse"))
-
-      val (start, parts0, frontier0) = mat.resumeSlices() match {
-        case Nil =>
-          val init = origins.select(
-            F.col("vid").as("o"), F.col("vid").as("v"), F.lit(0).as("d"))
-          val f0 = fl.ckpt("f0",
-            mat.iter(0, init.repartition(F.col("o")), Map("init" -> true)))
-          (0, Vector(f0), f0)
-        case slices =>
-          val t0 = slices.map(_._1).max
-          val parts = slices.sortBy(_._1).map { case (i, df) =>
-            fl.ckpt(s"f$i", df.select("o", "v", "d"))
-          }.toVector
-          (t0, parts, parts.last)
-      }
-      var reachParts = parts0 // level t's flat frame at index t
-      def reach: DataFrame = reachParts.reduce(_ unionByName _)
-      var frontier = frontier0
-      var t = start
-      var growing = frontier.count() > 0
-      while (t < maxT && growing) {
-        t += 1
-        // expand the frontier one hop; dedupe within the hop, then drop
-        // anything already reached at a smaller distance
-        val cand = frontier.join(edges.withColumnRenamed("src", "v"), "v")
-          .select(F.col("o"), F.col("dst").as("v")).distinct()
-        val fresh = fl.ckpt(s"f$t",
-          cand.join(reach, Seq("o", "v"), "left_anti").withColumn("d", F.lit(t)))
-        val nf = fresh.count()
-        if (nf == 0) growing = false
-        else {
-          // commit the slice; the loop keeps ITS OWN flat frame as the live
-          // level part (materializers unpersist the previous commit's copy
-          // as the loop advances — fine for a discarded return, fatal for a
-          // frame the lazy reach union still reads)
-          mat.iter(t, fresh, Map("fresh" -> nf))
-          reachParts = reachParts :+ fresh
-          frontier = fresh
-        }
-      }
-      mat.close()
-      reach
+        .withColumnRenamed("src", "v")
+      // expand the frontier one hop, drop anything already reached (the
+      // anti-join places the hop on (o, v), like the reach), then dedupe
+      def step(round: Fixpoint.Round): DataFrame =
+        round.slice.join(edges, "v")
+          .select(F.col("o"), F.col("dst").as("v"))
+          .join(round.state, Seq("o", "v"), "left_anti")
+          .distinct()
+          .withColumn("d", round.n)
+      fx.run(Fixpoint.Loop(
+        cols = Seq("o", "v", "d"),
+        maxRounds = maxT,
+        init = () => origins.select(F.col("vid").as("o"), F.col("vid").as("v"), F.lit(0).as("d"))
+          .repartition(F.col("o"), F.col("v")),
+        step = step,
+        done = (s, _) => s.rows == 0,
+        note = s => Map("fresh" -> s.rows),
+        append = Seq("o", "v"))).state
     }
 
   /** (t, pairs): cumulative count of reach rows with d ≤ t for every t in

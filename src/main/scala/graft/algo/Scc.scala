@@ -1,8 +1,10 @@
 package graft.algo
 
 import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.graft.LoopState
 
 import graft.graph.LinkGraph
+import graft.plans.Fold
 
 /** Strongly connected components — SURVEY.md §2.10: durable, resumable,
   * with an incremental mark frontier.
@@ -17,7 +19,8 @@ import graft.graph.LinkGraph
   *  0. TRIM — iterate: a vertex with no in-edge or no out-edge in the
   *     remaining subgraph cannot sit on a cycle ⇒ singleton SCC. Peels
   *     whole DAG peripheries (every user→etype source vertex) for the
-  *     cost of two semi-joins per pass, no fixpoint rounds.
+  *     cost of two semi-joins per pass; the loop's state is the remaining
+  *     edge set, so the later loops read it already restricted.
   *  1. COLOR — propagate min vid along FORWARD edges to fixpoint:
   *     color(v) = min{u : u →* v} (v included). One HashMin-shaped
   *     shuffle per round, rounds ≈ remaining diameter.
@@ -43,140 +46,143 @@ import graft.graph.LinkGraph
   * independent of peel order), so resumed and uninterrupted runs are
   * bit-identical (ResumeSpec). `phases` counts work done by THIS run.
   *
-  * Scale shape: all loops are the engine's one-shuffle-per-round
-  * message-passing kernel (join on a key + min/exists aggregation) over a
-  * monotonically SHRINKING vertex/edge set. Every frame goes through
-  * FlatCheckpoint via [[FlatLoop]] (lineage truncated each round, prior
-  * generations' blocks reclaimed at round end — SURVEY §4.4); the mark
-  * phase propagates only the newly-marked FRONTIER per round, so
-  * per-round work tracks the frontier's edge
+  * Scale shape: trim, color and mark are [[Fixpoint]] loops, run at the
+  * outer loop's width on a local materializer (their rounds are not
+  * durable; the stage commits are): each round is one prepared plan and
+  * one job, the engine's message-passing kernel (join on a key +
+  * min/exists aggregation) over a monotonically SHRINKING edge set. The
+  * trim's fixpoint (an unchanged edge count), the color's (no changed
+  * label) and the mark's (an empty frontier) are folded stats, and the
+  * remaining vertex count follows from them, so no round runs a driver
+  * action. The mark loop appends: it propagates only the newly-marked
+  * FRONTIER per round, so per-round work tracks the frontier's edge
   * neighborhood, not the accumulated mark set.
   */
 object Scc {
 
-  final case class SccResult(labels: DataFrame, phases: Int, converged: Boolean)
+  /** `rounds`: the rounds of every trim, color and mark loop this run. */
+  final case class SccResult(labels: DataFrame, phases: Int, converged: Boolean, rounds: Int)
 
   def run(graph: LinkGraph, maxPhases: Int = 20, maxRounds: Int = 200,
           mat: Materializer = new LocalMaterializer): SccResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val spark = graph.spark
       import spark.implicits._
-      val fl = new FlatLoop(spark)
+      val inner = fx.on(new LocalMaterializer)
 
       val directed = mat.shared("edges",
         graph.directed.where(F.col("src") =!= F.col("dst"))
           .repartition(F.col("src")), repartitionKeys = Seq("src"))
 
-      def restrict(e: DataFrame, vs: DataFrame): DataFrame = e
-        .join(vs.withColumnRenamed("vid", "src"), Seq("src"), "left_semi")
-        .join(vs.withColumnRenamed("vid", "dst"), Seq("dst"), "left_semi")
+      def restrict(e: DataFrame, gone: DataFrame): DataFrame = e
+        .join(gone.select(F.col("vid").as("src")), Seq("src"), "left_anti")
+        .join(gone.select(F.col("vid").as("dst")), Seq("dst"), "left_anti")
         .select("src", "dst")
+        .repartition(F.col("src"))
 
-      var commitIdx = 0
-      var (labeled, verts, edges) = mat.resume() match {
+      // The labeled set, its commit index and the remaining vertex count;
+      // a resume counts the labeled rows once.
+      var (commitIdx, labeled, remaining) = mat.resume() match {
         case Some((idx, df)) =>
-          commitIdx = idx
-          val lab = fl.ckpt("labeled", df.select("vid", "label"))
-          val vs = fl.ckpt("verts", graph.vertices.join(lab, Seq("vid"), "left_anti"))
-          (lab, vs, fl.ckpt("edges", restrict(directed, vs)))
+          val lab = df.select("vid", "label")
+          (idx, lab, graph.numVertices - lab.count())
         case None =>
-          val lab = fl.ckpt("labeled", Seq.empty[(Long, Long)].toDF("vid", "label"))
-          mat.iter(0, lab.repartition(F.col("vid")), Map("init" -> true))
-          (lab, fl.ckpt("verts", graph.vertices), fl.ckpt("edges", directed))
+          (0, mat.iter(0, Seq.empty[(Long, Long)].toDF("vid", "label").repartition(F.col("vid")),
+            Map("init" -> true)), graph.numVertices)
       }
+      // the next trim's input, the edges among the remaining vertices, and
+      // the flat frames it reads, freed once it has run
+      var edges = if (commitIdx == 0) directed else restrict(directed, labeled)
+      var held = Seq(directed)
       var phases = 0
-      var remaining = verts.count()
+      var rounds = 0
 
       /** Durable checkpoint of the labeled set (trim/mark stage boundary). */
-      def commitLabeled(stage: String): Unit = {
+      def commitLabeled(more: DataFrame, stage: String): Unit = {
         commitIdx += 1
-        labeled = mat.iter(commitIdx, labeled.repartition(F.col("vid")),
+        val old = labeled
+        labeled = mat.iter(commitIdx, labeled.unionByName(more).repartition(F.col("vid")),
           Map("stage" -> stage, "labeled_rows" -> (graph.numVertices - remaining)))
+        LoopState.release(old)
       }
 
       def finish(converged: Boolean): SccResult = {
-        val out = SccResult(labeled.withColumnRenamed("label", "scc_label"),
-          phases, converged)
-        mat.close()
-        out
+        held.foreach(LoopState.release)
+        SccResult(labeled.withColumnRenamed("label", "scc_label"), phases, converged, rounds)
       }
 
       while (remaining > 0 && phases < maxPhases) {
         phases += 1
 
-        // -- 0. TRIM to fixpoint
-        var trimming = true
-        var trimmed = false
-        while (trimming && remaining > 0) {
-          // survivors = vertices with ≥1 out-edge AND ≥1 in-edge in the
-          // remaining subgraph. One union + one max-agg shuffle — the
-          // previous shape paid two distincts plus two semi-joins per trim
-          // round for the same set (guide §2.4). Edges are restricted to
-          // verts, so every endpoint is in verts and the agg IS the core.
-          val core = fl.ckpt("verts", edges
-            .select(F.col("src").as("vid"), F.lit(1).as("o"), F.lit(0).as("i"))
-            .unionByName(edges
-              .select(F.col("dst").as("vid"), F.lit(0).as("o"), F.lit(1).as("i")))
-            .groupBy("vid").agg(F.max("o").as("ho"), F.max("i").as("hi"))
-            .where(F.col("ho") === 1 && F.col("hi") === 1)
-            .select("vid"))
-          val nCore = core.count()
-          if (nCore == remaining) {
-            // fixpoint: core is row-identical to verts — rebind before the
-            // sweep frees the older generation's blocks
-            verts = core
-            trimming = false
-          } else {
-            val singles = verts.join(core, Seq("vid"), "left_anti")
-              .select(F.col("vid"), F.col("vid").as("label"))
-            labeled = fl.ckpt("labeled", labeled.unionByName(singles))
-            verts = core
-            edges = fl.ckpt("edges", restrict(edges, core))
-            remaining = nCore
-            trimmed = true
-          }
-          fl.sweep("verts", "labeled", "edges")
+        // -- 0. TRIM to fixpoint: keep the edges whose both ends have an
+        // in-edge and an out-edge among them. One union + one max-agg
+        // shuffle finds those vertices; an unchanged edge count is the
+        // fixpoint, where every vertex of an edge has both.
+        val trim = inner.run(Fixpoint.Loop(
+          cols = Seq("src", "dst"),
+          maxRounds = Int.MaxValue,
+          init = () => edges,
+          step = { round =>
+            val e = round.state
+            val core = e.select(F.col("src").as("vid"), F.lit(1).as("o"), F.lit(0).as("i"))
+              .unionByName(e.select(F.col("dst").as("vid"), F.lit(0).as("o"), F.lit(1).as("i")))
+              .groupBy("vid").agg(F.max("o").as("ho"), F.max("i").as("hi"))
+              .where(F.col("ho") === 1 && F.col("hi") === 1)
+            e.join(core.select(F.col("vid").as("src")), Seq("src"), "left_semi")
+              .join(core.select(F.col("vid").as("dst")), Seq("dst"), "left_semi")
+              .select("src", "dst")
+              .repartition(F.col("src"))
+          },
+          done = (s, last) => s.rows == 0 || last.exists(_.rows == s.rows),
+          startStats = true))
+        held.foreach(LoopState.release)
+        edges = trim.state
+        held = Seq(edges)
+
+        // -- 1. forward min-color fixpoint over the trimmed edges' vertices:
+        // color(v) = min{u : u →* v} ∪ {v}. Its start counts the core.
+        val color = inner.run(Fixpoint.Loop(
+          cols = Seq("vid", "color"),
+          maxRounds = maxRounds,
+          init = () => edges.select(F.col("src").as("vid")).distinct()
+            .select(F.col("vid"), F.col("vid").as("color"), F.col("vid").as("prev")),
+          step = { round =>
+            val state = round.state
+            val msgs = edges.join(state.withColumnRenamed("vid", "src"), "src")
+              .groupBy(F.col("dst").as("vid")).agg(F.min("color").as("mc"))
+            state.withColumnRenamed("color", "prev")
+              .join(msgs, Seq("vid"), "left")
+              .select(F.col("vid"),
+                F.least(F.col("prev"), F.coalesce(F.col("mc"), F.col("prev"))).as("color"),
+                F.col("prev"))
+          },
+          stats = Seq(Fold.sum("changed", F.when(F.col("color") < F.col("prev"), 1L).otherwise(0L))),
+          done = (s, last) => s.rows == 0 || last.isDefined && s.long("changed") == 0L,
+          startStats = true))
+        rounds += trim.rounds + color.rounds
+        val core = color.seen.head._2.rows
+        if (core < remaining) {
+          // the trimmed vertices are singleton SCCs
+          remaining = core
+          commitLabeled(graph.vertices
+            .join(labeled.select("vid"), Seq("vid"), "left_anti")
+            .join(color.state.select("vid"), Seq("vid"), "left_anti")
+            .select(F.col("vid"), F.col("vid").as("label")), "trim")
         }
-        if (trimmed) commitLabeled("trim")
-        if (remaining == 0) return finish(converged = true)
+        held :+= color.state
 
-        // -- 1. forward min-color fixpoint: color(v) = min{u : u →* v} ∪ {v}
-        var color = fl.ckpt("color", verts.select(F.col("vid"), F.col("vid").as("color")))
-        var changed = 1L
-        var rounds = 0
-        while (changed > 0 && rounds < maxRounds) {
-          rounds += 1
-          val msgs = edges.join(color.withColumnRenamed("vid", "src"), "src")
-            .groupBy(F.col("dst").as("vid")).agg(F.min("color").as("mc"))
-          // carry prev through the checkpoint so the change count is one
-          // cheap agg over the committed blocks instead of a second
-          // state⋈state join per round (the CC/LPA discipline)
-          val next = fl.ckpt("color", color.join(msgs, Seq("vid"), "left")
-            .select(F.col("vid"),
-              F.least(F.col("color"), F.coalesce(F.col("mc"), F.col("color"))).as("color"),
-              F.col("color").as("prev")))
-          changed = next
-            .agg(F.coalesce(F.sum(F.when(F.col("color") < F.col("prev"), 1L)
-              .otherwise(0L)), F.lit(0L))).first().getLong(0)
-          color = next.select("vid", "color")
-          fl.sweep("color")
+        if (remaining > 0) {
+          // -- 2+3. backward same-color containment from the roots
+          val mark = markPhase(inner, edges, color.state, maxRounds)
+          rounds += mark.rounds
+
+          // -- 4. peel the labeled SCCs off and continue
+          val scc = mark.state.select(F.col("vid"), F.col("color").as("label"))
+          remaining -= mark.seen.map(_._2.rows).sum
+          commitLabeled(scc, "mark")
+          edges = restrict(edges, scc)
+          held :+= mark.state
         }
-
-        // -- 2+3. backward same-color containment from the roots
-        val scc = markPhase(fl, edges, color, maxRounds)
-
-        // -- 4. peel the labeled SCCs off and continue
-        labeled = fl.ckpt("labeled", labeled.unionByName(scc))
-        verts = fl.ckpt("verts", verts.join(scc, Seq("vid"), "left_anti"))
-        edges = fl.ckpt("edges", restrict(edges, verts))
-        remaining = verts.count()
-        fl.sweep("verts", "labeled", "edges", "color")
-        // the phase's mark parts are folded into labeled (materialized
-        // above) — free every generation, not just the stale ones
-        fl.drop((0 to maxRounds).map(i => s"mark$i"): _*)
-        commitLabeled("mark")
       }
       finish(converged = remaining == 0)
     }
@@ -199,36 +205,22 @@ object Scc {
     * 10⁹-vertex SCC's peel from quadratic blow-up. The anti-join keys on
     * `vid` alone: a vid has exactly one color, and both sides carry that
     * same color(vid). */
-  private def markPhase(fl: FlatLoop, edges: DataFrame, color: DataFrame,
-                        maxRounds: Int): DataFrame = {
-    // The accumulated mark set is APPEND-ONLY: keep it as a lazy union of
-    // the per-round flat frontier frames instead of re-materializing the
-    // whole cumulative set every round (guide §1.2 — the bfsFrom shape).
-    var markParts = Vector(fl.ckpt("mark0",
-      color.where(F.col("vid") === F.col("color"))
-        .select(F.col("vid"), F.col("color"))))
-    def mark: DataFrame = markParts.reduce(_ unionByName _)
-    var frontier = markParts.head
-    var growing = true
-    var rounds = 0
-    while (growing && rounds < maxRounds) {
-      rounds += 1
+  private def markPhase(fx: Fixpoint, edges: DataFrame, color: DataFrame,
+                        maxRounds: Int): Fixpoint.Outcome =
+    fx.run(Fixpoint.Loop(
+      cols = Seq("vid", "color"),
+      maxRounds = maxRounds,
+      init = () => color.where(F.col("vid") === F.col("color")).select("vid", "color"),
       // u joins SCC(c) when some frontier v has an edge u→v and color(u) = c
-      val cand = edges
-        .join(frontier.withColumnRenamed("vid", "dst"), "dst")
+      step = round => edges
+        .join(round.slice.withColumnRenamed("vid", "dst"), "dst")
         .select(F.col("src").as("vid"), F.col("color"))
         .join(color.withColumnRenamed("color", "c2"), "vid")
         .where(F.col("color") === F.col("c2"))
         .select("vid", "color")
         .distinct()
-      val fresh = fl.ckpt(s"mark$rounds", cand.join(mark, Seq("vid"), "left_anti"))
-      val nf = fresh.count()
-      if (nf == 0) growing = false
-      else {
-        markParts = markParts :+ fresh
-        frontier = fresh
-      }
-    }
-    mark.select(F.col("vid"), F.col("color").as("label"))
-  }
+        .join(round.state.select("vid"), Seq("vid"), "left_anti"),
+      done = (s, _) => s.rows == 0,
+      startStats = true,
+      append = Seq("vid")))
 }

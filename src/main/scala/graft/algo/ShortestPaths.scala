@@ -20,16 +20,18 @@ import graft.graph.LinkGraph
   * a parameter; any integer expression over (src, dst, kind, weight)
   * works.
   *
-  * Scale shape: per round ONE frontier⋈edges join + ONE (o, v) min
-  * aggregation (map-side partial combine) + a strict-improvement
-  * left join — no global sort, no driver-side state beyond the loop
-  * counters. State is O(Σ|reachable ball|) rows bucketed by origin; the
-  * frontier is only the rows whose distance IMPROVED last round, so work
-  * per round tracks the relaxation wavefront, not the accumulated state
-  * (the same discipline as the BFS loop and the SCC mark frontier).
-  * Durable per round via the standard [[Materializer]] contract; resume
-  * restarts with frontier = full committed state, which is correct because
-  * relaxation is monotone (re-relaxing settled rows is a no-op).
+  * Scale shape: a [[Fixpoint]] APPEND loop. Round t commits only its
+  * IMPROVEMENT SLICE, the (o, v, dist) rows whose distance improved, and
+  * the next round relaxes from that slice alone, so the relaxing work
+  * tracks the wavefront (the same discipline as the BFS loop and the SCC
+  * mark frontier). Per round ONE slice⋈edges join, ONE (o, v) min
+  * aggregation and a strict-improvement left join against the best
+  * distance so far, the min over every slice (one leaf hashed on (o, v),
+  * no exchange) — no global sort, no driver-side state beyond the loop
+  * counters. State is O(Σ|reachable ball|) rows.
+  * Relaxation is monotone, so durable write volume tracks the wavefront,
+  * not rounds × state; resume reads every committed slice back, and the
+  * latest is the frontier.
   */
 object ShortestPaths {
 
@@ -54,67 +56,34 @@ object ShortestPaths {
   def run(graph: LinkGraph, origins: DataFrame, maxRounds: Int,
           cost: org.apache.spark.sql.Column = KindCost,
           mat: Materializer = new LocalMaterializer): SsspResult =
-    IterativeConf(graph.spark, Some(mat.loopPartitions.getOrElse(
-      IterativeConf.adaptivePartitions(graph.spark,
-        math.max(graph.numVertices, graph.numEdges))))) {
-      val fl = new FlatLoop(graph.spark)
+    Fixpoint(graph.spark, mat, math.max(graph.numVertices, graph.numEdges)) { fx =>
       val edges = mat.shared("we",
         weightedEdges(graph, cost).repartition(F.col("src")),
         repartitionKeys = Seq("src"),
         fingerprint = Some("cost=kind:1/2"))
+        .withColumnRenamed("src", "v")
+      def best(slices: DataFrame): DataFrame =
+        slices.groupBy("o", "v").agg(F.min("dist").as("dist"))
 
-      // Durable commits are the per-round IMPROVEMENT SLICES (o, v, dist):
-      // relaxation is monotone, so the committed state is equivalently
-      // min-over-slices — total durable write volume tracks the improvement
-      // wavefront, not rounds × full state, with no per-round full-state
-      // repartition or second materialization (guide §2.4/§1.2; the same
-      // slice layout as Betweenness).
-      val (start, state0, frontier0) = mat.resumeSlices() match {
-        case Nil =>
-          val init = origins.select(
-            F.col("vid").as("o"), F.col("vid").as("v"), F.lit(0).as("dist"))
-          val s = fl.ckpt("state",
-            mat.iter(0, init.repartition(F.col("o")), Map("init" -> true)))
-          (0, s, s)
-        case slices =>
-          val t0 = slices.map(_._1).max
-          val s = fl.ckpt("state",
-            slices.map(_._2.select("o", "v", "dist")).reduce(_ unionByName _)
-              .groupBy("o", "v").agg(F.min("dist").as("dist")))
-          // monotone relaxation: the full reconstructed state is a correct
-          // (if generous) frontier — superseded rows relax to no-ops
-          (t0, s, s)
-      }
-      var state = state0
-      var frontier = frontier0
-      var t = start
-      var active = frontier.count() > 0
-      while (t < maxRounds && active) {
-        t += 1
-        // relax one wavefront: cheapest new distance per (o, v) this round
-        val cand = frontier.join(edges.withColumnRenamed("src", "v"), "v")
-          .select(F.col("o"), F.col("dst").as("v"),
-            (F.col("dist") + F.col("cost")).as("nd"))
-          .groupBy("o", "v").agg(F.min("nd").as("nd"))
-        // keep strict improvements only — the next frontier
-        val fresh = fl.ckpt("frontier",
-          cand.join(state, Seq("o", "v"), "left")
-            .where(F.col("dist").isNull || F.col("nd") < F.col("dist"))
-            .select(F.col("o"), F.col("v"), F.col("nd").as("dist")))
-        val nf = fresh.count()
-        if (nf == 0) active = false
-        else {
-          mat.iter(t, fresh, Map("fresh" -> nf)) // slice commit; return unused
-          state = fl.ckpt("state",
-            state.join(fresh.select("o", "v"), Seq("o", "v"), "left_anti")
-              .unionByName(fresh))
-          frontier = fresh
-        }
-        fl.sweep("state", "frontier")
-      }
-      // the final frontier generation is dead once the loop exits
-      fl.releaseAll("state")
-      mat.close()
-      SsspResult(state, t, converged = !active)
+      // relax one wavefront, keep strict improvements only (the join with
+      // the best distances places them on (o, v)), cheapest per (o, v):
+      // the next frontier
+      def step(round: Fixpoint.Round): DataFrame =
+        round.slice.join(edges, "v")
+          .select(F.col("o"), F.col("dst").as("v"), (F.col("dist") + F.col("cost")).as("nd"))
+          .join(best(round.state), Seq("o", "v"), "left")
+          .where(F.col("dist").isNull || F.col("nd") < F.col("dist"))
+          .groupBy("o", "v").agg(F.min("nd").as("dist"))
+
+      val r = fx.run(Fixpoint.Loop(
+        cols = Seq("o", "v", "dist"),
+        maxRounds = maxRounds,
+        init = () => origins.select(F.col("vid").as("o"), F.col("vid").as("v"), F.lit(0).as("dist"))
+          .repartition(F.col("o"), F.col("v")),
+        step = step,
+        done = (s, _) => s.rows == 0,
+        note = s => Map("fresh" -> s.rows),
+        append = Seq("o", "v")))
+      SsspResult(best(r.state), r.rounds, converged = r.done)
     }
 }

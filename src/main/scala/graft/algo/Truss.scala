@@ -93,9 +93,11 @@ object Truss {
       val r = fx.run(Fixpoint.Loop(
         cols = Seq("u", "v", "sup"),
         maxRounds = maxRounds,
+        // partitioned and sorted on (u, v) like every round's output (a
+        // sort-merge join's), so the loop plans its round once
         init = () => und.where(F.col("src") < F.col("dst"))
           .select(F.col("src").as("u"), F.col("dst").as("v"))
-          .repartition(F.col("u"))
+          .repartition(F.col("u"), F.col("v")).sortWithinPartitions("u", "v")
           .withColumn("sup", F.lit(null).cast("long")),
         step = round => supportOf(round.state.select("u", "v"))
           .where(F.col("sup") >= k - 2),

@@ -99,18 +99,10 @@ object GraphQueries {
     }
 
   // One exact-BFS run: g_nhood, g_harmonic, g_ecc, g_closeness and
-  // g_effdiam share the reach frame (FlatLoop keeps the latest slot
-  // generation alive).
+  // g_effdiam share the reach frame, one leaf over the BFS loop's level
+  // slices keyed on o, so g_ecc/g_closeness group by o with no exchange.
   def nhood(spark: SparkSession, dir: String): Neighborhood.NhoodResult =
-    Caches.memo(spark, dir, "nhood") {
-      val r = Neighborhood.exact(graph(spark, dir), NhoodT)
-      // one origin-clustered materialization of the level-slice union at
-      // memo-build time: g_ecc/g_closeness group by o and would otherwise
-      // each re-shuffle the union; this single one is amortized over the
-      // five reach consumers
-      r.copy(reach = r.reach.map(df =>
-        FlatCheckpoint.localCheckpoint(df.repartition(F.col("o")))))
-    }
+    Caches.memo(spark, dir, "nhood")(Neighborhood.exact(graph(spark, dir), NhoodT))
 
   // g_hub_labels and g_hub_distq share the two BFS runs.
   def hubLabels(spark: SparkSession, dir: String): HubLabels.HubResult =

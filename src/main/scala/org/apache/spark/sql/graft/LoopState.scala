@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{OneToOneDependency, Partition, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.SparkListenerEvent
@@ -14,6 +15,7 @@ import org.apache.spark.sql.classic.{SparkSession => CSparkSession}
 import org.apache.spark.sql.execution.{CodegenSupport, LeafExecNode, LogicalRDD, SparkPlan, UnaryExecNode, WholeStageCodegenEvaluatorFactory, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.storage.StorageLevel
 
 /** Holds the RDD of a loop's current committed state; a [[LoopStateExec]]
   * returns it when the round's plan executes. Driver-side only. */
@@ -29,6 +31,10 @@ final case class StateRef(output: Seq[Attribute], rdd: RDD[InternalRow],
   def shape: Any = (output.map(a => (a.name, a.dataType, a.nullable)),
     LoopState.byPosition(partitioning, output), ordering.map(LoopState.byPosition(_, output)))
 
+  /** The columns' names and types and the partitioning by position: what
+    * the co-partitioned slices of an append loop share. */
+  def layout: Any = (output.map(a => (a.name, a.dataType)), LoopState.byPosition(partitioning, output))
+
   /** One partition reported as hash partitioning on `keys` (see
     * FlatCheckpoint.localCheckpoint); any other partitioning as it is. */
   def keyedBy(keys: Seq[String]): StateRef = partitioning match {
@@ -37,6 +43,11 @@ final case class StateRef(output: Seq[Attribute], rdd: RDD[InternalRow],
         throw new IllegalArgumentException(s"no key column $k in ${output.map(_.name)}"))), 1))
     case _ => this
   }
+
+  /** As [[keyedBy]], for any partitioning into one partition: in one
+    * partition, every partitioning holds. */
+  def rekeyed(keys: Seq[String]): StateRef =
+    if (partitioning.numPartitions == 1) copy(partitioning = SinglePartition).keyedBy(keys) else this
 }
 
 object StateRef {
@@ -83,10 +94,11 @@ case class LoopState(output: Seq[Attribute], slot: StateSlot,
 }
 
 object LoopState {
-  /** A committed loop state, keyed by its first column (the loop key, by
-    * convention): at width 1 the state is then co-partitioned with the
-    * keyed invariants, and a round plans as it does at any width. */
-  def ref(df: DataFrame): StateRef = StateRef.of(df).keyedBy(df.columns.take(1).toSeq)
+  /** A committed loop state; in one partition, keyed by `keys` (the loop
+    * key): at width 1 the state is then co-partitioned with the keyed
+    * invariants, a round plans as it does at any width, and every commit
+    * reports the same partitioning. */
+  def ref(df: DataFrame, keys: Seq[String]): StateRef = StateRef.of(df).rekeyed(keys)
 
   /** `df` as a loop hands it out: a flat frame in one partition reports
     * SinglePartition instead of its loop key, which a sort or an
@@ -98,6 +110,24 @@ object LoopState {
       FlatCheckpoint.flatFrame(df.sparkSession.asInstanceOf[CSparkSession], r.output, r.rdd,
         SinglePartition, r.outputOrdering)
     case _ => df
+  }
+
+  /** A flat frame over `state`'s rows, as it reports them. */
+  def frameOf(spark: org.apache.spark.sql.SparkSession, state: StateRef): DataFrame =
+    FlatCheckpoint.flatFrame(spark.asInstanceOf[CSparkSession], state.output, state.rdd,
+      state.partitioning, state.ordering)
+
+  /** Frees the blocks of a flat frame's rows (of every slice, for a frame
+    * over a [[SliceUnion]]); any other frame holds no blocks of its own. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => free(r.rdd)
+    case _ =>
+  }
+
+  def free(rdd: RDD[_]): Unit = rdd match {
+    case u: SliceUnion => u.slices.foreach(free)
+    case r if r.getStorageLevel != StorageLevel.NONE => r.unpersist(blocking = false)
+    case _ =>
   }
 
   /** A frame over a new leaf shaped like `state`, and the slot it reads. */
@@ -112,6 +142,24 @@ object LoopState {
     case other => other
   }
 }
+
+/** Co-partitioned slices read as one RDD: partition i is partition i of
+  * every slice, in slice order. No row moves, so the slices' common
+  * partitioning holds for the whole. */
+final class SliceUnion(val slices: Seq[RDD[InternalRow]])
+    extends RDD[InternalRow](slices.head.sparkContext, slices.map(new OneToOneDependency(_))) {
+  require(slices.map(_.getNumPartitions).distinct.size == 1,
+    s"slices of unequal widths: ${slices.map(_.getNumPartitions)}")
+
+  override protected def getPartitions: Array[Partition] =
+    Array.tabulate(slices.head.getNumPartitions)(i => SlicePartition(i, slices.map(_.partitions(i))))
+
+  override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+    slices.iterator.zip(split.asInstanceOf[SlicePartition].parts.iterator)
+      .flatMap { case (rdd, part) => rdd.iterator(part, context) }
+}
+
+private final case class SlicePartition(index: Int, parts: Seq[Partition]) extends Partition
 
 /** Physical [[LoopState]]: the slot's RDD, as the state was committed. */
 case class LoopStateExec(output: Seq[Attribute], slot: StateSlot,

@@ -127,12 +127,61 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     assert(over.isEmpty, over.mkString("; "))
   }
 
+  test("job budget at width 1: exact nhood, hub labels, SSSP, betweenness, SCC") {
+    // Betweenness flat-checkpoints its sorted result after its two loops.
+    // SCC's trim, color and mark loops commit to a local materializer of
+    // their own (only its stage commits reach `mat`): each such loop starts
+    // with one commit, then commits once a round.
+    val sortedTail = 1L
+    lazy val sources = graph.vertices.where(F.col("vid") % 4 === 0)
+    val cases = Seq[(String, Materializer => Long)](
+      ("exact nhood", m => { Neighborhood.exact(graph, 4, m); 0L }),
+      ("hub labels", m => { HubLabels.build(graph, 5, 6, m, m); 0L }),
+      ("sssp", m => { ShortestPaths.run(graph, sources, 10, mat = m); 0L }),
+      ("betweenness", m => { Betweenness.run(graph, sources, 3, m); sortedTail }),
+      ("scc", m => {
+        val r = Scc.run(graph, mat = m)
+        val innerCommits = 3L * r.phases + r.rounds
+        innerCommits
+      }))
+    val over = cases.flatMap { case (name, run) =>
+      graph; sources
+      val mat = new Budgeted(1)
+      val j0 = jobs
+      val tail = run(mat)
+      val used = jobs - j0
+      val allowed = mat.sharedJobs + mat.commits + tail
+      assert(mat.commits > 1, s"$name ran no round")
+      if (used <= allowed) None
+      else Some(s"$name ran $used jobs, budget $allowed " +
+        s"(shared ${mat.sharedJobs} + ${mat.commits} commits + tail $tail)")
+    }
+    assert(over.isEmpty, over.mkString("; "))
+  }
+
+  // The runner frees each state a commit replaced; the materializers free
+  // nothing. A PageRank run keeps its two invariants and its final state,
+  // an exact-nhood run its edge invariant and its five level slices (the
+  // reach it hands out reads them).
+  test("a 20-round PageRank and an exact-nhood run keep only their invariants and results") {
+    graph
+    val sc = spark.sparkContext
+    def kept(run: => Any): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      run
+      (sc.getPersistentRDDs.keySet -- before).size
+    }
+    val pr = kept(PageRank.run(graph, PageRankConfig(fixedIters = Some(20)), new LocalMaterializer))
+    val nh = kept(Neighborhood.exact(graph, 4))
+    assert(pr <= 3 && nh <= 6, s"persistent RDDs left: PageRank $pr, exact nhood $nh")
+  }
+
   // A round is one job; at width 4 its message shuffle splits it into a
   // map and a reduce stage. At width 1 the prepared round drops the shuffle
   // from one partition into one, so the round is one stage of one task.
   // Katz and HITS join a keyed vertex invariant, so at width 1 their rounds
   // shuffle nothing either. They are checked at width 1 only: a HITS round
-  // at width 4 plans four exchanges.
+  // at width 4 plans two exchanges, one per direction.
   test("stages per round: one stage, one task at width 1; two stages at width 4") {
     graph
     for (width <- Seq(1, 4)) {
@@ -230,7 +279,11 @@ class LoopBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     val cases = Seq[(String, Materializer => Int)](
       "pagerank" -> (m => PageRank.run(graph, PageRankConfig(fixedIters = Some(20)), m).iterations),
       "hashmin cc" -> (m => ConnectedComponents.run(graph, maxRounds = 20, mat = m).rounds),
-      "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 20, mat = m).rounds))
+      "lpa" -> (m => LabelPropagation.run(graph, maxRounds = 20, mat = m).rounds),
+      "bfsFrom" -> { m =>
+        Neighborhood.bfsFrom(graph, graph.vertices, 20, mat = m)
+        m.log.count(_.contains("wall_ms"))
+      })
     cases.foreach { case (name, run) =>
       val runs = ArrayBuffer.empty[Long]
       val mat = new ForwardingMaterializer(new LocalMaterializer, Some(1)) {

@@ -92,24 +92,31 @@ class RoundFiveOpsSpec extends SparkSpec {
        "cache persisted during the frame's computation survives the sweep") {
     val sc = spark.sparkContext
     // a lazily-persisted side cache, NOT yet materialized — its cached RDD
-    // registers in sc.getPersistentRDDs during the loop frame's first
-    // action, the round-4 ADVICE shape (GraphBuilder's `raw` persist)
+    // registers in sc.getPersistentRDDs during the loop's init commit,
+    // the shape of GraphBuilder's `raw` persist
     val side = Seq(1L, 2L, 3L).toDF("x").persist()
-    val mat = new LocalMaterializer
     val before = sc.getPersistentRDDs.keySet
-    // iter 1's checkpoint action materializes `side` via the join, so the
-    // registry gains BOTH the checkpoint RDD and the side cache's RDD
-    val st1 = mat.iter(1, Seq((1L, 0.5)).toDF("x", "r").join(side, "x"), Map.empty)
+    // the loop runner owns the blocks: each round's commit frees the state
+    // it replaced, and nothing else
+    val r = Fixpoint(spark, new LocalMaterializer, 1L) { fx =>
+      fx.run(Fixpoint.Loop(
+        cols = Seq("x", "r"),
+        maxRounds = 3,
+        init = () => Seq((1L, 0.5)).toDF("x", "r").join(side, "x"),
+        step = round => round.state.select(F.col("x"), (F.col("r") * 2).as("r"))))
+    }
+    assert(r.rounds == 3)
     val created = sc.getPersistentRDDs.keySet.diff(before)
-    assert(created.size >= 2,
-      s"expected the checkpoint AND the side cache to register (got $created)")
-    // iter 2 reclaims iter 1's checkpoint blocks — with diff-based tracking
-    // (the old bug) it would unpersist the side cache too
-    mat.iter(2, st1.select(F.col("x"), (F.col("r") * 2).as("r")), Map.empty)
-    val survivors = sc.getPersistentRDDs.keySet.intersect(created)
-    assert(survivors.nonEmpty,
-      "the unrelated side cache was unpersisted by the materializer sweep")
+    val last = r.state.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      case other => fail(s"the final state is not a flat frame: $other")
+    }
+    // exactly the side cache and the final state stay persisted: the three
+    // states the later commits replaced are freed
+    assert(created.size == 2 && created.contains(last),
+      s"expected the side cache and the final state, got $created (final $last)")
     assert(side.count() == 3)
+    assert(r.state.as[(Long, Double)].collect().toSeq == Seq((1L, 4.0)))
     side.unpersist()
   }
 }

@@ -158,6 +158,35 @@ class ScaleSpec extends SparkSpec {
     assert(plans.size == 1, s"star CC prepared ${plans.size} round plans:\n${plans.mkString("\n")}")
   }
 
+  // k-truss commits round 0 partitioned and sorted on (u, v), as every
+  // round's support join leaves it, so it prepares once at any width.
+  for (width <- Seq(1, 4)) test(s"k-truss plans its round once at width $width") {
+    val und = graph.symmetrized.where(F.col("src") =!= F.col("dst"))
+    var commits = 0
+    val mat = new ForwardingMaterializer(new LocalMaterializer, Some(width)) {
+      override def iter(iter: Int, df: org.apache.spark.sql.DataFrame,
+                        meta: Map[String, Any]): org.apache.spark.sql.DataFrame = {
+        commits += 1
+        super.iter(iter, df, meta)
+      }
+    }
+    val plans = roundPlans(Truss.run(und, 3, 6,
+      sizeHint = math.max(graph.numVertices, graph.numEdges), mat = mat))
+    assert(commits >= 3, s"k-truss ran ${commits - 1} rounds")
+    assert(plans.size == 1, s"k-truss prepared ${plans.size} round plans:\n${plans.mkString("\n")}")
+  }
+
+  // A HITS round sums authorities over the edges keyed on src and hubs
+  // over the same edges keyed on dst: one exchange per direction, and no
+  // edge moves.
+  test("a HITS round plans at most two exchanges at width 4") {
+    val plans = roundPlans(Hits.run(graph, 3,
+      new ForwardingMaterializer(new LocalMaterializer, Some(4))))
+    assert(plans.size == 1, s"HITS prepared ${plans.size} round plans")
+    val exchanges = "\\bExchange ".r.findAllIn(plans.head).length
+    assert(exchanges <= 2, s"HITS round has $exchanges exchanges at width 4:\n${plans.head}")
+  }
+
   test("a width-1 loop hands out one partition: a sort after it plans no exchange") {
     val r = PageRank.run(graph, PageRankConfig(fixedIters = Some(2)),
       new ForwardingMaterializer(new LocalMaterializer, Some(1)))
